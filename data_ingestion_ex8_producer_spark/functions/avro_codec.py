@@ -13,9 +13,9 @@ Written from the public Avro 1.12 specification (binary encoding section):
 * ``record`` — field datums concatenated in schema order, no framing.
 
 Kept dependency-free on purpose: the container ships no avro-python /
-spark-avro, and 30 lines of spec beat a vendored library.  On a cluster with
-the spark-avro package loaded, ``streaming/ingest.py`` uses the built-in
-``to_avro`` instead (same bytes — the golden tests pin that equivalence).
+spark-avro, and 30 lines of spec beat a vendored library.  It is the only
+encoder and decoder on the ingest path (``sinks/encode.py``,
+``sources/kafka_source.py``); the golden tests pin its bytes.
 """
 
 from __future__ import annotations

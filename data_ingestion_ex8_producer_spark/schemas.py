@@ -8,8 +8,9 @@ Three artifacts, mirroring the reference's three-layer schema system
   ``src/ex8_producer/schemas/reclamacoes.avsc:5-82`` (14 fields, all string or
   nullable-string, record name ``reclamacoes`` in namespace ``ex7_producer`` —
   the namespace is a reference quirk preserved for wire parity).
-* ``BRONZE_SCHEMA`` — StructType equivalent used on read; nullable exactly on
-  the 5 Avro union fields.
+* ``BRONZE_SCHEMA`` — StructType of the bronze frame; nullable exactly on
+  the 5 Avro union fields.  ``RAW_BACEN_HEADER`` is the landing files' header
+  before sanitization, the one header the stream accepts.
 * ``silver_columns()`` — typed projection realizing the *intent* of the
   reference's dead-code type map (``settings.py:22-37``): int casts for counts,
   decimal-comma parse for ``indice``, a proper quarter date.  Additive engine
@@ -44,9 +45,25 @@ RECLAMACOES_FIELDS: list[tuple[str, bool]] = [
 
 FIELD_ORDER: list[str] = [name for name, _ in RECLAMACOES_FIELDS]
 
-# The projection whitelist: same membership set the reference checks row fields
-# against (settings.py:22-37, consulted only for membership at app.py:130).
-PROJECTION_WHITELIST: frozenset[str] = frozenset(FIELD_ORDER)
+# The raw BACEN header, in file order: what a landing file's first line holds
+# before sanitization.  FIELD_ORDER doubles as the projection whitelist the
+# reference checks row fields against (settings.py:22-37, app.py:130).
+RAW_BACEN_HEADER: tuple[str, ...] = (
+    "Ano",
+    "Trimestre",
+    "Categoria",
+    "Tipo",
+    "CNPJ IF",
+    "Instituição financeira",
+    "Índice",
+    "Quantidade de reclamações reguladas procedentes",
+    "Quantidade de reclamações reguladas - outras",
+    "Quantidade de reclamações não reguladas",
+    "Quantidade total de reclamações",
+    "Quantidade total de clientes  CCS e SCR",
+    "Quantidade de clientes  CCS",
+    "Quantidade de clientes  SCR",
+)
 
 RECLAMACOES_AVRO_SCHEMA: dict = {
     "type": "record",

@@ -2,9 +2,7 @@
 that lands raw Avro binary datums in a directory, one length-framed record
 per row.
 
-This is the sink-side twin of `sources/polling_source.py`: together they
-demonstrate the full custom-connector surface (reader, stream reader, writer,
-stream writer).  The payload contract mirrors the reference's Kafka producer
+The payload contract mirrors the reference's Kafka producer
 (`app.py:142-158`): each row is ONE opaque binary value (no key, no headers,
 no Confluent framing — SURVEY.md §1.1 "Message"); since a directory has no
 message boundaries, records are framed with a 4-byte big-endian length

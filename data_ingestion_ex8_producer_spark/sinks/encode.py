@@ -3,40 +3,23 @@ row, ``key`` absent (the reference sends keyless messages => round-robin
 partitioning; adding a key would change partition/ordering semantics —
 SURVEY.md §3 delta 2).
 
-Fast path: the built-in ``to_avro`` (JVM, codegen) when the spark-avro
-package is loaded.  Fallback (this container): Arrow-batched mapInPandas
-over the pure-Python codec — same bytes, pinned by the golden tests.
+Encoding is Arrow-batched ``mapInPandas`` over the column-wise codec in
+``functions/avro_codec`` (spark-avro's ``to_avro`` is not on this classpath);
+its bytes are pinned by the golden tests.  Rows with a NULL in a required
+field are skipped by the codec, the reference's DatumWriter error path
+applied per row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.avro_codec import encode_batches
-from ..schemas import FIELD_ORDER, RECLAMACOES_AVRO_SCHEMA_JSON
+from ..schemas import FIELD_ORDER
 
 
-def _to_avro_builtin(df: DataFrame) -> DataFrame | None:
-    try:
-        from pyspark.sql.avro.functions import to_avro
-
-        out = df.select(
-            to_avro(F.struct(*FIELD_ORDER), RECLAMACOES_AVRO_SCHEMA_JSON).alias("value")
-        )
-        # Force analysis so AVRO_NOT_LOADED surfaces here, not at sink time.
-        out.schema  # noqa: B018
-        return out
-    except Exception:  # noqa: BLE001 — spark-avro not on the classpath
-        return None
-
-
-def avro_value_frame(df: DataFrame, use_builtin: bool = True) -> DataFrame:
+def avro_value_frame(df: DataFrame) -> DataFrame:
     """Encode bronze reclamacoes rows to the reference wire format."""
-    if use_builtin:
-        builtin = _to_avro_builtin(df)
-        if builtin is not None:
-            return builtin
 
     def run(batches):
         yield from encode_batches(batches, FIELD_ORDER)

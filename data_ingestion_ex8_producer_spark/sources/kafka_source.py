@@ -8,8 +8,8 @@ stream.  Layered so the Avro decode is testable without a broker:
   (require the spark-sql-kafka package; not present in this container).
 * ``decode_value_frame`` — turns any DataFrame with a ``value: binary``
   column (from Kafka, or from the parquet fallback sink) back into bronze
-  reclamacoes rows.  Uses built-in ``from_avro`` when spark-avro is loaded,
-  else the same pure-Python codec the encoder pins with golden tests.
+  reclamacoes rows with the engine's own Avro codec (``functions/avro_codec``,
+  pinned by the golden tests; spark-avro is not on this classpath).
 """
 
 from __future__ import annotations
@@ -17,11 +17,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import EngineConfig, load_config
 from ..functions.avro_codec import decode_record
-from ..schemas import BRONZE_SCHEMA, FIELD_ORDER, RECLAMACOES_AVRO_SCHEMA_JSON
+from ..schemas import BRONZE_SCHEMA, FIELD_ORDER
 
 
 def read_kafka_stream(spark: SparkSession, config: EngineConfig | None = None) -> DataFrame:
@@ -48,26 +47,9 @@ def read_kafka_batch(spark: SparkSession, config: EngineConfig | None = None) ->
     )
 
 
-def _from_avro_builtin(df: DataFrame) -> DataFrame | None:
-    try:
-        from pyspark.sql.avro.functions import from_avro
-
-        out = df.select(
-            from_avro("value", RECLAMACOES_AVRO_SCHEMA_JSON).alias("r")
-        ).select(*[F.col(f"r.{name}").alias(name) for name in FIELD_ORDER])
-        out.schema  # force analysis so AVRO_NOT_LOADED surfaces here
-        return out
-    except Exception:  # noqa: BLE001 — spark-avro not on the classpath
-        return None
-
-
-def decode_value_frame(df: DataFrame, use_builtin: bool = True) -> DataFrame:
+def decode_value_frame(df: DataFrame) -> DataFrame:
     """value: binary -> bronze reclamacoes rows (inverse of
     sinks.encode.avro_value_frame)."""
-    if use_builtin:
-        builtin = _from_avro_builtin(df)
-        if builtin is not None:
-            return builtin
 
     def decode_batches(batches: Iterator) -> Iterator:
         import pandas as pd

@@ -1,7 +1,6 @@
 """The `avro_datum_dir` Python DataSource writer: batch two-phase commit with
 _SUCCESS manifest, streaming epoch directories, and payload round-trip through
-the engine's own Avro codec — the sink-side half of the custom-connector
-surface (source half: `tests/test_polling_source.py`).
+the engine's own Avro codec.
 """
 
 from __future__ import annotations

@@ -1,20 +1,16 @@
 """Round-3 guardrails: loud failure instead of silent corruption / worker
-crashes, and constant-size streaming offsets.
+crashes.
 
 * simhash lane overflow (>65,535 distinct tokens in one document) raises
   instead of silently corrupting the fingerprint (ADVICE r2);
 * LSH bucket assignment degrades NULL / wrong-length embeddings to
   zero candidates instead of failing the whole job in the Python worker
-  (ADVICE r2);
-* the polling source's default-mode offset is a constant-size high-water
-  mark no matter how many files the landing directory accumulates
-  (VERDICT r2 defect 3).
+  (ADVICE r2).
 """
 
 from __future__ import annotations
 
 import json
-import os
 from pathlib import Path
 
 import pytest
@@ -26,7 +22,6 @@ from data_ingestion_ex8_producer_spark.operators.dedup import (
     hash48,
 )
 from data_ingestion_ex8_producer_spark.operators.similarity import _bucket_udf
-from data_ingestion_ex8_producer_spark.sources.polling_source import _StreamReader
 
 
 def _simhash_sig(spark, text: str):
@@ -81,146 +76,6 @@ def test_lsh_buckets_null_and_ragged_embeddings(spark) -> None:
     counts = {r["vec_id"]: r["count"] for r in got}
     assert set(counts) == {0}, "invalid embeddings must yield no buckets"
     assert counts[0] == 4  # one bucket per LSH table
-
-
-def _touch(path: Path, mtime_s: int) -> None:
-    path.write_text("h1;h2\na;b\n")
-    os.utime(path, (mtime_s, mtime_s))
-
-
-def test_polling_offset_is_constant_size(tmp_path: Path) -> None:
-    """120 landed files: the offset stays a single (mtime, path) watermark,
-    not a list that grows with directory lifetime."""
-    d = tmp_path / "bucket"
-    d.mkdir()
-    for i in range(120):
-        _touch(d / f"f{i:04d}.csv", 1_000_000)
-    r = _StreamReader(str(d), replay=False)
-    o0 = r.initialOffset()
-    o1 = r.latestOffset()
-    assert len(json.dumps(o1)) < 200, "offset must be O(1), not the file list"
-    batch1 = [p.file_path for p in r.partitions(o0, o1) if p.file_path]
-    assert len(batch1) == 120
-
-    # Second wave: only the new files fall in (o1, o2].
-    for i in range(5):
-        _touch(d / f"g{i}.csv", 1_000_001)
-    o2 = r.latestOffset()
-    assert len(json.dumps(o2)) < 200
-    batch2 = sorted(p.file_path for p in r.partitions(o1, o2) if p.file_path)
-    assert batch2 == sorted(str(d / f"g{i}.csv") for i in range(5))
-
-    # Nothing new: the interval is empty (the reader emits its one empty
-    # sentinel partition).
-    o3 = r.latestOffset()
-    assert o3 == o2
-    assert [p.file_path for p in r.partitions(o2, o3) if p.file_path] == []
-
-
-def test_polling_offset_latency_holds_back_watermark(tmp_path: Path) -> None:
-    """latency_ms keeps files newer than (now - latency) out of the batch so
-    in-flight writes land later instead of being skipped forever."""
-    d = tmp_path / "bucket"
-    d.mkdir()
-    _touch(d / "old.csv", 1_000_000)  # far in the past: always eligible
-    fresh = d / "fresh.csv"
-    fresh.write_text("h1;h2\na;b\n")  # mtime = now
-    r = _StreamReader(str(d), replay=False, latency_ms=3_600_000)
-    o1 = r.latestOffset()
-    batch = [p.file_path for p in r.partitions(r.initialOffset(), o1) if p.file_path]
-    assert batch == [str(d / "old.csv")]
-
-
-def test_polling_legacy_seen_offset_migration(tmp_path: Path) -> None:
-    """A start offset in the r2 format ({"seen": [...]}) must not crash the
-    upgraded source: the boundary batch is every listed file EXCEPT the ones
-    the legacy offset already ingested."""
-    d = tmp_path / "bucket"
-    d.mkdir()
-    for i in range(4):
-        _touch(d / f"f{i}.csv", 1_000_000)
-    r = _StreamReader(str(d), replay=False, latency_ms=0)
-    end = r.latestOffset()
-    legacy_start = {"seen": json.dumps([str(d / "f0.csv"), str(d / "f2.csv")])}
-    batch = sorted(p.file_path for p in r.partitions(legacy_start, end) if p.file_path)
-    assert batch == [str(d / "f1.csv"), str(d / "f3.csv")]
-
-
-def test_polling_future_mtime_does_not_poison_watermark(tmp_path: Path) -> None:
-    """A file with a far-future mtime must not drag the watermark forward
-    (which would silently shadow every normally-timestamped later arrival);
-    it simply stays invisible until the clock reaches it."""
-    import time as _time
-
-    d = tmp_path / "bucket"
-    d.mkdir()
-    _touch(d / "old.csv", 1_000_000)
-    now_s = int(_time.time())
-    _touch(d / "future.csv", now_s + 365 * 24 * 3600)
-    r = _StreamReader(str(d), replay=False, latency_ms=0)
-    o1 = r.latestOffset()
-    batch1 = [p.file_path for p in r.partitions(r.initialOffset(), o1) if p.file_path]
-    assert batch1 == [str(d / "old.csv")]
-
-    # A normally-timestamped late arrival must still be picked up.
-    _touch(d / "late.csv", now_s - 10)
-    o2 = r.latestOffset()
-    batch2 = [p.file_path for p in r.partitions(o1, o2) if p.file_path]
-    assert batch2 == [str(d / "late.csv")]
-
-
-def test_polling_fully_legacy_offset_pair(tmp_path: Path) -> None:
-    """BOTH offsets in the r2 format — the upgrade restart found an
-    uncommitted r2 batch already planned in the offset WAL.  The batch must
-    replay with r2 semantics (end's seen-list minus start's), not crash on
-    end["t"]."""
-    d = tmp_path / "bucket"
-    d.mkdir()
-    for i in range(4):
-        _touch(d / f"f{i}.csv", 1_000_000)
-    r = _StreamReader(str(d), replay=False, latency_ms=0)
-    legacy_start = {"seen": json.dumps([str(d / "f0.csv")])}
-    legacy_end = {
-        "seen": json.dumps([str(d / "f0.csv"), str(d / "f1.csv"), str(d / "f3.csv")])
-    }
-    batch = sorted(
-        p.file_path for p in r.partitions(legacy_start, legacy_end) if p.file_path
-    )
-    assert batch == [str(d / "f1.csv"), str(d / "f3.csv")]
-
-    # Degenerate shape: watermark-format initialOffset + legacy end (the
-    # legacy stream had planned but never committed its FIRST batch).
-    batch0 = sorted(
-        p.file_path
-        for p in r.partitions({"t": -1, "p": ""}, legacy_end)
-        if p.file_path
-    )
-    assert batch0 == [str(d / "f0.csv"), str(d / "f1.csv"), str(d / "f3.csv")]
-
-
-def test_polling_preserved_mtime_arrival_warns(tmp_path: Path) -> None:
-    """A file that FIRST appears with an mtime at-or-below the committed
-    watermark (cp -p / rsync -a style) is skipped by watermark semantics —
-    the reader must at least warn so the loss mode is visible."""
-    import warnings as _warnings
-
-    d = tmp_path / "bucket"
-    d.mkdir()
-    _touch(d / "a.csv", 1_000_000)
-    r = _StreamReader(str(d), replay=False, latency_ms=0)
-    o1 = r.latestOffset()
-    assert [p.file_path for p in r.partitions(r.initialOffset(), o1) if p.file_path]
-
-    # Lands AFTER the watermark passed 1_000_000, but with an older mtime.
-    _touch(d / "preserved.csv", 999_000)
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        o2 = r.latestOffset()
-    assert any("preserved" in str(w.message) for w in caught), (
-        "preserved-mtime arrival must emit a warning"
-    )
-    # And (documented loss mode) the file is indeed not in the next batch.
-    assert [p.file_path for p in r.partitions(o1, o2) if p.file_path] == []
 
 
 def test_coverage_doc_counts_match_registry() -> None:

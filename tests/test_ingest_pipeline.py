@@ -10,7 +10,7 @@ from pathlib import Path
 import pytest
 
 from data_ingestion_ex8_producer_spark.functions.avro_codec import decode_record
-from data_ingestion_ex8_producer_spark.schemas import FIELD_ORDER
+from data_ingestion_ex8_producer_spark.schemas import FIELD_ORDER, RAW_BACEN_HEADER
 from data_ingestion_ex8_producer_spark.sinks.encode import avro_value_frame
 from data_ingestion_ex8_producer_spark.sources.csv_source import read_reclamacoes_batch
 from data_ingestion_ex8_producer_spark.streaming.ingest import replay_all_batch
@@ -93,6 +93,53 @@ def test_duplicate_header_last_wins(spark, tmp_path: Path) -> None:
     assert row["ano"] == "2024"
     assert row["indice"] == "1,0"
     assert row["categoria"] is None  # missing column materializes as NULL
+
+
+def _write(path: Path, header: list[str], rows: list[list[str]]) -> None:
+    lines = [";".join(header), *(";".join(r) for r in rows)]
+    path.write_bytes(("\n".join(lines) + "\n").encode("iso-8859-1"))
+
+
+def test_mixed_headers_match_canonical(spark, tmp_path: Path) -> None:
+    """Each file is mapped through its own header: a reordered file and a
+    file with a duplicated plus an unknown column give the same bronze rows
+    as the same data landed with the canonical header."""
+    header = list(RAW_BACEN_HEADER)
+    rows = [r.split(";")[:14] for r in ROWS]
+    canonical, mixed = tmp_path / "canonical", tmp_path / "mixed"
+    canonical.mkdir()
+    mixed.mkdir()
+    for i, row in enumerate(rows):
+        _write(canonical / f"f{i}.csv", header, [row])
+
+    _write(mixed / "f0.csv", header, [rows[0]])
+    order = [1, 0, *range(2, 14)]  # Trimestre;Ano;...
+    _write(mixed / "f1.csv", [header[i] for i in order], [[rows[1][i] for i in order]])
+    # "ANO" first is shadowed by the later "Ano" (last wins); the unknown
+    # trailing column is dropped.
+    _write(
+        mixed / "f2.csv",
+        ["ANO", *header, "Coluna desconhecida"],
+        [["1999", *rows[2], "lixo"]],
+    )
+
+    def bronze(path: Path) -> list[tuple]:
+        return sorted(tuple(r) for r in read_reclamacoes_batch(spark, str(path)).collect())
+
+    got = bronze(mixed)
+    assert got == bronze(canonical)
+    assert {r[0] for r in got} == {"2024", "2023"}  # ano, never a trimestre
+
+
+def test_batch_reads_only_csv(spark, tmp_path: Path) -> None:
+    """Only ``*.csv`` files are ingested (app.py:94-99): a CSV-shaped
+    ``notes.txt`` beside the landing file adds no rows."""
+    d = tmp_path / "landing"
+    d.mkdir()
+    _write(d / "reclamacoes.csv", list(RAW_BACEN_HEADER), [ROWS[0].split(";")[:14]])
+    _write(d / "notes.txt", list(RAW_BACEN_HEADER), [ROWS[1].split(";")[:14]])
+    got = [r["instituicao_financeira"] for r in read_reclamacoes_batch(spark, str(d)).collect()]
+    assert got == ["BANCO ALFA"]
 
 
 def test_empty_landing_dir(spark, tmp_path: Path) -> None:

@@ -14,7 +14,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from data_ingestion_ex8_producer_spark.functions.names import sanitize_name
+from data_ingestion_ex8_producer_spark.functions.names import sanitize_columns, sanitize_name
+from data_ingestion_ex8_producer_spark.schemas import FIELD_ORDER, RAW_BACEN_HEADER
 
 # Raw BACEN header -> expected sanitized name (FIXTURES.md §1 table).
 EXAMPLES = {
@@ -39,6 +40,10 @@ EXAMPLES = {
 @pytest.mark.parametrize(("raw", "expected"), sorted(EXAMPLES.items()))
 def test_known_headers(raw: str, expected: str) -> None:
     assert sanitize_name(raw) == expected
+
+
+def test_canonical_header_sanitizes_to_field_order() -> None:
+    assert sanitize_columns(list(RAW_BACEN_HEADER)) == FIELD_ORDER
 
 
 printable_text = st.text(

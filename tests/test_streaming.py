@@ -10,6 +10,7 @@ import time
 from pathlib import Path
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from data_ingestion_ex8_producer_spark.functions.avro_codec import decode_record
 from data_ingestion_ex8_producer_spark.operators.events import q_tumbling_window
@@ -99,6 +100,38 @@ def test_ingest_stream_parquet_sink(spark, tmp_path: Path) -> None:
 
 
 @pytest.mark.slow
+def test_ingest_stream_rejects_reordered_header(spark, tmp_path: Path) -> None:
+    """The stream accepts only the canonical raw header: a file whose
+    columns are reordered fails the query with Spark's header-conformance
+    error instead of committing rows with ``ano``/``trimestre`` swapped."""
+    src = tmp_path / "landing_reordered"
+    src.mkdir()
+    names = CSV_HEADER.split(";")
+    names[0], names[1] = names[1], names[0]  # Trimestre;Ano;...
+    (src / "a.csv").write_bytes(
+        (";".join(names) + "\n1º;2024;Cat;Tipo;123;BANCO A;1,0;1;1;1;3;10;5;5\n")
+        .encode("iso-8859-1")
+    )
+    out = tmp_path / "reordered_out"
+    query = build_ingest_stream(
+        spark,
+        str(src),
+        str(tmp_path / "reordered_ckpt"),
+        sink="parquet",
+        output_path=str(out),
+        trigger_seconds=1,
+    )
+    try:
+        with pytest.raises(StreamingQueryException) as failure:
+            query.awaitTermination(90)
+    finally:
+        query.stop()
+    # The JVM cause chain carries the CSV reader's own message.
+    assert "CSV header does not conform to the schema" in failure.value._stackTrace
+    assert not list(out.glob("*.parquet")), "no rows may be committed"
+
+
+@pytest.mark.slow
 def test_streaming_tumbling_equals_batch(spark, tmp_path: Path) -> None:
     events = stream_events_fixture(spark, SF, str(tmp_path / "events_stage"))
     agg = tumbling_counts(events)
@@ -161,10 +194,12 @@ def test_ingest_foreachbatch_sink_with_audit(spark, tmp_path: Path) -> None:
         output_path=str(out),
         trigger_seconds=1,
     )
+    # Wait for the epoch's audit row: it is written after the data, so
+    # stopping on the data alone can interrupt the audit write.
     deadline = time.time() + 60
     while time.time() < deadline:
         try:
-            if spark.read.parquet(str(out / "data")).count() >= 1:
+            if spark.read.parquet(str(out / "audit")).count() >= 1:
                 break
         except Exception:  # noqa: BLE001
             pass

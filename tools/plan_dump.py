@@ -1,12 +1,13 @@
 """Dump `.explain("formatted")` for bench queries into plans/<round>/.
 
 Usage:
-    python tools/plan_dump.py <suffix> [query ...]
+    python tools/plan_dump.py <round> <suffix> [query ...]
 
 Writes plans/<round>/<query>_<suffix>.txt for every bench-flagged query (or
-the named subset), where <round> comes from $SPARK_GRAFT_PLAN_ROUND (default
-r12).  <suffix> is `before` / `after` — the optimization-round evidence files
-the judge checks plan claims against.
+the named subset).  <round> names the plans/ subdirectory (e.g. `r13`) and is
+required, so one round's plans never land in another's.  <suffix> is
+`before` / `after` — the optimization-round evidence files plan claims are
+checked against.
 """
 
 from __future__ import annotations
@@ -20,15 +21,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
 
-_OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                        "plans", os.getenv("SPARK_GRAFT_PLAN_ROUND", "r12"))
+_PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                          "plans")
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_name, suffix = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
     sf_dir = os.getenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(_OUT_DIR, exist_ok=True)
+    out_dir = os.path.join(_PLANS_DIR, round_name)
+    os.makedirs(out_dir, exist_ok=True)
     spark = build_session("plan_dump")
     specs = {n: s for n, s in all_specs().items() if s.bench}
     if only:
@@ -43,7 +47,7 @@ def main() -> None:
             df.explain("formatted")
         finally:
             sys.stdout = stdout
-        path = os.path.join(_OUT_DIR, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(buf.getvalue())
         spark.catalog.clearCache()
