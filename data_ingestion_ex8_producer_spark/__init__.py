@@ -10,7 +10,7 @@ Layout:
   schemas.py    bronze/silver StructTypes + verbatim Avro schema JSON
   functions/    pure column/name helpers (sanitize port, text, vectors, avro)
   sources/      batch + streaming readers (csv, parquet star schema, kafka)
-  sinks/        kafka / parquet / memory sinks
+  sinks/        encode.py (Avro value frame) + datum_sink.py (avro_datum_dir)
   operators/    the analytics query surface (driver-scored via plans.registry)
   plans/        query registry: name -> (spark builder, DuckDB oracle SQL)
   streaming/    ingestion pipeline parity + event-time queries

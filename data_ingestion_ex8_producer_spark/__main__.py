@@ -7,7 +7,8 @@
 Reads the same environment variables as the reference (S3 bucket/prefix,
 Kafka bootstrap/topic, AWS creds — see config.py), validates them up front
 (same fatal-on-missing contract as ``app.py:202-203``), starts the
-checkpointed ingestion stream, and blocks until terminated.
+checkpointed ingestion stream, and blocks until terminated.  ``--replay``
+instead appends one batch cycle of the reference's loop to the same sink.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ import sys
 
 from .config import load_config
 from .session import build_session
-from .streaming.ingest import build_ingest_stream, replay_all_batch
+from .streaming.ingest import build_ingest_stream, replay_all_batch, sink_options
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -37,8 +38,9 @@ def main(argv: list[str] | None = None) -> int:
     spark = build_session("ex8-ingest")
 
     if args.replay:
-        n = replay_all_batch(spark, source).count()
-        print(f"replayed {n} records from {source}")
+        fmt, options = sink_options(cfg, args.sink, args.output)
+        replay_all_batch(spark, source).write.format(fmt).options(**options).mode("append").save()
+        print(f"replayed {source} to the {args.sink} sink")
         return 0
 
     query = build_ingest_stream(

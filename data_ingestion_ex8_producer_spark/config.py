@@ -9,9 +9,9 @@ names (``settings.py:4-6``) but are interpreted Spark-natively:
   reference used it as a 10-row Kafka flush unit (``app.py:161-173``).
 * ``PROCESS_INTERVAL`` -> streaming trigger cadence (reference: poll-loop sleep,
   ``app.py:187,196``).
-* ``RETRY_DELAY``  -> retained for config parity only.  In the reference it is an
-  unconditional 20 s inter-chunk throttle (``app.py:171``) capping throughput at
-  0.5 rows/s; a distributed engine does not reproduce a sleep-based throttle.
+
+``RETRY_DELAY``, the reference's 20 s inter-chunk sleep (``app.py:171``), has no
+counterpart: a distributed engine does not reproduce a sleep-based throttle.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ class EngineConfig:
     # Tuning constants (reference settings.py:4-6); see module docstring.
     chunk_size: int = 10
     process_interval_seconds: int = 60
-    retry_delay_seconds: int = 20
 
     # Spark-side knobs (engine-only).
     shuffle_partitions: int = field(

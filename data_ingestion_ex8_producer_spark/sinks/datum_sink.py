@@ -10,21 +10,23 @@ prefix, the minimal self-describing container.
 
 Commit protocol (the part worth copying):
 
-* each TASK writes to a private ``_tmp_<uuid>.bin`` and returns the temp
-  name + final name in its WriterCommitMessage;
-* the DRIVER commits by renaming every temp file to its final name and
-  writing a ``_SUCCESS`` manifest listing the committed files — readers that
-  honor the manifest see an atomic all-or-nothing batch;
+* each TASK writes to a private ``_tmp_<token>.bin`` and returns the temp
+  name in its WriterCommitMessage;
+* the DRIVER commits with one routine, ``_commit``: it renames every temp
+  file to ``part-<token>.bin`` and publishes a ``_SUCCESS`` manifest listing
+  the committed files — readers that honor the manifest see an atomic
+  all-or-nothing batch;
 * on abort the driver deletes the temp files, so a failed job leaves no
   partial output visible.
 
 This is the same two-phase rename protocol Spark's own FileOutputCommitter
-(v1) uses, expressed in ~40 lines of Python.  Streaming epochs land in
-``epoch=<batchId>/`` subdirectories: a replayed epoch whose ``_SUCCESS``
-already exists is skipped (its temp files are discarded), and a replay
-after a crash mid-rename removes the crashed attempt's orphan part files
-before publishing its own manifest — so manifest-honoring AND glob readers
-both see exactly one attempt's files per epoch.
+(v1) uses.  A batch ``mode("overwrite")`` replaces the directory's part files
+and manifest; ``mode("append")`` adds to them.  Streaming epochs land in
+``epoch=<batchId>/`` subdirectories, committed in replace mode: a replayed
+epoch whose ``_SUCCESS`` already exists is skipped (its temp files are
+discarded), and a replay after a crash mid-rename removes the crashed
+attempt's orphan part files — so manifest-honoring AND glob readers both see
+exactly one attempt's files per epoch.
 """
 
 from __future__ import annotations
@@ -44,17 +46,15 @@ from pyspark.sql.types import Row, StructType
 
 
 class _DatumCommit(WriterCommitMessage):
-    def __init__(self, tmp_path: str, final_path: str, n_rows: int) -> None:
+    def __init__(self, tmp_path: str, n_rows: int) -> None:
         self.tmp_path = tmp_path
-        self.final_path = final_path
         self.n_rows = n_rows
 
 
 def _write_partition(directory: str, rows: Iterator[Row]) -> _DatumCommit:
     """Task-side: stream length-framed datums into a private temp file."""
     os.makedirs(directory, exist_ok=True)
-    token = uuid.uuid4().hex
-    tmp = os.path.join(directory, f"_tmp_{token}.bin")
+    tmp = os.path.join(directory, f"_tmp_{uuid.uuid4().hex}.bin")
     n = 0
     with open(tmp, "wb") as fh:
         for row in rows:
@@ -63,25 +63,38 @@ def _write_partition(directory: str, rows: Iterator[Row]) -> _DatumCommit:
             fh.write(struct.pack(">I", len(payload)))
             fh.write(payload)
             n += 1
-    return _DatumCommit(tmp, os.path.join(directory, f"part-{token}.bin"), n)
+    return _DatumCommit(tmp, n)
 
 
-def _commit(messages: list[_DatumCommit | None], directory: str) -> None:
-    """Driver-side: rename temps to finals, then publish the manifest.
+def _commit(messages: list[_DatumCommit | None], directory: str, replace: bool) -> None:
+    """Driver-side, both writers: move the temps into place, drop the part
+    files this commit did not place (replace) or merge the old manifest
+    (append), then publish the manifest by rename.
 
     The manifest is ALWAYS written — a successful zero-row batch publishes
     an empty ``_SUCCESS``, so manifest-honoring readers can distinguish
     "committed empty" from "never committed"."""
     os.makedirs(directory, exist_ok=True)
-    committed = []
+    placed = {}
     for m in messages:
         if m is None:
             continue
-        os.replace(m.tmp_path, m.final_path)
-        committed.append((os.path.basename(m.final_path), m.n_rows))
-    with open(os.path.join(directory, "_SUCCESS"), "w") as fh:
-        for name, n in sorted(committed):
+        name = "part-" + os.path.basename(m.tmp_path).removeprefix("_tmp_")
+        os.replace(m.tmp_path, os.path.join(directory, name))
+        placed[name] = m.n_rows
+    manifest = os.path.join(directory, "_SUCCESS")
+    if replace:
+        for name in os.listdir(directory):
+            if name.startswith("part-") and name not in placed:
+                os.remove(os.path.join(directory, name))
+    elif os.path.exists(manifest):
+        with open(manifest) as fh:
+            placed = {**dict(line.split("\t") for line in fh.read().splitlines()), **placed}
+    staged = os.path.join(directory, "_tmp_SUCCESS")
+    with open(staged, "w") as fh:
+        for name, n in sorted(placed.items()):
             fh.write(f"{name}\t{n}\n")
+    os.replace(staged, manifest)
 
 
 def _abort(messages: list[_DatumCommit | None]) -> None:
@@ -91,14 +104,15 @@ def _abort(messages: list[_DatumCommit | None]) -> None:
 
 
 class _BatchWriter(DataSourceWriter):
-    def __init__(self, path: str) -> None:
+    def __init__(self, path: str, overwrite: bool) -> None:
         self._path = path
+        self._overwrite = overwrite
 
     def write(self, iterator: Iterator[Row]) -> _DatumCommit:
         return _write_partition(self._path, iterator)
 
     def commit(self, messages) -> None:
-        _commit(messages, self._path)
+        _commit(messages, self._path, replace=self._overwrite)
 
     def abort(self, messages) -> None:
         _abort(messages)
@@ -119,27 +133,13 @@ class _StreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId: int) -> None:
         epoch_dir = os.path.join(self._path, f"epoch={batchId}")
         if os.path.exists(os.path.join(epoch_dir, "_SUCCESS")):
-            # Replay of an already-committed epoch (at-least-once foreachBatch
-            # upstream): the first manifest wins; discard this attempt's temps.
+            # Replay of an already-committed epoch: the first manifest wins;
+            # discard this attempt's temps.
             _abort(messages)
             return
-        os.makedirs(epoch_dir, exist_ok=True)
-        moved = []
-        kept_names = set()
-        for m in messages:
-            if m is None:
-                continue
-            final = os.path.join(epoch_dir, os.path.basename(m.final_path))
-            os.replace(m.tmp_path, final)
-            kept_names.add(os.path.basename(final))
-            moved.append(_DatumCommit(final, final, m.n_rows))
-        # A crash between renames and the manifest leaves a prior attempt's
-        # part files orphaned here; remove anything this commit didn't place
-        # so glob readers (not just manifest readers) see one attempt only.
-        for name in os.listdir(epoch_dir):
-            if name.startswith("part-") and name not in kept_names:
-                os.remove(os.path.join(epoch_dir, name))
-        _commit(moved, epoch_dir)
+        # Replace mode removes the part files a crash between renames and
+        # the manifest left behind, so glob readers see one attempt only.
+        _commit(messages, epoch_dir, replace=True)
 
     def abort(self, messages, batchId: int) -> None:
         _abort(messages)
@@ -159,7 +159,7 @@ class AvroDatumDirDataSource(DataSource):
         return "value binary"
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
-        return _BatchWriter(self.options["path"])
+        return _BatchWriter(self.options["path"], overwrite)
 
     def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
         return _StreamWriter(self.options["path"])

@@ -7,7 +7,7 @@ stream.  Layered so the Avro decode is testable without a broker:
 * ``read_kafka_stream`` / ``read_kafka_batch`` — the broker-facing readers
   (require the spark-sql-kafka package; not present in this container).
 * ``decode_value_frame`` — turns any DataFrame with a ``value: binary``
-  column (from Kafka, or from the parquet fallback sink) back into bronze
+  column (from Kafka, or from the parquet sink) back into bronze
   reclamacoes rows with the engine's own Avro codec (``functions/avro_codec``,
   pinned by the golden tests; spark-avro is not on this classpath).
 """

@@ -3,17 +3,21 @@
 
 Reference loop -> Spark mapping (SURVEY.md §3):
   list_csv_files + re-scan forever  -> FileStreamSource listing + checkpoint
-                                       (once-per-file; ``replay_all`` below
-                                       reproduces bug-compatible re-ingestion)
+                                       (once-per-file; ``replay_all_batch``
+                                       below reproduces bug-compatible
+                                       re-ingestion)
   60 s poll sleep                   -> trigger(processingTime="60 seconds")
   CHUNK_SIZE=10 + 20 s sleep        -> micro-batch boundaries; the 0.5 rows/s
                                        throttle is deliberately NOT reproduced
   per-row Avro datum                -> sinks.encode.avro_value_frame
   keyless Kafka produce + flush     -> Kafka sink, epoch-committed
-  skip-and-log on bad record        -> per-row skip in the encode fallback /
-                                       PERMISSIVE scan (strictly narrower
+  skip-and-log on bad record        -> per-row skip inside the encode kernel
+                                       / PERMISSIVE scan (strictly narrower
                                        blast radius than the reference's
                                        drop-rest-of-chunk, app.py:157-158)
+
+Sinks: ``kafka`` (production) and ``parquet`` (broker-less; the file sink's
+``_spark_metadata`` log commits each micro-batch exactly once).
 """
 
 from __future__ import annotations
@@ -26,6 +30,28 @@ from ..sinks.encode import avro_value_frame
 from ..sources.csv_source import read_reclamacoes_batch, read_reclamacoes_stream
 
 
+def sink_options(
+    cfg: EngineConfig, sink: str, output_path: str | None
+) -> tuple[str, dict[str, str]]:
+    """Format and options of the ingest sink, validated; shared by the
+    stream and the CLI's one-shot replay.
+
+    sink="kafka": production parity (requires the spark-sql-kafka package and
+    a broker).  sink="parquet": broker-less — writes the same ``value``
+    binary column to parquet files at ``output_path``."""
+    if sink == "kafka":
+        cfg.validate_for_ingest()
+        return "kafka", {
+            "kafka.bootstrap.servers": cfg.kafka_bootstrap_servers,
+            "topic": cfg.kafka_topic,
+        }
+    if sink == "parquet":
+        if not output_path:
+            raise ValueError("output_path required for parquet sink")
+        return "parquet", {"path": output_path}
+    raise ValueError(f"unknown sink {sink!r}")
+
+
 def build_ingest_stream(
     spark: SparkSession,
     source_path: str,
@@ -35,56 +61,21 @@ def build_ingest_stream(
     output_path: str | None = None,
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
-    """Start the ingestion stream.
-
-    sink="kafka": production parity (requires the spark-sql-kafka package and
-    a broker).  sink="parquet": broker-less fallback — writes the same
-    ``value`` binary column to parquet files (used by tests and for replay /
-    backfill audits).  sink="memory": in-memory table for assertions.
-    """
+    """Start the ingestion stream into ``sink`` (see ``sink_options``)."""
     cfg = config or load_config()
+    fmt, options = sink_options(cfg, sink, output_path)
     bronze = read_reclamacoes_stream(
         spark, source_path, max_files_per_trigger=cfg.chunk_size
     )
-    encoded = avro_value_frame(bronze)
     trigger = trigger_seconds if trigger_seconds is not None else cfg.process_interval_seconds
-
-    writer = (
-        encoded.writeStream.option("checkpointLocation", checkpoint_dir)
+    return (
+        avro_value_frame(bronze)
+        .writeStream.format(fmt)
+        .options(**options)
+        .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger} seconds")
+        .start()
     )
-    if sink == "kafka":
-        cfg.validate_for_ingest()
-        return (
-            writer.format("kafka")
-            .option("kafka.bootstrap.servers", cfg.kafka_bootstrap_servers)
-            .option("topic", cfg.kafka_topic)
-            .start()
-        )
-    if sink == "parquet":
-        if not output_path:
-            raise ValueError("output_path required for parquet sink")
-        return writer.format("parquet").option("path", output_path).start()
-    if sink == "foreachBatch":
-        if not output_path:
-            raise ValueError("output_path required for foreachBatch sink")
-
-        def write_with_audit(batch_df: DataFrame, epoch_id: int) -> None:
-            # Transactional-ish pattern: write the payload, then append one
-            # audit row per epoch (epoch_id makes redeliveries idempotent
-            # on the audit side too).
-            batch_df.persist()
-            batch_df.write.mode("append").parquet(f"{output_path}/data")
-            spark_b = batch_df.sparkSession
-            spark_b.createDataFrame(
-                [(int(epoch_id), batch_df.count())], "epoch_id long, n_rows long"
-            ).write.mode("append").parquet(f"{output_path}/audit")
-            batch_df.unpersist()
-
-        return writer.foreachBatch(write_with_audit).start()
-    if sink == "memory":
-        return writer.format("memory").queryName("reclamacoes_ingest").start()
-    raise ValueError(f"unknown sink {sink!r}")
 
 
 def replay_all_batch(spark: SparkSession, source_path: str) -> DataFrame:

@@ -68,6 +68,49 @@ def test_datum_sink_batch_roundtrip(spark, tmp_path: Path) -> None:
     assert not list(dest.glob("_tmp_*"))
 
 
+def _save(spark, dest: Path, rows: list[dict], mode: str) -> None:
+    spark.createDataFrame([(encode_record(r),) for r in rows], "value binary").coalesce(
+        1
+    ).write.format("avro_datum_dir").option("path", str(dest)).mode(mode).save()
+
+
+def _manifest_names(root: Path) -> set[str]:
+    return {line.split("\t")[0] for line in (root / "_SUCCESS").read_text().splitlines()}
+
+
+def _by_ano(rows) -> list[dict]:
+    return sorted(rows, key=lambda r: r["ano"])
+
+
+def test_datum_sink_append_keeps_earlier_batches(spark, tmp_path: Path) -> None:
+    """Two appends into one directory: the manifest lists both batches'
+    part files, so a manifest reader sees the union of their rows."""
+    spark.dataSource.register(AvroDatumDirDataSource)
+    dest = tmp_path / "appended"
+    _save(spark, dest, _ROWS[:1], "append")
+    _save(spark, dest, _ROWS[1:], "append")
+
+    names = _manifest_names(dest)
+    assert len(names) == 2
+    assert names == {p.name for p in dest.glob("part-*.bin")}
+    assert _by_ano(map(decode_record, _collect_datums(dest))) == _by_ano(_ROWS)
+
+
+def test_datum_sink_overwrite_replaces_parts(spark, tmp_path: Path) -> None:
+    """``mode("overwrite")`` after an append leaves only the new part files,
+    on disk and in the manifest."""
+    spark.dataSource.register(AvroDatumDirDataSource)
+    dest = tmp_path / "overwritten"
+    _save(spark, dest, _ROWS, "append")
+    _save(spark, dest, _ROWS[1:], "overwrite")
+
+    names = _manifest_names(dest)
+    assert len(names) == 1
+    assert names == {p.name for p in dest.glob("part-*.bin")}
+    assert _by_ano(map(decode_record, _collect_datums(dest))) == _ROWS[1:]
+    assert not list(dest.glob("_tmp_*"))
+
+
 @pytest.mark.slow
 def test_datum_sink_streaming_epochs(spark, tmp_path: Path) -> None:
     spark.dataSource.register(AvroDatumDirDataSource)
@@ -116,7 +159,7 @@ def _mk_temp(directory: Path, token: str, n_rows: int = 1):
     directory.mkdir(parents=True, exist_ok=True)
     tmp = directory / f"_tmp_{token}.bin"
     tmp.write_bytes(b"\x00\x00\x00\x01x" * n_rows)
-    return _DatumCommit(str(tmp), str(directory / f"part-{token}.bin"), n_rows)
+    return _DatumCommit(str(tmp), n_rows)
 
 
 def test_commit_empty_batch_publishes_manifest(tmp_path: Path) -> None:
@@ -126,7 +169,7 @@ def test_commit_empty_batch_publishes_manifest(tmp_path: Path) -> None:
     from data_ingestion_ex8_producer_spark.sinks.datum_sink import _commit
 
     dest = tmp_path / "empty"
-    _commit([None, None], str(dest))
+    _commit([None, None], str(dest), replace=False)
     assert (dest / "_SUCCESS").read_text() == ""
 
 

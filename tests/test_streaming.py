@@ -181,39 +181,6 @@ def test_stream_dedup(spark, tmp_path: Path) -> None:
 
 
 @pytest.mark.slow
-def test_ingest_foreachbatch_sink_with_audit(spark, tmp_path: Path) -> None:
-    src = tmp_path / "landing_fb"
-    src.mkdir()
-    _write_csv(src / "a.csv", ["2024;1º;Cat;Tipo;1;BANCO X;1,0;1;1;1;3;10;5;5"])
-    out = tmp_path / "fb_out"
-    query = build_ingest_stream(
-        spark,
-        str(src),
-        str(tmp_path / "fb_ckpt"),
-        sink="foreachBatch",
-        output_path=str(out),
-        trigger_seconds=1,
-    )
-    # Wait for the epoch's audit row: it is written after the data, so
-    # stopping on the data alone can interrupt the audit write.
-    deadline = time.time() + 60
-    while time.time() < deadline:
-        try:
-            if spark.read.parquet(str(out / "audit")).count() >= 1:
-                break
-        except Exception:  # noqa: BLE001
-            pass
-        time.sleep(1)
-    query.stop()
-    query.awaitTermination(30)
-    data = spark.read.parquet(str(out / "data"))
-    audit = spark.read.parquet(str(out / "audit"))
-    assert data.count() == 1
-    # audit row count matches data written across epochs
-    assert sum(r["n_rows"] for r in audit.collect()) == 1
-
-
-@pytest.mark.slow
 def test_stream_static_join(spark, tmp_path: Path) -> None:
     """Stream-static join: the streaming events enriched against the static
     customer dimension must equal the batch join (dimension broadcast per
