@@ -5,9 +5,10 @@
         [--source PATH] [--checkpoint PATH] [--output PATH] [--replay]
 
 Reads the same environment variables as the reference (S3 bucket/prefix,
-Kafka bootstrap/topic, AWS creds — see config.py), validates them up front
-(same fatal-on-missing contract as ``app.py:202-203``), starts the
-checkpointed ingestion stream, and blocks until terminated.  ``--replay``
+Kafka bootstrap/topic, AWS creds — see config.py); without ``--source`` a
+missing ``S3_BUCKET_NAME`` is fatal before the session starts (same contract
+as ``app.py:202-203``).  Starts the checkpointed ingestion stream and blocks
+until terminated.  ``--replay``
 instead appends one batch cycle of the reference's loop to the same sink.
 """
 
@@ -16,7 +17,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .config import load_config
+from .config import EngineConfig
 from .session import build_session
 from .streaming.ingest import build_ingest_stream, replay_all_batch, sink_options
 
@@ -33,7 +34,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
 
-    cfg = load_config()
+    cfg = EngineConfig()
     source = args.source or cfg.source_path
     spark = build_session("ex8-ingest")
 
@@ -47,7 +48,6 @@ def main(argv: list[str] | None = None) -> int:
         spark,
         source,
         args.checkpoint,
-        config=cfg,
         sink=args.sink,
         output_path=args.output,
     )

@@ -1,13 +1,17 @@
 """SparkSession factory.
 
-One place to encode the 100 TB posture: AQE on (runtime shuffle-partition
-coalescing + skew-join splitting), Arrow for any Python-side exchange,
+One place to encode the session posture: Arrow for any Python-side exchange,
 UTC session time zone (determinism across engines), and s3a credentials wired
 from the same env vars the reference reads (``settings.py:11-14``), including a
-custom endpoint for MinIO-style deployments (``AWS_ENDPOINT_URL``).
+custom endpoint for MinIO-style deployments (``AWS_ENDPOINT_URL``).  AQE
+(partition coalescing, skew-join splitting) and 128 MiB file splits are
+Spark's own defaults.
 
-On the local[32] test box the only memory knob that matters is driver memory;
-on a real cluster the same builder is used with master/memory supplied by the
+Local sessions size themselves from the host: N task slots, where N is
+``SPARK_GRAFT_CPUS`` or else the CPUs this process may use, N shuffle
+partitions (AQE coalesces downward at runtime), and a driver heap of
+``SPARK_GRAFT_DRIVER_MEM`` or else half of physical memory, at most 12g.  On
+a real cluster the same builder is used with master/memory supplied by the
 cluster manager.
 """
 
@@ -17,39 +21,34 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .config import EngineConfig, load_config
+from .config import EngineConfig
 
 
 def build_session(
     app_name: str = "data_ingestion_ex8_producer_spark",
-    config: EngineConfig | None = None,
     master: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cfg = config or load_config()
+    cfg = EngineConfig()
+    cpus = int(os.getenv("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    half_ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
     elif not os.getenv("SPARK_MASTER") and "SPARK_ENV_LOADED" not in os.environ:
-        builder = builder.master(f"local[{cfg.local_cores}]")
+        builder = builder.master(f"local[{cpus}]")
 
     conf: dict[str, str] = {
         # In local mode the driver JVM IS the executor: the 1g default heap
-        # starves 32 task threads (a 10x-corpus probe OOMed in a banded join
-        # under it).  12g is still <10% of the test box; a real cluster
-        # overrides via spark-submit / cluster manager.
-        "spark.driver.memory": os.getenv("SPARK_GRAFT_DRIVER_MEM", "12g"),
-        # Right-size shuffles for the deployment; AQE coalesces downward at runtime.
-        "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
+        # starves the task threads (a 10x-corpus probe OOMed in a banded
+        # join under it).
+        "spark.driver.memory": os.getenv("SPARK_GRAFT_DRIVER_MEM")
+        or f"{min(half_ram_mb, 12 * 1024)}m",
+        "spark.sql.shuffle.partitions": str(cpus),
         # Deterministic timestamp semantics across Spark and the DuckDB oracle.
         "spark.sql.session.timeZone": "UTC",
         # Arrow for pandas UDF / toPandas exchange (the only sanctioned Python path).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # Files: 128 MiB split target is the right default for 100 TB of parquet.
-        "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.ui.enabled": os.getenv("SPARK_GRAFT_UI", "false"),
     }
 

@@ -24,6 +24,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..config import CHUNK_SIZE
 from ..functions.names import sanitize_columns
 from ..schemas import BRONZE_SCHEMA, FIELD_ORDER, RAW_BACEN_HEADER
 
@@ -31,9 +32,10 @@ _READER_OPTIONS = {
     "sep": ";",
     "encoding": "ISO-8859-1",
     "header": "true",
-    # Reference: csv.DictReader default quoting; PERMISSIVE keeps bad rows
-    # visible for quarantine instead of failing the file (app.py:136-139
-    # abandons the rest of a file on any parse error — we do strictly better).
+    # Reference: csv.DictReader default quoting.  PERMISSIVE loads a short
+    # or malformed row with NULLs instead of failing the file (app.py:136-139
+    # abandons the rest of a file on any parse error); a row left without a
+    # required field is then skipped, uncounted, by the encode kernel.
     "mode": "PERMISSIVE",
 }
 
@@ -121,11 +123,7 @@ def read_reclamacoes_batch(spark: SparkSession, path: str) -> DataFrame:
     return reduce(DataFrame.union, frames)
 
 
-def read_reclamacoes_stream(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def read_reclamacoes_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming file-source scan (S1: listing, ``*.csv`` filter, new-file
     tracking all handled by FileStreamSource + checkpoint).
 
@@ -138,14 +136,13 @@ def read_reclamacoes_stream(
     ``read_reclamacoes_batch``, which honours each file's own header.  The
     accepted columns go through the same ``bronze_exprs`` contract.
     """
-    reader = (
+    df = (
         spark.readStream.options(**_READER_OPTIONS)
         .option("enforceSchema", "false")
         .option("pathGlobFilter", "*.csv")
+        .option("maxFilesPerTrigger", str(CHUNK_SIZE))
         .schema(StructType([StructField(n, StringType(), True) for n in RAW_BACEN_HEADER]))
+        .csv(path)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    df = reader.csv(path)
     positional = df.toDF(*_positional_schema(len(RAW_BACEN_HEADER)).fieldNames())
     return positional.selectExpr(*bronze_exprs(";".join(RAW_BACEN_HEADER)))

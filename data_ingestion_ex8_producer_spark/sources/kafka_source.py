@@ -18,14 +18,14 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import EngineConfig, load_config
+from ..config import EngineConfig
 from ..functions.avro_codec import decode_record
 from ..schemas import BRONZE_SCHEMA, FIELD_ORDER
 
 
-def read_kafka_stream(spark: SparkSession, config: EngineConfig | None = None) -> DataFrame:
+def read_kafka_stream(spark: SparkSession) -> DataFrame:
     """Streaming reader over the ingest topic (value: binary Avro datums)."""
-    cfg = config or load_config()
+    cfg = EngineConfig()
     return (
         spark.readStream.format("kafka")
         .option("kafka.bootstrap.servers", cfg.kafka_bootstrap_servers)
@@ -35,8 +35,8 @@ def read_kafka_stream(spark: SparkSession, config: EngineConfig | None = None) -
     )
 
 
-def read_kafka_batch(spark: SparkSession, config: EngineConfig | None = None) -> DataFrame:
-    cfg = config or load_config()
+def read_kafka_batch(spark: SparkSession) -> DataFrame:
+    cfg = EngineConfig()
     return (
         spark.read.format("kafka")
         .option("kafka.bootstrap.servers", cfg.kafka_bootstrap_servers)

@@ -45,16 +45,18 @@ def incremental_minhash_dedup(
     def process_batch(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
         new_bands = minhash_band_signatures(batch_df).persist()
-        try:
-            # Partition discovery surfaces the epoch column; exclude the
-            # CURRENT epoch so a replayed (crashed mid-write) attempt never
-            # joins against its own partial output.
+        root = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(store_dir)
+        if root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(root):
+            # The epoch partition column comes from the directory layout;
+            # exclude the CURRENT epoch so a replayed (crashed mid-write)
+            # attempt never joins against its own partial output.
             store = (
-                spark.read.parquet(store_dir)
+                spark.read.schema(f"{_STORE_SCHEMA}, epoch long")
+                .parquet(store_dir)
                 .filter(F.col("epoch") != epoch_id)
                 .select("doc_id", "band", "r0", "r1", "r2", "r3")
             )
-        except Exception:  # noqa: BLE001 — first epoch: store doesn't exist yet
+        else:  # first epoch: the store does not exist yet
             store = spark.createDataFrame([], _STORE_SCHEMA)
         # new-vs-store (both directions via the ordered-pair condition on the
         # union) + new-vs-new, in one join: candidates must involve >=1 new doc.

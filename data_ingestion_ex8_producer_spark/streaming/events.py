@@ -69,8 +69,12 @@ def session_values(events: DataFrame, gap: str = "10 minutes") -> DataFrame:
 
 
 def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Stateful exact dedup on event_id within the watermark horizon —
-    bounded state, the streaming twin of distinct()."""
+    """Stateful exact dedup on event_id, the streaming twin of distinct().
+
+    The state is NOT bounded: the dedup key excludes the watermark column
+    ``ts``, so the watermark never evicts a key and every event_id seen is
+    kept for the life of the query.  Use ``dedup_stream_within_watermark``
+    for an unbounded stream."""
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import EngineConfig, load_config
+from ..config import PROCESS_INTERVAL_SECONDS, EngineConfig
 from ..sinks.encode import avro_value_frame
 from ..sources.csv_source import read_reclamacoes_batch, read_reclamacoes_stream
 
@@ -40,7 +40,6 @@ def sink_options(
     a broker).  sink="parquet": broker-less — writes the same ``value``
     binary column to parquet files at ``output_path``."""
     if sink == "kafka":
-        cfg.validate_for_ingest()
         return "kafka", {
             "kafka.bootstrap.servers": cfg.kafka_bootstrap_servers,
             "topic": cfg.kafka_topic,
@@ -56,24 +55,18 @@ def build_ingest_stream(
     spark: SparkSession,
     source_path: str,
     checkpoint_dir: str,
-    config: EngineConfig | None = None,
     sink: str = "kafka",
     output_path: str | None = None,
-    trigger_seconds: int | None = None,
+    trigger_seconds: int = PROCESS_INTERVAL_SECONDS,
 ) -> StreamingQuery:
     """Start the ingestion stream into ``sink`` (see ``sink_options``)."""
-    cfg = config or load_config()
-    fmt, options = sink_options(cfg, sink, output_path)
-    bronze = read_reclamacoes_stream(
-        spark, source_path, max_files_per_trigger=cfg.chunk_size
-    )
-    trigger = trigger_seconds if trigger_seconds is not None else cfg.process_interval_seconds
+    fmt, options = sink_options(EngineConfig(), sink, output_path)
     return (
-        avro_value_frame(bronze)
+        avro_value_frame(read_reclamacoes_stream(spark, source_path))
         .writeStream.format(fmt)
         .options(**options)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(processingTime=f"{trigger} seconds")
+        .trigger(processingTime=f"{trigger_seconds} seconds")
         .start()
     )
 

@@ -108,6 +108,33 @@ def test_cli_replay_writes_parquet_sink(spark, fixture_csv: str, tmp_path: Path,
     assert sum(got.values()) == 2
 
 
+def test_kafka_sink_options_need_no_bucket(monkeypatch) -> None:
+    """The Kafka sink needs only the broker and topic: with no S3 bucket
+    configured (a ``--source`` run never reads S3) it still resolves."""
+    from data_ingestion_ex8_producer_spark.config import EngineConfig
+    from data_ingestion_ex8_producer_spark.streaming.ingest import sink_options
+
+    monkeypatch.delenv("S3_BUCKET_NAME", raising=False)
+    monkeypatch.setenv("KAFKA_BOOTSTRAP_SERVERS", "broker:9092")
+    monkeypatch.setenv("KAFKA_TOPIC", "reclamacoes")
+    assert sink_options(EngineConfig(), "kafka", None) == (
+        "kafka",
+        {"kafka.bootstrap.servers": "broker:9092", "topic": "reclamacoes"},
+    )
+
+
+def test_cli_without_source_requires_bucket(tmp_path: Path, monkeypatch) -> None:
+    """Without ``--source`` the landing zone is the S3 bucket, so a missing
+    ``S3_BUCKET_NAME`` is fatal before any session starts (app.py:202-203)."""
+    from data_ingestion_ex8_producer_spark import __main__ as cli
+
+    monkeypatch.delenv("S3_BUCKET_NAME", raising=False)
+    monkeypatch.setattr(cli, "build_session", lambda *_a, **_kw: pytest.fail("session built"))
+    argv = ["--replay", "--sink", "parquet", "--output", str(tmp_path / "out")]
+    with pytest.raises(ValueError, match="S3_BUCKET_NAME"):
+        cli.main(argv)
+
+
 def test_duplicate_header_last_wins(spark, tmp_path: Path) -> None:
     # Two raw headers sanitizing to "ano": DictReader semantics keep the last.
     path = tmp_path / "dup.csv"

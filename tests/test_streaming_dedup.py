@@ -110,3 +110,18 @@ def test_incremental_dedup_across_batches(spark, tmp_path: Path) -> None:
         .collect()
     }
     assert got2 == batch_pairs
+
+
+@pytest.mark.slow
+def test_incremental_dedup_fails_on_unreadable_store(spark, tmp_path: Path) -> None:
+    """A store that exists but cannot be read fails the micro-batch; it is
+    never mistaken for the empty store of a first epoch."""
+    from pyspark.errors import StreamingQueryException
+
+    in_dir = str(tmp_path / "in")
+    store = tmp_path / "store"
+    store.mkdir()
+    (store / "part-00000.parquet").write_bytes(b"not a parquet file")
+    _add_batch(spark, [(1, BASE), (2, BASE + " extra")], in_dir, "batch1", tmp_path)
+    with pytest.raises(StreamingQueryException):
+        _run_epoch(spark, in_dir, str(tmp_path / "ckpt"), str(store), str(tmp_path / "pairs"))
