@@ -1,5 +1,7 @@
-"""Event-time windowing over the ``events`` table — batch twins of the
-Structured Streaming queries in ``streaming/events.py``.
+"""Event-time windowing over the ``events`` table.  ``tumbling_counts``,
+``session_values`` and ``ohlc_bars`` are the plans of three registered
+builders as functions of an events frame; ``streaming/events.py`` applies
+them unchanged to watermarked streams.
 
 ``F.window`` / ``F.session_window`` work identically on batch DataFrames, so
 the driver-scored batch results here pin the exact same grouping semantics the
@@ -36,10 +38,13 @@ from ._util import t
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time windows per event type."""
-    win = F.window("ts", "1 hour")
+    return tumbling_counts(t(spark, sf_dir, "events"))
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """The q_tumbling_window plan over any events frame, batch or stream."""
     return (
-        t(spark, sf_dir, "events")
-        .groupBy(win, "event_type")
+        events.groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,4)")).cast("double").alias("total_value"),
@@ -125,10 +130,13 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 10-minute inactivity gap per user.  Spark's
     session_window end = last event + gap; the oracle reproduces that with the
     lag/cumsum sessionization idiom."""
-    win = F.session_window("ts", "10 minutes")
+    return session_values(t(spark, sf_dir, "events"))
+
+
+def session_values(events: DataFrame) -> DataFrame:
+    """The q_session_window plan over any events frame, batch or stream."""
     return (
-        t(spark, sf_dir, "events")
-        .groupBy("user_id", win)
+        events.groupBy("user_id", F.session_window("ts", "10 minutes"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,4)")).cast("double").alias("total_value"),
@@ -978,10 +986,14 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     events; the oracle's window twin expresses the same semantics the
     declarative way DuckDB prefers.  At 100 TB the plan is the same
     partial-agg shape as every counter rollup here."""
-    ev = t(spark, sf_dir, "events")
+    return ohlc_bars(t(spark, sf_dir, "events"))
+
+
+def ohlc_bars(events: DataFrame) -> DataFrame:
+    """The q_ohlc_bars plan over any events frame, batch or stream."""
     key = F.struct(F.col("ts"), F.col("event_id"))
     return (
-        ev.groupBy("event_type", F.window("ts", "1 hour"))
+        events.groupBy("event_type", F.window("ts", "1 hour"))
         .agg(
             F.min_by("value", key).alias("open"),
             F.max("value").alias("high"),

@@ -16,8 +16,9 @@ Commit protocol (the part worth copying):
   file to ``part-<token>.bin`` and publishes a ``_SUCCESS`` manifest listing
   the committed files — readers that honor the manifest see an atomic
   all-or-nothing batch;
-* on abort the driver deletes the temp files, so a failed job leaves no
-  partial output visible.
+* on abort the driver deletes the temp files (a failed task deletes its
+  own), so a failed job leaves no partial output visible.  A NULL ``value``
+  fails the job: it is never written as an empty datum.
 
 This is the same two-phase rename protocol Spark's own FileOutputCommitter
 (v1) uses.  A batch ``mode("overwrite")`` replaces the directory's part files
@@ -52,17 +53,25 @@ class _DatumCommit(WriterCommitMessage):
 
 
 def _write_partition(directory: str, rows: Iterator[Row]) -> _DatumCommit:
-    """Task-side: stream length-framed datums into a private temp file."""
+    """Task-side: stream length-framed datums into a private temp file.  A
+    NULL ``value`` fails the task; the driver's abort never sees a failed
+    task's temp file, so the task removes it itself."""
     os.makedirs(directory, exist_ok=True)
     tmp = os.path.join(directory, f"_tmp_{uuid.uuid4().hex}.bin")
     n = 0
-    with open(tmp, "wb") as fh:
-        for row in rows:
-            value = row["value"]
-            payload = bytes(value) if value is not None else b""
-            fh.write(struct.pack(">I", len(payload)))
-            fh.write(payload)
-            n += 1
+    try:
+        with open(tmp, "wb") as fh:
+            for row in rows:
+                value = row["value"]
+                if value is None:
+                    raise ValueError("avro_datum_dir: NULL value; every row must be one datum")
+                payload = bytes(value)
+                fh.write(struct.pack(">I", len(payload)))
+                fh.write(payload)
+                n += 1
+    except BaseException:
+        os.remove(tmp)
+        raise
     return _DatumCommit(tmp, n)
 
 

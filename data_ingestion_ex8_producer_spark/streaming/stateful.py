@@ -1,7 +1,7 @@
-"""Custom stateful streaming operators (applyInPandasWithState) and
-stream-stream joins — the streaming surface that has no SQL equivalent
-(driver records rows-only checks for these; the tests pin semantics against
-batch twins instead).
+"""Custom stateful streaming operators (applyInPandasWithState,
+transformWithStateInPandas) and stream-stream joins — the streaming surface
+that has no SQL equivalent.  None is a registered query: the tests pin each
+against its batch twin, and a constant shared with a twin is imported from it.
 """
 
 from __future__ import annotations
@@ -52,9 +52,7 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def purchases_after_signup(
-    events: DataFrame, horizon: str = "2 hours", how: str = "inner"
-) -> DataFrame:
+def purchases_after_signup(events: DataFrame, how: str = "inner") -> DataFrame:
     """Stream-stream interval join: purchases within 2 h after the same
     user's signup.  Both sides watermarked; the time-bound condition lets
     Spark expire join state instead of buffering streams forever.
@@ -86,7 +84,7 @@ def purchases_after_signup(
         purchases,
         (F.col("s_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("signup_ts"))
-        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr(f"INTERVAL {horizon}")),
+        & (F.col("purchase_ts") <= F.col("signup_ts") + F.expr("INTERVAL 2 hours")),
         how,
     ).select(
         F.col("s_user").alias("user_id"),
@@ -455,7 +453,7 @@ VALUE_OUTLIER_SCHEMA = (
 # Exact integer moments on the shared 1e-2 grid: n, sum(vq), sum(vq^2),
 # plus the running outlier count.
 _VO_STATE_SCHEMA = "n bigint, s bigint, ss bigint, n_out bigint"
-_VO_Q2 = 100
+from ..operators.events import _VO_Q2  # noqa: E402
 _VO_FACTOR_SQ = 9.0  # 3-sigma, squared
 
 
@@ -550,7 +548,6 @@ from ..operators.events import _EWMA_WEIGHTS, _EWMA_WINDOW  # noqa: E402
 
 _EWMA_RETAIN = 2 * _EWMA_WINDOW  # late-update headroom beyond one window
 _EWMA_WT = dict(_EWMA_WEIGHTS)   # lag (hours) -> integer weight 2^(15-lag)
-_HOUR_US_EWMA = 3_600_000_000
 
 
 def _update_ewma(
@@ -588,7 +585,7 @@ def _update_ewma(
     else:
         hours, m, n_pruned = [], {}, 0
     horizon = (
-        hours[0] + (_EWMA_WINDOW - 1) * _HOUR_US_EWMA
+        hours[0] + (_EWMA_WINDOW - 1) * _HOUR_US
         if n_pruned > 0 and hours
         else None
     )
@@ -597,7 +594,7 @@ def _update_ewma(
         if len(pdf) == 0:
             continue
         us = pdf["ts"].astype("int64") // 1_000  # ns -> us
-        bucket = (us // _HOUR_US_EWMA) * _HOUR_US_EWMA
+        bucket = (us // _HOUR_US) * _HOUR_US
         for h, c in bucket.value_counts().items():
             h = int(h)
             if horizon is not None and h < horizon:
@@ -609,7 +606,7 @@ def _update_ewma(
         h
         for h in ordered
         for c in changed
-        if 0 <= h - c <= (_EWMA_WINDOW - 1) * _HOUR_US_EWMA
+        if 0 <= h - c <= (_EWMA_WINDOW - 1) * _HOUR_US
     }
     retained = ordered[-_EWMA_RETAIN:]
     n_pruned += len(ordered) - len(retained)
@@ -622,7 +619,7 @@ def _update_ewma(
     for h in sorted(affected):
         num = den = n_win = 0
         for lag in range(_EWMA_WINDOW):
-            src = h - lag * _HOUR_US_EWMA
+            src = h - lag * _HOUR_US
             if src in m:
                 wt = _EWMA_WT[lag]
                 num += m[src] * wt
@@ -718,7 +715,7 @@ def _update_seasonal(
             continue
         us = pdf["ts"].astype("int64") // 1_000  # ns -> us
         day = (us // _DAY_US) * _DAY_US
-        hod = (us // _HOUR_US_EWMA) % 24
+        hod = (us // _HOUR_US) % 24
         packed = day + hod
         for k, c in packed.value_counts().items():
             k = int(k)
@@ -919,7 +916,6 @@ ROBUST_SCHEMA = (
 # associative: the split-batch contract below is equality, not just
 # row-for-row on a single batch.
 _ROBUST_STATE_SCHEMA = "vqs array<long>, counts array<long>"
-_RO_Q2 = 100  # the batch twin's exact 1e-2 grid (events.py:_VO_Q2)
 _RO_MAX_BINS = 100_000  # state bound: distinct 1e-2 grid values per type.
 # Beyond it the monitor fails fast with an explicit error instead of
 # growing state silently — production widens the grid (or clamps the value
@@ -970,7 +966,7 @@ def _update_robust(
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        vq = (pdf["value"].astype("float64") * _RO_Q2).round().astype("int64")
+        vq = (pdf["value"].astype("float64") * _VO_Q2).round().astype("int64")
         for v, c in vq.value_counts().items():
             hist[int(v)] = hist.get(int(v), 0) + int(c)
         touched = True
@@ -996,8 +992,8 @@ def _update_robust(
             (
                 key[0],
                 n,
-                med / _RO_Q2,
-                mad / _RO_Q2,
+                med / _VO_Q2,
+                mad / _VO_Q2,
                 n_out,
                 n_out / n,
             )
@@ -1122,7 +1118,6 @@ _CU_STATE_SCHEMA = "days array<long>, counts array<long>"
 _CU_MAX_DAYS = 100_000  # ~270 years of daily cells per type — a config
 # error, not data, if exceeded; fail fast rather than grow state silently
 # (the _RO_MAX_BINS doctrine).
-_DAY_US_CU = 86_400_000_000
 
 
 def _cusum_trace(pairs: list[tuple[int, int]]) -> tuple[int, int, int]:
@@ -1169,7 +1164,7 @@ def _update_cusum(
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        days = (pdf["ts_us"].astype("int64") // _DAY_US_CU).astype("int64")
+        days = (pdf["ts_us"].astype("int64") // _DAY_US).astype("int64")
         for d, c in days.value_counts().items():
             hist[int(d)] = hist.get(int(d), 0) + int(c)
         touched = True
@@ -1233,8 +1228,7 @@ def cusum_regime_stream(events: DataFrame) -> DataFrame:
 
 KMV_SCHEMA = "source string, n_sketch bigint, h_k bigint, d_hat bigint"
 _KMV_STATE_SCHEMA = "sk array<long>"
-_KMV_K = 128  # must match operators/dedup.py:_KMV_K (guardrail-asserted)
-_KMV_SCALE = (_KMV_K - 1) * (1 << 48)
+from ..operators.dedup import _KMV_K, _KMV_SCALE  # noqa: E402
 
 
 def _update_kmv(
@@ -1319,7 +1313,7 @@ _DRIFT_STATE_SCHEMA = "buckets array<string>, nr array<long>, nc array<long>"
 _DRIFT_MAX_BUCKETS = 100_000  # fail-fast bound (the _RO_MAX_BINS doctrine):
 # feature bucket domains are bounded (catalog / 24 hours / log2 decades);
 # exceeding this means a mis-bucketed feature, not data.
-_DRIFT_FLAG_X10 = 10  # must match operators/events.py (guardrail-asserted)
+from ..operators.events import _DRIFT_FLAG_X10  # noqa: E402
 
 
 def _update_drift(

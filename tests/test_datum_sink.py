@@ -9,6 +9,7 @@ from pathlib import Path
 
 import pytest
 
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from data_ingestion_ex8_producer_spark.functions.avro_codec import (
@@ -109,6 +110,19 @@ def test_datum_sink_overwrite_replaces_parts(spark, tmp_path: Path) -> None:
     assert names == {p.name for p in dest.glob("part-*.bin")}
     assert _by_ano(map(decode_record, _collect_datums(dest))) == _ROWS[1:]
     assert not list(dest.glob("_tmp_*"))
+
+
+def test_datum_sink_null_value_fails_and_leaves_nothing(spark, tmp_path: Path) -> None:
+    """A NULL ``value`` is not a datum: the write fails instead of committing
+    a zero-length record, and no manifest, part or temp file is left."""
+    spark.dataSource.register(AvroDatumDirDataSource)
+    dest = tmp_path / "nulls"
+    df = spark.createDataFrame([(None,), (b"\x08abcd",)], "value binary").coalesce(1)
+    with pytest.raises(PythonException, match="NULL value"):
+        df.write.format("avro_datum_dir").option("path", str(dest)).mode("append").save()
+    assert not [
+        p.name for pattern in ("_SUCCESS", "part-*", "_tmp_*") for p in dest.glob(pattern)
+    ]
 
 
 @pytest.mark.slow

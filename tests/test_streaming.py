@@ -220,14 +220,13 @@ def test_stream_static_join(spark, tmp_path: Path) -> None:
 
 @pytest.mark.slow
 def test_streaming_session_window_equals_batch(spark, tmp_path: Path) -> None:
-    from pyspark.sql import functions as F
-
+    from data_ingestion_ex8_producer_spark.operators.events import q_session_window
     from data_ingestion_ex8_producer_spark.streaming.events import session_values
 
     events = stream_events_fixture(spark, SF, str(tmp_path / "events_stage3"))
+    stream = session_values(events)
     query = (
-        session_values(events)
-        .writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName("stream_sessions")
         .outputMode("complete")
         .trigger(availableNow=True)
@@ -236,28 +235,19 @@ def test_streaming_session_window_equals_batch(spark, tmp_path: Path) -> None:
     query.awaitTermination(120)
     query.stop()
 
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM stream_sessions").collect()
-    }
-    from data_ingestion_ex8_producer_spark.sources.tables import load_table
+    def as_map(rows):
+        return {
+            (r["user_id"], r["session_start"], r["session_end"]): (
+                r["n_events"],
+                r["total_value"],
+            )
+            for r in rows
+        }
 
-    batch = (
-        load_table(spark, SF, "events")
-        .groupBy("user_id", F.session_window("ts", "10 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-    expected = {
-        (r["user_id"], r["session_start"], r["session_end"]): r["n_events"]
-        for r in batch.collect()
-    }
-    assert got == expected
+    batch = q_session_window(spark, SF)
+    assert stream.columns == batch.columns
+    got = as_map(spark.sql("SELECT * FROM stream_sessions").collect())
+    assert got == as_map(batch.collect())
 
 
 @pytest.mark.slow
@@ -352,9 +342,9 @@ def test_streaming_ohlc_bars_equals_batch(spark, tmp_path: Path) -> None:
     )
 
     events = stream_events_fixture(spark, SF, str(tmp_path / "ohlc_stage"))
+    stream = ohlc_bars_stream(events)
     query = (
-        ohlc_bars_stream(events)
-        .writeStream.format("memory")
+        stream.writeStream.format("memory")
         .queryName("stream_ohlc")
         .outputMode("complete")
         .trigger(availableNow=True)
@@ -372,6 +362,8 @@ def test_streaming_ohlc_bars_equals_batch(spark, tmp_path: Path) -> None:
             for r in rows
         }
 
+    batch = q_ohlc_bars(spark, SF)
+    assert stream.columns == batch.columns
     got = as_map(spark.sql("SELECT * FROM stream_ohlc").collect())
-    expected = as_map(q_ohlc_bars(spark, SF).collect())
+    expected = as_map(batch.collect())
     assert got == expected and len(got) > 0

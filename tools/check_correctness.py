@@ -26,6 +26,7 @@ sys.path.insert(0, "/root/repo")
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
+from data_ingestion_ex8_producer_spark.sources.tables import STAR_TABLES as TABLES  # noqa: E402
 
 # DuckDB types whose fetchall() and Arrow renderings are proven identical
 # (the guardrail test asserts every registered oracle stays in this set).
@@ -33,11 +34,6 @@ _RENDER_SAFE_TYPES = {
     "BOOLEAN", "INTEGER", "BIGINT", "DOUBLE", "VARCHAR", "DATE",
     "TIMESTAMP", "BLOB",
 }
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
 
 
 def canon(value) -> str:
