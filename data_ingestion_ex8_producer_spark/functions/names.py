@@ -9,8 +9,8 @@ behavior (SURVEY.md §2 T1):
     "Quantidade de reclamações reguladas - outras" -> "quantidade_de_reclamacoes_reguladas_outras"
     "123 coluna"                                   -> "col_123_coluna"
 
-This runs on the DRIVER against ``df.columns`` (schema-level), never as a UDF:
-header normalization is metadata work, not data work.
+This runs once per landing file, on its header, inside the CSV parse
+(``sources/csv_source._parse``), never per row.
 """
 
 from __future__ import annotations

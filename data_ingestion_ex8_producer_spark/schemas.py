@@ -10,7 +10,7 @@ Three artifacts, mirroring the reference's three-layer schema system
   the namespace is a reference quirk preserved for wire parity).
 * ``BRONZE_SCHEMA`` — StructType of the bronze frame; nullable exactly on
   the 5 Avro union fields.  ``RAW_BACEN_HEADER`` is the landing files' header
-  before sanitization, the one header the stream accepts.
+  before sanitization.
 * ``silver_columns()`` — typed projection realizing the *intent* of the
   reference's dead-code type map (``settings.py:22-37``): int casts for counts,
   decimal-comma parse for ``indice``, a proper quarter date.  Additive engine

@@ -176,12 +176,14 @@ class AvroDatumDirDataSource(DataSource):
 
 def read_datum_file(path: str) -> list[bytes]:
     """Decode one length-framed datum file back to its payload list (test /
-    downstream-consumer helper)."""
+    downstream-consumer helper).  A truncated frame raises ``ValueError``."""
     out = []
     with open(path, "rb") as fh:
-        while True:
-            head = fh.read(4)
-            if not head:
-                return out
-            (length,) = struct.unpack(">I", head)
-            out.append(fh.read(length))
+        while head := fh.read(4):
+            length = int.from_bytes(head, "big")
+            payload = fh.read(length)
+            if len(head) < 4 or len(payload) < length:
+                offset = fh.tell() - len(head) - len(payload)
+                raise ValueError(f"{path}: truncated datum frame at offset {offset}")
+            out.append(payload)
+    return out

@@ -1,5 +1,5 @@
 """Reclamacoes CSV source: the reference's scan semantics (S1/S2, SURVEY.md
-§2) as declarative reader options, batch and streaming.
+§2), one scan for batch and stream.
 
 Reference behavior being reproduced:
 * ``;``-delimited, ISO-8859-1, first row is the header (``app.py:121-124``);
@@ -8,141 +8,127 @@ Reference behavior being reproduced:
 * empty strings -> NULL in every kept column (``app.py:131``);
 * only ``*.csv`` keys are picked up (``app.py:94-99``).
 
-The header contract lives in one function, ``bronze_exprs``: batch applies
-it to each file's own header line, stream to the one canonical raw header
-it accepts.  Unlike the reference (which re-reads every file forever and
-materializes whole objects in memory, ``app.py:121,176-196``), the streaming
-variant is a checkpointed file source: once-per-file, incremental listing,
-splittable reads.  ``maxFilesPerTrigger`` bounds micro-batch size at scale.
+Batch and stream list the ``*.csv`` files with Spark's ``binaryFile``
+source and turn each file's bytes into bronze rows in one ``mapInArrow``
+pass, ``_parse``: the header contract, applied to every file's own header.
+Unlike the reference (which re-reads every file forever,
+``app.py:176-196``), the stream is a checkpointed file source: once-per-file,
+incremental listing.  ``maxFilesPerTrigger`` bounds micro-batch size.
+
+Trade-off: a file is one row and one task, so reads are not splittable and
+a file is held whole while it is parsed, as the reference holds whole
+objects (``app.py:121``).  A file larger than
+``spark.sql.sources.binaryFile.maxLength`` (2 GiB by default) fails its task.
 """
 
 from __future__ import annotations
 
 import csv
-from functools import reduce
+import io
+from collections.abc import Iterator
 
+import pyarrow as pa
+from pyarrow import csv as pa_csv
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import CHUNK_SIZE
 from ..functions.names import sanitize_columns
-from ..schemas import BRONZE_SCHEMA, FIELD_ORDER, RAW_BACEN_HEADER
+from ..schemas import FIELD_ORDER
 
-_READER_OPTIONS = {
-    "sep": ";",
-    "encoding": "ISO-8859-1",
-    "header": "true",
-    # Reference: csv.DictReader default quoting.  PERMISSIVE loads a short
-    # or malformed row with NULLs instead of failing the file (app.py:136-139
-    # abandons the rest of a file on any parse error); a row left without a
-    # required field is then skipped, uncounted, by the encode kernel.
-    "mode": "PERMISSIVE",
-}
+_ENCODING = "ISO-8859-1"
+# binaryFile's fixed schema: a file stream needs its schema up front.
+_FILES_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+# Every bronze column nullable: a NULL required field reaches the encode
+# kernel, which skips that row (the reference's DatumWriter error path).
+_BRONZE_DDL = ", ".join(f"{name} string" for name in FIELD_ORDER)
 
 
-def _positional_schema(n: int) -> StructType:
-    return StructType([StructField(f"_c{i}", StringType(), True) for i in range(n)])
+def _parse(content: bytes) -> pa.Table | None:
+    """The header contract: one landing file's bytes -> the 14 bronze
+    columns in ``FIELD_ORDER``, read as the reference's per-file
+    ``csv.DictReader(delimiter=';')`` reads it.
 
-
-def _split_header(header_line: str) -> list[str]:
-    return next(csv.reader([header_line], delimiter=";"), [])
-
-
-def bronze_exprs(header_line: str) -> list[str]:
-    """The header contract: a raw header line -> SQL select expressions for
-    the 14 bronze columns in ``FIELD_ORDER``, over a frame whose columns are
-    positional (``_c0``...).
-
-    Names are sanitized (``app.py:129``) with ``csv.DictReader`` last-wins on
-    collisions (``Ano;ANO`` keeps the second), only the whitelisted bronze
-    names are kept (``app.py:130``), empty strings become NULL
-    (``app.py:131``) and fields the header lacks become NULL (they then fail
-    Avro encode for non-nullable fields, same surface as the reference's
-    DatumWriter error path).  Strings for ``selectExpr`` rather than
-    ``Column`` objects: building 14 Columns costs ~60 Py4J calls per scan.
+    Names are sanitized (``app.py:129``) with last-wins on collisions
+    (``Ano;ANO`` keeps the second), only the whitelisted bronze names are
+    kept (``app.py:130``), empty strings become NULL (``app.py:131``) and a
+    field the header lacks is NULL.  A file without a header (zero bytes
+    or a blank first line) gives no rows.  ``pyarrow.csv`` parses the body;
+    it cannot pad a ragged row, so those rows are collected, re-read with
+    ``csv``, padded with NULL or cut to the header as ``DictReader`` does,
+    and appended.
     """
-    index = {name: i for i, name in enumerate(sanitize_columns(_split_header(header_line)))}
-    return [
-        f"nullif(_c{index[c]}, '') AS {c}" if c in index else f"CAST(NULL AS STRING) AS {c}"
+    text = io.TextIOWrapper(io.BytesIO(content), _ENCODING, newline="")
+    header = next(csv.reader(text, delimiter=";"), None)
+    if not header:
+        return None
+    index = {name: i for i, name in enumerate(sanitize_columns(header))}
+    names = [f"c{i}" for i in range(len(header))]
+    ragged: list[str] = []
+
+    def keep_ragged(row) -> str:
+        ragged.append(row.text)
+        return "skip"
+
+    if not content.endswith(b"\n"):
+        content += b"\n"  # skip_rows cannot pass an unterminated header line
+    body = pa_csv.read_csv(
+        io.BytesIO(content),
+        read_options=pa_csv.ReadOptions(
+            skip_rows=1, column_names=names, encoding=_ENCODING, use_threads=False
+        ),
+        parse_options=pa_csv.ParseOptions(
+            delimiter=";", newlines_in_values=True, invalid_row_handler=keep_ragged
+        ),
+        convert_options=pa_csv.ConvertOptions(
+            column_types=dict.fromkeys(names, pa.string()),
+            null_values=[""],
+            strings_can_be_null=True,
+        ),
+    )
+    table = pa.Table.from_arrays(
+        [
+            body.column(index[c]) if c in index else pa.nulls(body.num_rows, pa.string())
+            for c in FIELD_ORDER
+        ],
+        names=FIELD_ORDER,
+    )
+    if not ragged:
+        return table
+    width = len(header)
+    rows = [(next(csv.reader([line], delimiter=";")) + [""] * width)[:width] for line in ragged]
+    cells = [
+        pa.array([row[index[c]] or None for row in rows] if c in index else [None] * len(rows),
+                 pa.string())
         for c in FIELD_ORDER
     ]
+    return pa.concat_tables([table, pa.Table.from_arrays(cells, names=FIELD_ORDER)])
 
 
-def _csv_headers(spark: SparkSession, path: str) -> dict[str, list[str]]:
-    """``*.csv`` files under ``path`` (a file, directory or glob), grouped by
-    their first line read as ISO-8859-1.  Listed once on the driver through
-    the Hadoop FileSystem, so local paths and s3a behave alike.  Hidden
-    (``_``/``.``) names are skipped as Spark's own listing does; empty files
-    have no header and no rows, so they are left out."""
-    jvm = spark.sparkContext._jvm
-    root = jvm.org.apache.hadoop.fs.Path(path)
-    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    files = []
-    for status in fs.globStatus(root) or []:
-        children = fs.listStatus(status.getPath()) if status.isDirectory() else [status]
-        files += [c.getPath() for c in children if c.isFile()]
-    groups: dict[str, list[str]] = {}
-    for f in sorted(files, key=lambda p: p.toString()):
-        name = f.getName()
-        if not name.endswith(".csv") or name.startswith(("_", ".")):
-            continue
-        stream = fs.open(f)
-        try:
-            header = jvm.java.io.BufferedReader(
-                jvm.java.io.InputStreamReader(stream, "ISO-8859-1")
-            ).readLine()
-        finally:
-            stream.close()
-        if header is not None:
-            groups.setdefault(header, []).append(f.toString())
-    return groups
+def _parse_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        for content in batch.column(0).to_pylist():
+            table = _parse(content)
+            if table is not None:
+                yield from table.to_batches()
+
+
+def _bronze(files: DataFrame) -> DataFrame:
+    return files.select("content").mapInArrow(_parse_files, _BRONZE_DDL)
 
 
 def read_reclamacoes_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch scan of a reclamacoes CSV file/directory (bronze).
-
-    Every file is mapped through its own header (``bronze_exprs``), the
-    way the reference's per-file ``csv.DictReader`` does: files are grouped
-    by header line, each group is one positional scan (Spark's own header
-    handling would rename duplicates ``Ano``/``ANO`` -> ``Ano0``/``ANO1``),
-    and the groups are unioned.  The scan reads exactly the listed files, so
-    a non-``*.csv`` neighbour is never ingested.  An empty landing zone gives
-    an empty bronze frame with the full schema (the reference would loop
-    forever doing nothing, ``app.py:187``).
-    """
-    frames = [
-        spark.read.options(**_READER_OPTIONS)
-        .option("enforceSchema", "true")  # positional: bronze_exprs maps the names
-        .schema(_positional_schema(len(_split_header(header))))
-        .csv(files)
-        .selectExpr(*bronze_exprs(header))
-        for header, files in _csv_headers(spark, path).items()
-    ]
-    if not frames:
-        return spark.createDataFrame([], BRONZE_SCHEMA)
-    return reduce(DataFrame.union, frames)
+    """Batch scan of a reclamacoes CSV file, directory or glob (bronze)."""
+    return _bronze(spark.read.format("binaryFile").option("pathGlobFilter", "*.csv").load(path))
 
 
 def read_reclamacoes_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming file-source scan (S1: listing, ``*.csv`` filter, new-file
-    tracking all handled by FileStreamSource + checkpoint).
-
-    A stream needs its schema before any file arrives, so it accepts one
-    header: the canonical raw BACEN header (``schemas.RAW_BACEN_HEADER``),
-    checked per file with ``enforceSchema=false``.  A file with any other
-    header (reordered, extra or missing columns) fails the micro-batch with
-    Spark's ``CSV header does not conform to the schema`` error instead of
-    being re-mapped by position; land such files through
-    ``read_reclamacoes_batch``, which honours each file's own header.  The
-    accepted columns go through the same ``bronze_exprs`` contract.
-    """
-    df = (
-        spark.readStream.options(**_READER_OPTIONS)
-        .option("enforceSchema", "false")
+    """Streaming scan of a reclamacoes landing directory (bronze): listing,
+    the ``*.csv`` filter and new-file tracking are the file source's and its
+    checkpoint's."""
+    return _bronze(
+        spark.readStream.format("binaryFile")
+        .schema(_FILES_SCHEMA)
         .option("pathGlobFilter", "*.csv")
         .option("maxFilesPerTrigger", str(CHUNK_SIZE))
-        .schema(StructType([StructField(n, StringType(), True) for n in RAW_BACEN_HEADER]))
-        .csv(path)
+        .load(path)
     )
-    positional = df.toDF(*_positional_schema(len(RAW_BACEN_HEADER)).fieldNames())
-    return positional.selectExpr(*bronze_exprs(";".join(RAW_BACEN_HEADER)))

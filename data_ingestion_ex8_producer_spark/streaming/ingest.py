@@ -11,18 +11,24 @@ Reference loop -> Spark mapping (SURVEY.md §3):
                                        throttle is deliberately NOT reproduced
   per-row Avro datum                -> sinks.encode.avro_value_frame
   keyless Kafka produce + flush     -> Kafka sink, epoch-committed
-  skip-and-log on bad record        -> per-row skip inside the encode kernel
-                                       / PERMISSIVE scan (strictly narrower
-                                       blast radius than the reference's
-                                       drop-rest-of-chunk, app.py:157-158)
+  skip-and-log on bad record        -> per-row skip inside the encode kernel;
+                                       short rows pad with NULL (strictly
+                                       narrower blast radius than the
+                                       reference's drop-rest-of-chunk,
+                                       app.py:157-158)
 
 Sinks: ``kafka`` (production) and ``parquet`` (broker-less; the file sink's
 ``_spark_metadata`` log commits each micro-batch exactly once).
+
+The source reads each landing file whole (``sources/csv_source.py``), so a
+micro-batch's ``numInputRows`` counts files; the CSV rows it parsed are
+``observedMetrics["ingest"]["rows_in"]``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import PROCESS_INTERVAL_SECONDS, EngineConfig
@@ -61,8 +67,11 @@ def build_ingest_stream(
 ) -> StreamingQuery:
     """Start the ingestion stream into ``sink`` (see ``sink_options``)."""
     fmt, options = sink_options(EngineConfig(), sink, output_path)
+    bronze = read_reclamacoes_stream(spark, source_path).observe(
+        "ingest", F.count(F.lit(1)).alias("rows_in")
+    )
     return (
-        avro_value_frame(read_reclamacoes_stream(spark, source_path))
+        avro_value_frame(bronze)
         .writeStream.format(fmt)
         .options(**options)
         .option("checkpointLocation", checkpoint_dir)

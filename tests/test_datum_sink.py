@@ -224,3 +224,20 @@ def test_stream_recommit_clears_orphans_after_crash(tmp_path: Path) -> None:
     assert files == ["part-cccc.bin"]
     manifest = (epoch_dir / "_SUCCESS").read_text()
     assert "part-cccc.bin" in manifest and "part-dead.bin" not in manifest
+
+
+@pytest.mark.parametrize(
+    "tail, offset",
+    [
+        (b"\x00\x00\x00\x0aabcde", 9),  # declares 10 payload bytes, 5 present
+        (b"\x00\x00", 9),  # a 2-byte tail where a length header belongs
+    ],
+    ids=["short_payload", "short_length"],
+)
+def test_read_datum_file_rejects_truncated_frame(tmp_path: Path, tail: bytes, offset: int) -> None:
+    """A truncated frame fails loudly, naming the file and the frame's
+    offset, instead of returning a short payload or a bare struct.error."""
+    path = tmp_path / "part.avro"
+    path.write_bytes(b"\x00\x00\x00\x05hello" + tail)
+    with pytest.raises(ValueError, match=f"{path.name}.*offset {offset}"):
+        read_datum_file(str(path))

@@ -212,9 +212,9 @@ def test_header_only_file(spark, tmp_path: Path) -> None:
 
 
 def test_short_rows_pad_with_nulls(spark, tmp_path: Path) -> None:
-    """Rows with fewer fields than the header pad with NULLs (PERMISSIVE),
-    instead of killing the rest of the file like the reference's
-    abandon-on-error policy (app.py:136-139)."""
+    """Rows with fewer fields than the header pad with NULLs, as
+    ``csv.DictReader`` does, instead of killing the rest of the file like
+    the reference's abandon-on-error policy (app.py:136-139)."""
     path = tmp_path / "short.csv"
     content = RAW_HEADER + "\n2024;1º;Cat\n"
     path.write_bytes(content.encode("iso-8859-1"))
@@ -223,3 +223,72 @@ def test_short_rows_pad_with_nulls(spark, tmp_path: Path) -> None:
     assert row["ano"] == "2024"
     assert row["categoria"] == "Cat"
     assert row["tipo"] is None
+
+
+_CELLS = ROWS[0].split(";")[:14]
+_HEADER = ";".join(RAW_BACEN_HEADER)
+
+
+def _line(**cells: str) -> str:
+    """``_CELLS`` with the named bronze fields replaced, as one CSV line."""
+    return ";".join(cells.get(name, cell) for name, cell in zip(FIELD_ORDER, _CELLS))
+
+
+def _record(**fields) -> tuple:
+    return tuple(fields.get(name, cell) for name, cell in zip(FIELD_ORDER, _CELLS))
+
+
+# name -> ({file name: ISO-8859-1 text}, the decoded records replay commits)
+_PARSE_CASES = {
+    "quoted_semicolon": (
+        {"a.csv": f'{_HEADER}\n{_line(categoria=chr(34) + "Cat;X" + chr(34))}\n'},
+        [_record(categoria="Cat;X")],
+    ),
+    "crlf": (
+        {"a.csv": f"{_HEADER}\r\n{_line()}\r\n{_line(instituicao_financeira='BANCO Z')}\r\n"},
+        [_record(), _record(instituicao_financeira="BANCO Z")],
+    ),
+    "blank_lines": (
+        {"a.csv": f"{_HEADER}\n\n{_line()}\n\n\n{_line(ano='2023')}\n\n"},
+        [_record(), _record(ano="2023")],
+    ),
+    "long_row_drops_extra_cells": (
+        {"a.csv": f"{_HEADER}\n{_line()};extra;cells\n"},
+        [_record()],
+    ),
+    "nullable_tail_missing": (
+        {"a.csv": f"{_HEADER}\n{';'.join(_CELLS[:12])}\n"},
+        [_record(quantidade_de_clientes_ccs=None, quantidade_de_clientes_scr=None)],
+    ),
+    "zero_byte_file": (
+        {"empty.csv": "", "a.csv": f"{_HEADER}\n{_line()}\n"},
+        [_record()],
+    ),
+    "unterminated_header_only": (
+        {"empty.csv": _HEADER, "a.csv": f"{_HEADER}\n{_line()}"},
+        [_record()],
+    ),
+    "hidden_files_ignored": (
+        {
+            "_x.csv": f"{_HEADER}\n{_line(ano='1999')}\n",
+            ".y.csv": f"{_HEADER}\n{_line(ano='1998')}\n",
+            "a.csv": f"{_HEADER}\n{_line()}\n",
+        },
+        [_record()],
+    ),
+    "quoted_newline": (
+        {"a.csv": f'{_HEADER}\n{_line(instituicao_financeira=chr(34) + "BANCO" + chr(10) + "A" + chr(34))}\n'},
+        [_record(instituicao_financeira="BANCO\nA")],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", list(_PARSE_CASES))
+def test_parse_semantics(spark, tmp_path: Path, case: str) -> None:
+    """The reference's ``csv.DictReader(delimiter=';')`` semantics, end to
+    end: the landed files replay to exactly these decoded records."""
+    files, expected = _PARSE_CASES[case]
+    for name, text in files.items():
+        (tmp_path / name).write_bytes(text.encode("iso-8859-1"))
+    got = Counter(tuple(r) for r in decode_value_frame(replay_all_batch(spark, str(tmp_path))).collect())
+    assert got == Counter(expected)
