@@ -1,4 +1,4 @@
-"""Minimal Avro *binary datum* codec for flat string/nullable-string records.
+"""Avro *binary datum* codec for the reclamacoes record.
 
 Implements exactly the wire format the reference emits per row
 (``app.py:147-153``): a raw Avro binary datum — no object-container header,
@@ -12,17 +12,30 @@ Written from the public Avro 1.12 specification (binary encoding section):
 * ``union`` — long index of the branch (0 = null here), then the branch datum;
 * ``record`` — field datums concatenated in schema order, no framing.
 
-Kept dependency-free on purpose: the container ships no avro-python /
-spark-avro, and 30 lines of spec beat a vendored library.  It is the only
-encoder and decoder on the ingest path (``sinks/encode.py``,
-``sources/kafka_source.py``); the golden tests pin its bytes.
+The container ships no avro-python / spark-avro, so the codec is written
+here, in two forms:
+
+* ``encode_arrow`` / ``decode_arrow`` — the engine's kernels, one Arrow
+  batch at a time with pyarrow compute and numpy (``mapInArrow`` in
+  ``sinks/encode.py``, ``streaming/ingest.py`` and
+  ``sources/kafka_source.py``);
+* ``encode_record`` / ``decode_record`` — one record at a time, the
+  spec-level references the golden tests and the kernel pin tests compare
+  against.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-from ..schemas import RECLAMACOES_FIELDS
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
+from ..schemas import FIELD_ORDER, RECLAMACOES_FIELDS
+
+# An Avro long is 64 bits: ten 7-bit groups at most.
+_MAX_VARINT_BYTES = 10
 
 
 def zigzag_varint(n: int) -> bytes:
@@ -40,16 +53,18 @@ def zigzag_varint(n: int) -> bytes:
 
 
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = 0
-    acc = 0
+    """One zig-zag varint at ``pos``: (value, position after it).  A datum
+    that ends inside it raises IndexError."""
+    acc = shift = 0
     while True:
         byte = buf[pos]
         pos += 1
         acc |= (byte & 0x7F) << shift
         if not byte & 0x80:
-            break
+            return (acc >> 1) ^ -(acc & 1), pos
         shift += 7
-    return (acc >> 1) ^ -(acc & 1), pos
+        if shift == 7 * _MAX_VARINT_BYTES:
+            raise ValueError(f"varint longer than {_MAX_VARINT_BYTES} bytes at byte {pos}")
 
 
 def encode_string(value: str) -> bytes:
@@ -81,86 +96,188 @@ def encode_record(values: dict[str, str | None]) -> bytes:
 
 
 def decode_record(datum: bytes) -> dict[str, str | None]:
-    """Inverse of encode_record (tests + Kafka read-back path)."""
+    """Inverse of encode_record.  A malformed datum raises ValueError naming
+    the fault: truncated, union index out of range, negative length,
+    varint over 10 bytes, invalid UTF-8 or trailing bytes."""
     values: dict[str, str | None] = {}
     pos = 0
-    for name, nullable in RECLAMACOES_FIELDS:
-        if nullable:
-            index, pos = _read_varint(datum, pos)
-            if index == 0:
-                values[name] = None
-                continue
-        length, pos = _read_varint(datum, pos)
-        values[name] = datum[pos : pos + length].decode("utf-8")
-        pos += length
+    try:
+        for name, nullable in RECLAMACOES_FIELDS:
+            if nullable:
+                index, pos = _read_varint(datum, pos)
+                if index == 0:
+                    values[name] = None
+                    continue
+                if index != 1:
+                    raise ValueError(f"union index {index} out of range for field {name!r}")
+            length, pos = _read_varint(datum, pos)
+            end = pos + length
+            if not pos <= end <= len(datum):
+                if length < 0:
+                    raise ValueError(f"negative length {length} for field {name!r}")
+                raise ValueError(f"truncated datum: field {name!r} runs past byte {len(datum)}")
+            values[name] = datum[pos:end].decode("utf-8")
+            pos = end
+    except IndexError:
+        raise ValueError(f"truncated datum: field {name!r} runs past byte {len(datum)}") from None
+    except UnicodeDecodeError as exc:
+        raise ValueError(f"invalid UTF-8 in field {name!r}") from exc
     if pos != len(datum):
         raise ValueError(f"trailing bytes: consumed {pos} of {len(datum)}")
     return values
 
 
-_VARINT_CACHE: dict[int, bytes] = {}
+def _length_prefixes(lengths: np.ndarray, present: np.ndarray | None) -> pa.Array:
+    """Per row, the bytes that go before a string field's UTF-8 bytes: the
+    zig-zag varint of its byte length, behind the union index for a
+    nullable field (``present`` given) — ``\\x02`` + varint where the value
+    is present, ``\\x00`` alone where it is NULL."""
+    z = lengths.astype(np.uint64) << np.uint64(1)  # zig-zag of a length >= 0
+    width = np.ones(len(z), np.int64)
+    for k in range(1, 5):  # int32 lengths take at most 5 varint bytes
+        width += z >= np.uint64(1 << (7 * k))
+    start = np.zeros(len(z) + 1, np.int64)
+    if present is None:
+        np.cumsum(width, out=start[1:])
+        data = np.empty(start[-1], np.uint8)
+        rows = slice(None)
+        at = start[:-1]
+    else:
+        np.cumsum(np.where(present, width + 1, 1), out=start[1:])
+        data = np.empty(start[-1], np.uint8)
+        data[start[:-1]] = np.where(present, 2, 0).astype(np.uint8)
+        rows = present
+        at = start[:-1][present] + 1
+    z, width = z[rows], width[rows]
+    for k in range(5):
+        more = width > k
+        if not more.any():
+            break
+        byte = (z[more] >> np.uint64(7 * k)) & np.uint64(0x7F)
+        byte |= np.where(width[more] > k + 1, np.uint64(0x80), np.uint64(0))
+        data[at[more] + k] = byte.astype(np.uint8)
+    return pa.Array.from_buffers(
+        pa.binary(), len(start) - 1,
+        [None, pa.py_buffer(start.astype(np.int32)), pa.py_buffer(data)],
+    )
 
 
-def _len_varint(n: int) -> bytes:
-    """zigzag_varint of a string length, memoized — lengths repeat heavily
-    across a corpus, so the per-row cost collapses to one dict hit."""
-    b = _VARINT_CACHE.get(n)
-    if b is None:
-        b = _VARINT_CACHE[n] = zigzag_varint(n)
-    return b
+def encode_arrow(bronze: pa.RecordBatch) -> pa.Array:
+    """Bronze batch (the 14 string columns, by name) -> one raw datum per
+    row, ``binary``.  Byte-identical to ``encode_record`` row by row; a row
+    with a NULL required field gets a NULL datum, which the caller filters
+    (the reference's DatumWriter error path, per row)."""
+    parts = []
+    for name, nullable in RECLAMACOES_FIELDS:
+        value = bronze.column(name).cast(pa.binary())
+        offsets = np.frombuffer(value.buffers()[1], np.int32)[value.offset : value.offset + len(value) + 1]
+        lengths = np.diff(offsets)
+        if nullable:
+            present = value.is_valid().to_numpy(zero_copy_only=False)
+            parts += [_length_prefixes(lengths, present), value.fill_null(b"")]
+        else:
+            parts += [_length_prefixes(lengths, None), value]
+    # A NULL required value makes the joined datum NULL (null_handling="emit_null").
+    return pc.binary_join_element_wise(*parts, b"")
+
+
+def _read_varints(
+    data: np.ndarray, pos: np.ndarray, end: np.ndarray, active: np.ndarray, name: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The zig-zag varint at ``pos`` of every ``active`` row: (values, the
+    position after each).  Inactive rows read nothing and give 0."""
+    acc = np.zeros(len(pos), np.uint64)
+    after = pos.copy()
+    rows = np.flatnonzero(active)
+    for k in range(_MAX_VARINT_BYTES):
+        if not len(rows):
+            break
+        at = pos[rows] + k
+        short = at >= end[rows]
+        if short.any():
+            raise ValueError(f"truncated datum at row {rows[short][0]}: field {name!r}")
+        byte = data[at]
+        acc[rows] |= (byte & 0x7F).astype(np.uint64) << np.uint64(7 * k)
+        after[rows] = at + 1
+        rows = rows[byte >= 0x80]
+    if len(rows):
+        raise ValueError(
+            f"varint longer than {_MAX_VARINT_BYTES} bytes at row {rows[0]}: field {name!r}"
+        )
+    value = (acc >> np.uint64(1)).astype(np.int64) ^ -(acc & np.uint64(1)).astype(np.int64)
+    return value, after
+
+
+def decode_arrow(values: pa.Array) -> pa.RecordBatch:
+    """``binary`` datums -> bronze batch (14 ``string`` columns in
+    ``FIELD_ORDER``), the inverse of ``encode_arrow``.  Raises ValueError on
+    the faults ``decode_record`` names, and on a NULL datum."""
+    if values.null_count:
+        row = values.is_null().to_numpy(zero_copy_only=False).argmax()
+        raise ValueError(f"NULL value at row {row}: every row must be one datum")
+    values = values.cast(pa.binary())
+    n = len(values)
+    offsets = np.frombuffer(values.buffers()[1], np.int32)[values.offset : values.offset + n + 1]
+    buffer = values.buffers()[2]
+    data = np.frombuffer(buffer, np.uint8) if buffer is not None else np.empty(0, np.uint8)
+    pos = offsets[:-1].astype(np.int64)
+    end = offsets[1:].astype(np.int64)
+    every = np.ones(n, bool)
+    columns = []
+    for name, nullable in RECLAMACOES_FIELDS:
+        present = every
+        if nullable:
+            index, pos = _read_varints(data, pos, end, every, name)
+            bad = (index != 0) & (index != 1)
+            if bad.any():
+                row = np.flatnonzero(bad)[0]
+                raise ValueError(f"union index {index[row]} out of range at row {row}: field {name!r}")
+            present = index == 1
+        length, pos = _read_varints(data, pos, end, present, name)
+        if (length < 0).any():
+            row = np.flatnonzero(length < 0)[0]
+            raise ValueError(f"negative length {length[row]} at row {row}: field {name!r}")
+        if (pos + length > end).any():
+            row = np.flatnonzero(pos + length > end)[0]
+            raise ValueError(f"truncated datum at row {row}: field {name!r} needs {length[row]} bytes")
+        # Field i of row r spans [pos[r], pos[r] + length[r]): the string
+        # view over the datum bytes with offsets pos, end, pos, end, ... holds
+        # every field at an even index, so one take gathers the column.
+        bounds = np.zeros(max(2 * n, 1), np.int32)
+        bounds[: 2 * n : 2], bounds[1 : 2 * n : 2] = pos, pos + length
+        view = pa.StringArray.from_buffers(max(2 * n - 1, 0), pa.py_buffer(bounds), buffer)
+        rows = np.arange(0, 2 * n, 2)
+        column = view.take(pa.array(rows, mask=None if present is every else ~present))
+        try:
+            column.validate(full=True)
+        except pa.ArrowInvalid as exc:
+            raise ValueError(f"invalid UTF-8 in field {name!r}: {exc}") from exc
+        columns.append(column)
+        pos = pos + length
+    if (pos != end).any():
+        row = np.flatnonzero(pos != end)[0]
+        raise ValueError(
+            f"trailing bytes at row {row}: consumed {pos[row] - offsets[row]} of "
+            f"{end[row] - offsets[row]}"
+        )
+    return pa.RecordBatch.from_arrays(columns, names=FIELD_ORDER)
 
 
 def encode_batches(batches: Iterator, columns: list[str]) -> Iterator:
-    """mapInPandas body: DataFrame[bronze columns] -> DataFrame[value binary].
-
-    Arrow-batched; emits one raw Avro datum per row, skipping rows that fail
-    to encode (parity with the reference's skip-and-log policy, but per-ROW
-    instead of per-chunk — a documented strict improvement, SURVEY.md §3).
-
-    Encodes COLUMN-WISE, not row-wise: per field, one vectorized null mask
-    + one list comprehension building that field's wire piece for every
-    row (union tag + memoized length varint + UTF-8 bytes), then a single
-    C-level ``b"".join`` per row over the 14 pieces.  Byte-identical to
-    per-row ``encode_record`` (pinned by the equivalence test in
-    tests/test_avro_codec.py) and ~2.3x faster.  In a traced 100k-row
-    replay on a 4-vCPU VM the encode layer took 0.68 s of ~3.5 s, about a
-    fifth of the pipeline; scan and sink write cost more.
-    Rows with a null in a non-nullable field are skipped, same policy and
-    ordering as the per-row path.
-    """
+    """pandas adapter over ``encode_arrow`` for in-process callers holding
+    pandas frames: DataFrame[bronze columns] -> DataFrame[value] of the rows
+    that encode, in order.  A field not in ``columns`` is NULL; each column
+    is typed ``string`` so an all-NULL one is not inferred as ``null``."""
     import pandas as pd
 
-    colset = set(columns)
     for pdf in batches:
-        m = len(pdf)
-        piece_cols: list[list[bytes]] = []
-        bad: set[int] = set()
-        for name, nullable in RECLAMACOES_FIELDS:
-            if name in colset:
-                s = pdf[name]
-                isna = s.isna().tolist()
-                raw = s.tolist()
-                enc = [
-                    None if na else v.encode("utf-8")
-                    for na, v in zip(isna, raw)
-                ]
-            else:
-                enc = [None] * m
-            if nullable:
-                piece_cols.append(
-                    [
-                        b"\x00" if e is None else b"\x02" + _len_varint(len(e)) + e
-                        for e in enc
-                    ]
-                )
-            else:
-                bad.update(i for i, e in enumerate(enc) if e is None)
-                piece_cols.append(
-                    [b"" if e is None else _len_varint(len(e)) + e for e in enc]
-                )
-        rows = zip(*piece_cols)
-        if bad:
-            out = [b"".join(t) for i, t in enumerate(rows) if i not in bad]
-        else:
-            out = [b"".join(t) for t in rows]
-        yield pd.DataFrame({"value": out}, dtype=object)
+        bronze = pa.RecordBatch.from_arrays(
+            [
+                pa.array(pdf[name], pa.string(), from_pandas=True)
+                if name in columns
+                else pa.nulls(len(pdf), pa.string())
+                for name in FIELD_ORDER
+            ],
+            names=FIELD_ORDER,
+        )
+        yield pd.DataFrame({"value": encode_arrow(bronze).drop_null().to_pylist()}, dtype=object)

@@ -9,8 +9,11 @@ Reference behavior being reproduced:
 * only ``*.csv`` keys are picked up (``app.py:94-99``).
 
 Batch and stream list the ``*.csv`` files with Spark's ``binaryFile``
-source and turn each file's bytes into bronze rows in one ``mapInArrow``
-pass, ``_parse``: the header contract, applied to every file's own header.
+source (``landing_files``, ``landing_file_stream``) and turn each file's
+bytes into bronze rows with ``_parse``: the header contract, applied to
+every file's own header.  ``read_reclamacoes_batch`` runs it alone in one
+``mapInArrow`` pass; the ingest path (``streaming/ingest.py``) runs it and
+the Avro encoder in the same pass, so bronze never returns to the JVM.
 Unlike the reference (which re-reads every file forever,
 ``app.py:176-196``), the stream is a checkpointed file source: once-per-file,
 incremental listing.  ``maxFilesPerTrigger`` bounds micro-batch size.
@@ -38,8 +41,8 @@ from ..schemas import FIELD_ORDER
 _ENCODING = "ISO-8859-1"
 # binaryFile's fixed schema: a file stream needs its schema up front.
 _FILES_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
-# Every bronze column nullable: a NULL required field reaches the encode
-# kernel, which skips that row (the reference's DatumWriter error path).
+# Every bronze column nullable: a NULL required field reaches the encoder,
+# which gives that row a NULL datum (the reference's DatumWriter error path).
 _BRONZE_DDL = ", ".join(f"{name} string" for name in FIELD_ORDER)
 
 
@@ -104,31 +107,40 @@ def _parse(content: bytes) -> pa.Table | None:
     return pa.concat_tables([table, pa.Table.from_arrays(cells, names=FIELD_ORDER)])
 
 
-def _parse_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+def parse_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
+    """``binaryFile`` ``content`` batches -> one bronze table per landing
+    file that has a header (``_parse``)."""
     for batch in batches:
         for content in batch.column(0).to_pylist():
             table = _parse(content)
             if table is not None:
-                yield from table.to_batches()
+                yield table
 
 
-def _bronze(files: DataFrame) -> DataFrame:
-    return files.select("content").mapInArrow(_parse_files, _BRONZE_DDL)
+def _bronze_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for table in parse_files(batches):
+        yield from table.to_batches()
 
 
-def read_reclamacoes_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch scan of a reclamacoes CSV file, directory or glob (bronze)."""
-    return _bronze(spark.read.format("binaryFile").option("pathGlobFilter", "*.csv").load(path))
+def landing_files(spark: SparkSession, path: str) -> DataFrame:
+    """The ``*.csv`` files under a path, directory or glob: one
+    ``binaryFile`` row per file."""
+    return spark.read.format("binaryFile").option("pathGlobFilter", "*.csv").load(path)
 
 
-def read_reclamacoes_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming scan of a reclamacoes landing directory (bronze): listing,
-    the ``*.csv`` filter and new-file tracking are the file source's and its
-    checkpoint's."""
-    return _bronze(
+def landing_file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """The ``*.csv`` files of a landing directory as they land: listing,
+    the filter and new-file tracking are the file source's and its
+    checkpoint's; ``maxFilesPerTrigger`` bounds a micro-batch."""
+    return (
         spark.readStream.format("binaryFile")
         .schema(_FILES_SCHEMA)
         .option("pathGlobFilter", "*.csv")
         .option("maxFilesPerTrigger", str(CHUNK_SIZE))
         .load(path)
     )
+
+
+def read_reclamacoes_batch(spark: SparkSession, path: str) -> DataFrame:
+    """Batch scan of a reclamacoes CSV file, directory or glob (bronze)."""
+    return landing_files(spark, path).select("content").mapInArrow(_bronze_batches, _BRONZE_DDL)

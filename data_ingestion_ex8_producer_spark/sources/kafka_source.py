@@ -8,19 +8,23 @@ stream.  Layered so the Avro decode is testable without a broker:
   (require the spark-sql-kafka package; not present in this container).
 * ``decode_value_frame`` — turns any DataFrame with a ``value: binary``
   column (from Kafka, or from the parquet sink) back into bronze
-  reclamacoes rows with the engine's own Avro codec (``functions/avro_codec``,
-  pinned by the golden tests; spark-avro is not on this classpath).
+  reclamacoes rows in one ``mapInArrow`` pass over the engine's Arrow
+  decoder (``functions/avro_codec.decode_arrow``, pinned against the
+  golden-tested ``decode_record``; spark-avro is not on this classpath).
+  A malformed or NULL ``value`` fails the task with a ValueError naming
+  the fault.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import EngineConfig
-from ..functions.avro_codec import decode_record
-from ..schemas import BRONZE_SCHEMA, FIELD_ORDER
+from ..functions.avro_codec import decode_arrow
+from ..schemas import BRONZE_SCHEMA
 
 
 def read_kafka_stream(spark: SparkSession) -> DataFrame:
@@ -47,18 +51,12 @@ def read_kafka_batch(spark: SparkSession) -> DataFrame:
     )
 
 
+def _bronze_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        yield decode_arrow(batch.column(0))
+
+
 def decode_value_frame(df: DataFrame) -> DataFrame:
     """value: binary -> bronze reclamacoes rows (inverse of
     sinks.encode.avro_value_frame)."""
-
-    def decode_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            rows = [decode_record(bytes(v)) for v in pdf["value"]]
-            yield pd.DataFrame(
-                {name: [r[name] for r in rows] for name in FIELD_ORDER},
-                dtype=object,
-            )
-
-    return df.select("value").mapInPandas(decode_batches, BRONZE_SCHEMA)
+    return df.select("value").mapInArrow(_bronze_batches, BRONZE_SCHEMA)

@@ -9,9 +9,12 @@ Reference loop -> Spark mapping (SURVEY.md §3):
   60 s poll sleep                   -> trigger(processingTime="60 seconds")
   CHUNK_SIZE=10 + 20 s sleep        -> micro-batch boundaries; the 0.5 rows/s
                                        throttle is deliberately NOT reproduced
-  per-row Avro datum                -> sinks.encode.avro_value_frame
+  csv.DictReader + per-row Avro     -> one ``mapInArrow`` pass per landing
+  datum                                file: ``csv_source._parse`` then the
+                                       Arrow encoder (``sinks.encode``)
   keyless Kafka produce + flush     -> Kafka sink, epoch-committed
-  skip-and-log on bad record        -> per-row skip inside the encode kernel;
+  skip-and-log on bad record        -> a NULL required field gives a NULL
+                                       ``value``, filtered before the sink;
                                        short rows pad with NULL (strictly
                                        narrower blast radius than the
                                        reference's drop-rest-of-chunk,
@@ -21,19 +24,23 @@ Sinks: ``kafka`` (production) and ``parquet`` (broker-less; the file sink's
 ``_spark_metadata`` log commits each micro-batch exactly once).
 
 The source reads each landing file whole (``sources/csv_source.py``), so a
-micro-batch's ``numInputRows`` counts files; the CSV rows it parsed are
-``observedMetrics["ingest"]["rows_in"]``.
+micro-batch's ``numInputRows`` counts files.  The stream observes, on the
+same pass, the CSV rows it parsed and the rows it commits:
+``observedMetrics["ingest"]["rows_in"]`` and ``["rows_committed"]``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import PROCESS_INTERVAL_SECONDS, EngineConfig
-from ..sinks.encode import avro_value_frame
-from ..sources.csv_source import read_reclamacoes_batch, read_reclamacoes_stream
+from ..sinks.encode import value_batch
+from ..sources.csv_source import landing_file_stream, landing_files, parse_files
 
 
 def sink_options(
@@ -57,6 +64,18 @@ def sink_options(
     raise ValueError(f"unknown sink {sink!r}")
 
 
+def _encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for bronze in parse_files(batches):
+        yield from map(value_batch, bronze.combine_chunks().to_batches())
+
+
+def _datums(files: DataFrame) -> DataFrame:
+    """Landing files -> one ``value`` per CSV row, in one Python pass: each
+    file is parsed and encoded in the same ``mapInArrow`` worker.  A row
+    with a NULL required field has a NULL ``value``; callers filter it."""
+    return files.select("content").mapInArrow(_encode_files, "value binary")
+
+
 def build_ingest_stream(
     spark: SparkSession,
     source_path: str,
@@ -67,11 +86,13 @@ def build_ingest_stream(
 ) -> StreamingQuery:
     """Start the ingestion stream into ``sink`` (see ``sink_options``)."""
     fmt, options = sink_options(EngineConfig(), sink, output_path)
-    bronze = read_reclamacoes_stream(spark, source_path).observe(
-        "ingest", F.count(F.lit(1)).alias("rows_in")
+    datums = _datums(landing_file_stream(spark, source_path)).observe(
+        "ingest",
+        F.count(F.lit(1)).alias("rows_in"),
+        F.count("value").alias("rows_committed"),
     )
     return (
-        avro_value_frame(bronze)
+        datums.where("value IS NOT NULL")
         .writeStream.format(fmt)
         .options(**options)
         .option("checkpointLocation", checkpoint_dir)
@@ -85,4 +106,4 @@ def replay_all_batch(spark: SparkSession, source_path: str) -> DataFrame:
     regardless of checkpoint state — one cycle of the reference's
     re-ingest-forever loop (``app.py:176-196``), on demand instead of
     unbounded."""
-    return avro_value_frame(read_reclamacoes_batch(spark, source_path))
+    return _datums(landing_files(spark, source_path)).where("value IS NOT NULL")

@@ -8,16 +8,20 @@ header, no Confluent framing, ``app.py:147-153``).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from data_ingestion_ex8_producer_spark.functions.avro_codec import (
+    decode_arrow,
     decode_record,
+    encode_arrow,
     encode_record,
     encode_string,
     zigzag_varint,
 )
-from data_ingestion_ex8_producer_spark.schemas import RECLAMACOES_FIELDS
+from data_ingestion_ex8_producer_spark.schemas import FIELD_ORDER, RECLAMACOES_FIELDS
 
 FULL_ROW = {
     "ano": "2024",
@@ -138,3 +142,141 @@ def test_column_wise_batch_encoder_equals_per_row(rows: list[dict]) -> None:
         except TypeError:
             continue
     assert got == want
+
+
+# ---- Arrow kernels, pinned byte-for-byte against the per-record references --
+
+
+def _batch(rows: list[dict]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array([r[c] for r in rows], pa.string()) for c in FIELD_ORDER], names=FIELD_ORDER
+    )
+
+
+def _reference_datums(rows: list[dict]) -> list[bytes | None]:
+    """encode_record per row; None where it raises (a NULL required field)."""
+    out = []
+    for r in rows:
+        try:
+            out.append(encode_record(r))
+        except TypeError:
+            out.append(None)
+    return out
+
+
+def _assert_kernels_match(rows: list[dict]) -> None:
+    want = _reference_datums(rows)
+    assert encode_arrow(_batch(rows)).to_pylist() == want
+    datums = [d for d in want if d is not None]
+    decoded = decode_arrow(pa.array(datums, pa.binary()))
+    assert decoded.schema.names == FIELD_ORDER
+    assert decoded.to_pylist() == [decode_record(d) for d in datums]
+
+
+# Past 64 UTF-8 bytes a length takes a 2-byte varint (zigzag(64) = 128).
+long_text = st.text(max_size=150)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.fixed_dictionaries({name: st.one_of(st.none(), long_text) for name in FIELD_ORDER}),
+        max_size=20,
+    )
+)
+def test_arrow_kernels_equal_references(rows: list[dict]) -> None:
+    _assert_kernels_match(rows)
+
+
+@pytest.mark.parametrize("length", [63, 64, 8191, 8192])
+def test_arrow_kernels_varint_boundaries(length: int) -> None:
+    """Lengths on each side of the 1/2- and 2/3-byte varint boundaries, in a
+    required and a nullable field, ASCII and 2-byte UTF-8."""
+    rows = []
+    for text in ("x" * length, "é" * (length // 2) + "x" * (length % 2)):
+        row = dict(FULL_ROW, categoria=text, cnpj_if=text)
+        assert len(text.encode()) == length
+        rows.append(row)
+    _assert_kernels_match(rows)
+
+
+def test_arrow_kernels_null_versus_empty_optional() -> None:
+    null_row = dict(FULL_ROW, cnpj_if=None)
+    empty_row = dict(FULL_ROW, cnpj_if="")
+    got = encode_arrow(_batch([null_row, empty_row])).to_pylist()
+    assert got[0] != got[1]
+    _assert_kernels_match([null_row, empty_row])
+    assert [r["cnpj_if"] for r in decode_arrow(pa.array(got)).to_pylist()] == [None, ""]
+
+
+def test_arrow_encoder_null_required_field_gives_null_value() -> None:
+    rows = [FULL_ROW, dict(FULL_ROW, instituicao_financeira=None), FULL_ROW]
+    assert encode_arrow(_batch(rows)).to_pylist() == [
+        encode_record(FULL_ROW), None, encode_record(FULL_ROW)
+    ]
+
+
+def test_arrow_kernels_empty_batch() -> None:
+    values = encode_arrow(_batch([]))
+    assert values.type == pa.binary() and len(values) == 0
+    decoded = decode_arrow(values)
+    assert decoded.num_rows == 0 and decoded.schema.names == FIELD_ORDER
+
+
+def test_arrow_decoder_sliced_values() -> None:
+    """A slice keeps its parent's buffers: offsets start at the slice's
+    offset, not at zero."""
+    rows = [dict(FULL_ROW, ano=str(year)) for year in range(2000, 2010)]
+    values = pa.array([encode_record(r) for r in rows], pa.binary()).slice(3, 4)
+    assert values.offset == 3
+    assert decode_arrow(values).to_pylist() == rows[3:7]
+
+
+def test_encode_batches_all_null_column() -> None:
+    """An all-NULL object column is typed string, not inferred as null."""
+    import pandas as pd
+
+    from data_ingestion_ex8_producer_spark.functions.avro_codec import encode_batches
+
+    rows = [dict(FULL_ROW, cnpj_if=None, ano=str(y)) for y in (2023, 2024)]
+    pdf = pd.DataFrame({c: [r[c] for r in rows] for c in FIELD_ORDER}, dtype=object)
+    (out,) = encode_batches(iter([pdf]), FIELD_ORDER)
+    assert list(out["value"]) == [encode_record(r) for r in rows]
+    pdf["ano"] = None  # all-NULL required column: every row skipped
+    (out,) = encode_batches(iter([pdf]), FIELD_ORDER)
+    assert len(out) == 0
+
+
+_DATUM = encode_record(FULL_ROW)
+_CNPJ_TAG = sum(len(encode_string(FULL_ROW[c])) for c in FIELD_ORDER[:4])
+assert _DATUM[_CNPJ_TAG] == 2
+
+
+@pytest.mark.parametrize(
+    ("datum", "fault"),
+    [
+        (b"", "truncated"),
+        (_DATUM[:3], "truncated"),
+        (_DATUM[:-1], "truncated"),
+        (_DATUM[:_CNPJ_TAG] + b"\x04" + _DATUM[_CNPJ_TAG + 1 :], "union index 2 out of range"),
+        (_DATUM[:_CNPJ_TAG] + b"\x01" + _DATUM[_CNPJ_TAG + 1 :], "union index -1 out of range"),
+        (b"\x01" + _DATUM[1:], "negative length"),
+        (b"\x80" * 11, "varint longer"),
+        (_DATUM[:1] + b"\xff" + _DATUM[2:], "invalid UTF-8"),
+        (_DATUM + b"\x00", "trailing bytes"),
+    ],
+    ids=[
+        "empty", "first_field_cut", "last_byte_missing", "union_index_2",
+        "union_index_negative", "negative_length", "long_varint", "bad_utf8", "trailing",
+    ],
+)
+def test_malformed_datum_raises_in_both_decoders(datum: bytes, fault: str) -> None:
+    with pytest.raises(ValueError, match=fault):
+        decode_record(datum)
+    with pytest.raises(ValueError, match=fault):
+        decode_arrow(pa.array([_DATUM, datum], pa.binary()))
+
+
+def test_arrow_decoder_rejects_null_value() -> None:
+    with pytest.raises(ValueError, match="NULL value at row 1"):
+        decode_arrow(pa.array([_DATUM, None], pa.binary()))

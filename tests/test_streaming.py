@@ -7,6 +7,7 @@ once-per-file), and event-time analytics streams vs their batch twins
 from __future__ import annotations
 
 import time
+from collections import Counter
 from pathlib import Path
 
 import pytest
@@ -18,7 +19,10 @@ from data_ingestion_ex8_producer_spark.streaming.events import (
     stream_events_fixture,
     tumbling_counts,
 )
-from data_ingestion_ex8_producer_spark.streaming.ingest import build_ingest_stream
+from data_ingestion_ex8_producer_spark.streaming.ingest import (
+    build_ingest_stream,
+    replay_all_batch,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,13 +42,18 @@ def _write_csv(path: Path, rows: list[str]) -> None:
     path.write_bytes(("\n".join([CSV_HEADER, *rows]) + "\n").encode("iso-8859-1"))
 
 
+def _observed(query) -> Counter:
+    """The ingest stream's observed counters, summed over its micro-batches."""
+    total: Counter = Counter()
+    for p in query.recentProgress:
+        if "ingest" in p.observedMetrics:
+            total.update(p.observedMetrics["ingest"].asDict())
+    return total
+
+
 def _rows_in(query) -> int:
     """CSV rows the query's micro-batches parsed: the observed ``rows_in``."""
-    return sum(
-        p.observedMetrics["ingest"]["rows_in"]
-        for p in query.recentProgress
-        if "ingest" in p.observedMetrics
-    )
+    return _observed(query)["rows_in"]
 
 
 @pytest.mark.slow
@@ -144,6 +153,43 @@ def test_ingest_stream_maps_each_files_header(spark, tmp_path: Path) -> None:
     datums = [bytes(r["value"]) for r in spark.read.parquet(str(out)).collect()]
     got = sorted((d["ano"], d["trimestre"]) for d in map(decode_record, datums))
     assert got == [("2023", "2º"), ("2024", "1º")]
+
+
+@pytest.mark.slow
+def test_ingest_stream_counts_rejected_rows(spark, tmp_path: Path) -> None:
+    """A row with an empty required field is counted in ``rows_in`` and not
+    in ``rows_committed``, on the pass that encodes it; the stream commits
+    what ``replay_all_batch`` commits."""
+    src = tmp_path / "landing_rejects"
+    src.mkdir()
+    _write_csv(
+        src / "a.csv",
+        [
+            "2024;1º;Cat;Tipo;123;BANCO A;1,0;1;1;1;3;10;5;5",
+            "2024;1º;Cat;Tipo;456;;2,0;2;2;2;6;20;10;10",
+            "2024;1º;Cat;Tipo;;BANCO C;3,0;3;;;3;30;;",
+        ],
+    )
+    out = tmp_path / "rejects_out"
+    query = build_ingest_stream(
+        spark,
+        str(src),
+        str(tmp_path / "rejects_ckpt"),
+        sink="parquet",
+        output_path=str(out),
+        trigger_seconds=1,
+    )
+    try:
+        query.processAllAvailable()
+        deadline = time.time() + 60
+        while time.time() < deadline and _rows_in(query) < 3:
+            time.sleep(0.5)
+    finally:
+        query.stop()
+        query.awaitTermination(30)
+    assert _observed(query) == {"rows_in": 3, "rows_committed": 2}
+    assert spark.read.parquet(str(out)).count() == 2
+    assert replay_all_batch(spark, str(src)).count() == 2
 
 
 @pytest.mark.slow
