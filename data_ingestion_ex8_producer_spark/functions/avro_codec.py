@@ -127,6 +127,12 @@ def decode_record(datum: bytes) -> dict[str, str | None]:
     return values
 
 
+def binary_offsets(values: pa.Array) -> np.ndarray:
+    """The ``len(values) + 1`` int32 offsets of a ``binary``/``string``
+    array into its data buffer, honoring the array's slice offset."""
+    return np.frombuffer(values.buffers()[1], np.int32)[values.offset : values.offset + len(values) + 1]
+
+
 def _length_prefixes(lengths: np.ndarray, present: np.ndarray | None) -> pa.Array:
     """Per row, the bytes that go before a string field's UTF-8 bytes: the
     zig-zag varint of its byte length, behind the union index for a
@@ -170,8 +176,7 @@ def encode_arrow(bronze: pa.RecordBatch) -> pa.Array:
     parts = []
     for name, nullable in RECLAMACOES_FIELDS:
         value = bronze.column(name).cast(pa.binary())
-        offsets = np.frombuffer(value.buffers()[1], np.int32)[value.offset : value.offset + len(value) + 1]
-        lengths = np.diff(offsets)
+        lengths = np.diff(binary_offsets(value))
         if nullable:
             present = value.is_valid().to_numpy(zero_copy_only=False)
             parts += [_length_prefixes(lengths, present), value.fill_null(b"")]
@@ -217,7 +222,7 @@ def decode_arrow(values: pa.Array) -> pa.RecordBatch:
         raise ValueError(f"NULL value at row {row}: every row must be one datum")
     values = values.cast(pa.binary())
     n = len(values)
-    offsets = np.frombuffer(values.buffers()[1], np.int32)[values.offset : values.offset + n + 1]
+    offsets = binary_offsets(values)
     buffer = values.buffers()[2]
     data = np.frombuffer(buffer, np.uint8) if buffer is not None else np.empty(0, np.uint8)
     pos = offsets[:-1].astype(np.int64)

@@ -3,11 +3,10 @@
 Three artifacts, mirroring the reference's three-layer schema system
 (SURVEY.md §1.2):
 
-* ``RECLAMACOES_AVRO_SCHEMA_JSON`` — byte-authoritative output schema; same
-  field names/order/nullability as the reference's
+* ``RECLAMACOES_FIELDS`` — the output record's field names, order and
+  nullability, as in the reference's
   ``src/ex8_producer/schemas/reclamacoes.avsc:5-82`` (14 fields, all string or
-  nullable-string, record name ``reclamacoes`` in namespace ``ex7_producer`` —
-  the namespace is a reference quirk preserved for wire parity).
+  nullable-string); the Avro kernels and the reference codec both read it.
 * ``BRONZE_SCHEMA`` — StructType of the bronze frame; nullable exactly on
   the 5 Avro union fields.  ``RAW_BACEN_HEADER`` is the landing files' header
   before sanitization.
@@ -18,8 +17,6 @@ Three artifacts, mirroring the reference's three-layer schema system
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -64,20 +61,6 @@ RAW_BACEN_HEADER: tuple[str, ...] = (
     "Quantidade de clientes  CCS",
     "Quantidade de clientes  SCR",
 )
-
-RECLAMACOES_AVRO_SCHEMA: dict = {
-    "type": "record",
-    "name": "reclamacoes",
-    "namespace": "ex7_producer",
-    "fields": [
-        {"name": name, "type": "string"}
-        if not nullable
-        else {"name": name, "type": ["null", "string"], "default": None}
-        for name, nullable in RECLAMACOES_FIELDS
-    ],
-}
-
-RECLAMACOES_AVRO_SCHEMA_JSON: str = json.dumps(RECLAMACOES_AVRO_SCHEMA)
 
 BRONZE_SCHEMA = StructType(
     [StructField(name, StringType(), nullable) for name, nullable in RECLAMACOES_FIELDS]

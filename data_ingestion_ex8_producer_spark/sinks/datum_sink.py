@@ -1,6 +1,8 @@
 """`avro_datum_dir` — a Spark 4 Python DataSource WRITER (batch + streaming)
 that lands raw Avro binary datums in a directory, one length-framed record
-per row.
+per row.  Tasks receive Arrow batches (``DataSourceArrowWriter``,
+``DataSourceStreamArrowWriter``) and frame each batch's ``value`` column in
+one numpy step; no row reaches Python.
 
 The payload contract mirrors the reference's Kafka producer
 (`app.py:142-158`): each row is ONE opaque binary value (no key, no headers,
@@ -33,17 +35,20 @@ exactly one attempt's files per epoch.
 from __future__ import annotations
 
 import os
-import struct
 import uuid
 from collections.abc import Iterator
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceStreamWriter,
-    DataSourceWriter,
+    DataSourceArrowWriter,
+    DataSourceStreamArrowWriter,
     WriterCommitMessage,
 )
-from pyspark.sql.types import Row, StructType
+from pyspark.sql.types import StructType
+
+from ..functions.avro_codec import binary_offsets
 
 
 class _DatumCommit(WriterCommitMessage):
@@ -52,23 +57,26 @@ class _DatumCommit(WriterCommitMessage):
         self.n_rows = n_rows
 
 
-def _write_partition(directory: str, rows: Iterator[Row]) -> _DatumCommit:
-    """Task-side: stream length-framed datums into a private temp file.  A
-    NULL ``value`` fails the task; the driver's abort never sees a failed
-    task's temp file, so the task removes it itself."""
+def _write_partition(directory: str, batches: Iterator[pa.RecordBatch]) -> _DatumCommit:
+    """Task-side: write each batch's ``value`` column, length-framed, into a
+    private temp file.  A NULL ``value`` or a batch without a ``value``
+    column fails the task; the driver's abort never sees a failed task's
+    temp file, so the task removes it itself."""
     os.makedirs(directory, exist_ok=True)
     tmp = os.path.join(directory, f"_tmp_{uuid.uuid4().hex}.bin")
     n = 0
     try:
         with open(tmp, "wb") as fh:
-            for row in rows:
-                value = row["value"]
-                if value is None:
+            for batch in batches:
+                value = batch.column("value")
+                if value.null_count:
                     raise ValueError("avro_datum_dir: NULL value; every row must be one datum")
-                payload = bytes(value)
-                fh.write(struct.pack(">I", len(payload)))
-                fh.write(payload)
-                n += 1
+                offsets = binary_offsets(value)
+                payload = np.frombuffer(value.buffers()[2], np.uint8)[offsets[0] : offsets[-1]]
+                # Each record's 4-byte big-endian length goes in front of its first byte.
+                headers = np.diff(offsets).astype(">u4").view(np.uint8)
+                fh.write(np.insert(payload, np.repeat(offsets[:-1] - offsets[0], 4), headers))
+                n += len(value)
     except BaseException:
         os.remove(tmp)
         raise
@@ -112,12 +120,12 @@ def _abort(messages: list[_DatumCommit | None]) -> None:
             os.remove(m.tmp_path)
 
 
-class _BatchWriter(DataSourceWriter):
+class _BatchWriter(DataSourceArrowWriter):
     def __init__(self, path: str, overwrite: bool) -> None:
         self._path = path
         self._overwrite = overwrite
 
-    def write(self, iterator: Iterator[Row]) -> _DatumCommit:
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> _DatumCommit:
         return _write_partition(self._path, iterator)
 
     def commit(self, messages) -> None:
@@ -127,7 +135,7 @@ class _BatchWriter(DataSourceWriter):
         _abort(messages)
 
 
-class _StreamWriter(DataSourceStreamWriter):
+class _StreamWriter(DataSourceStreamArrowWriter):
     """Tasks write epoch-agnostic temp files; the driver learns the batchId
     only at commit time and publishes into ``epoch=<batchId>/`` there — so
     the task side stays oblivious to streaming progress and a replayed epoch
@@ -136,7 +144,7 @@ class _StreamWriter(DataSourceStreamWriter):
     def __init__(self, path: str) -> None:
         self._path = path
 
-    def write(self, iterator: Iterator[Row]) -> _DatumCommit:
+    def write(self, iterator: Iterator[pa.RecordBatch]) -> _DatumCommit:
         return _write_partition(self._path, iterator)
 
     def commit(self, messages, batchId: int) -> None:
@@ -167,10 +175,10 @@ class AvroDatumDirDataSource(DataSource):
     def schema(self) -> StructType | str:
         return "value binary"
 
-    def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
+    def writer(self, schema: StructType, overwrite: bool) -> DataSourceArrowWriter:
         return _BatchWriter(self.options["path"], overwrite)
 
-    def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamWriter:
+    def streamWriter(self, schema: StructType, overwrite: bool) -> DataSourceStreamArrowWriter:
         return _StreamWriter(self.options["path"])
 
 

@@ -5,9 +5,13 @@ the engine's own Avro codec.
 
 from __future__ import annotations
 
+import struct
 from pathlib import Path
 
+import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from pyspark.errors import PythonException
 from pyspark.sql import functions as F
@@ -18,6 +22,7 @@ from data_ingestion_ex8_producer_spark.functions.avro_codec import (
 )
 from data_ingestion_ex8_producer_spark.sinks.datum_sink import (
     AvroDatumDirDataSource,
+    _write_partition,
     read_datum_file,
 )
 
@@ -119,6 +124,20 @@ def test_datum_sink_null_value_fails_and_leaves_nothing(spark, tmp_path: Path) -
     dest = tmp_path / "nulls"
     df = spark.createDataFrame([(None,), (b"\x08abcd",)], "value binary").coalesce(1)
     with pytest.raises(PythonException, match="NULL value"):
+        df.write.format("avro_datum_dir").option("path", str(dest)).mode("append").save()
+    assert not [
+        p.name for pattern in ("_SUCCESS", "part-*", "_tmp_*") for p in dest.glob(pattern)
+    ]
+
+
+def test_datum_sink_requires_value_column(spark, tmp_path: Path) -> None:
+    """The sink takes one binary column named ``value``: a frame whose only
+    column is ``payload binary`` fails, and no manifest, part or temp file
+    is left."""
+    spark.dataSource.register(AvroDatumDirDataSource)
+    dest = tmp_path / "renamed"
+    df = spark.createDataFrame([(b"\x08abcd",)], "payload binary").coalesce(1)
+    with pytest.raises(PythonException, match='"value" does not exist'):
         df.write.format("avro_datum_dir").option("path", str(dest)).mode("append").save()
     assert not [
         p.name for pattern in ("_SUCCESS", "part-*", "_tmp_*") for p in dest.glob(pattern)
@@ -241,3 +260,59 @@ def test_read_datum_file_rejects_truncated_frame(tmp_path: Path, tail: bytes, of
     path.write_bytes(b"\x00\x00\x00\x05hello" + tail)
     with pytest.raises(ValueError, match=f"{path.name}.*offset {offset}"):
         read_datum_file(str(path))
+
+
+# ---------------------------------------------------------------------------
+# Task-side framing, pinned against the per-record definition (no Spark)
+# ---------------------------------------------------------------------------
+
+
+def _framing(payloads: list[bytes]) -> bytes:
+    return b"".join(struct.pack(">I", len(p)) + p for p in payloads)
+
+
+def _value_batch(payloads: list[bytes]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays([pa.array(payloads, pa.binary())], names=["value"])
+
+
+def _written(tmp_path: Path, batches: list[pa.RecordBatch]) -> bytes:
+    commit = _write_partition(str(tmp_path), iter(batches))
+    assert commit.n_rows == sum(b.num_rows for b in batches)
+    return Path(commit.tmp_path).read_bytes()
+
+
+@pytest.mark.parametrize(
+    "payloads, start",
+    [
+        ([b"\x08abcd", b"xyz"], 0),
+        ([b"\x08abcd", b"", b"xyz"], 2),
+        ([b"", b"a", b""], 0),
+        ([], 0),
+        ([b"a", bytes(range(256)) * 300], 0),
+    ],
+    ids=["plain", "sliced", "empty_payloads", "empty_batch", "over_64KiB"],
+)
+def test_write_partition_framing(tmp_path: Path, payloads: list[bytes], start: int) -> None:
+    """The one-step numpy framing equals a 4-byte big-endian length then the
+    payload, record by record: from a slice's offset, for empty payloads
+    (a trailing one too), an empty batch, and a 76,800-byte payload whose
+    length has a non-zero third byte."""
+    batch = _value_batch([b"skip"] * start + payloads).slice(start)
+    assert batch.column("value").offset == start
+    assert _written(tmp_path, [batch]) == _framing(payloads)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(st.lists(st.binary(max_size=40), max_size=8), max_size=4),
+    st.integers(0, 3),
+)
+def test_write_partition_framing_property(tmp_path_factory, parts, cut) -> None:
+    """Several batches, each sliced by ``cut`` rows, land as one framed file
+    in batch order, and ``read_datum_file`` gives the payloads back."""
+    batches = [_value_batch(p).slice(min(cut, len(p))) for p in parts]
+    payloads = [p for part in parts for p in part[cut:]]
+    tmp = tmp_path_factory.mktemp("framing")
+    assert _written(tmp, batches) == _framing(payloads)
+    (path,) = tmp.glob("_tmp_*.bin")
+    assert read_datum_file(str(path)) == payloads
