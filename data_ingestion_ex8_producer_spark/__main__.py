@@ -7,7 +7,8 @@
 Reads the same environment variables as the reference (S3 bucket/prefix,
 Kafka bootstrap/topic, AWS creds — see config.py); without ``--source`` a
 missing ``S3_BUCKET_NAME`` is fatal before the session starts (same contract
-as ``app.py:202-203``).  Starts the checkpointed ingestion stream and blocks
+as ``app.py:202-203``), and so is an invalid sink (``--sink parquet``
+without ``--output``).  Starts the checkpointed ingestion stream and blocks
 until terminated.  ``--replay``
 instead appends one batch cycle of the reference's loop to the same sink.
 """
@@ -36,10 +37,10 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = EngineConfig()
     source = args.source or cfg.source_path
+    fmt, options = sink_options(cfg, args.sink, args.output)
     spark = build_session("ex8-ingest")
 
     if args.replay:
-        fmt, options = sink_options(cfg, args.sink, args.output)
         replay_all_batch(spark, source).write.format(fmt).options(**options).mode("append").save()
         print(f"replayed {source} to the {args.sink} sink")
         return 0

@@ -128,9 +128,12 @@ def decode_record(datum: bytes) -> dict[str, str | None]:
 
 
 def binary_offsets(values: pa.Array) -> np.ndarray:
-    """The ``len(values) + 1`` int32 offsets of a ``binary``/``string``
-    array into its data buffer, honoring the array's slice offset."""
-    return np.frombuffer(values.buffers()[1], np.int32)[values.offset : values.offset + len(values) + 1]
+    """The ``len(values) + 1`` offsets of a ``binary``/``string`` array into
+    its data buffer, at the array's own width (int64 for the ``large_``
+    types), honoring the array's slice offset."""
+    large = pa.types.is_large_binary(values.type) or pa.types.is_large_string(values.type)
+    offsets = np.frombuffer(values.buffers()[1], np.int64 if large else np.int32)
+    return offsets[values.offset : values.offset + len(values) + 1]
 
 
 def _length_prefixes(lengths: np.ndarray, present: np.ndarray | None) -> pa.Array:

@@ -10,9 +10,10 @@ Reference behavior being reproduced:
 
 Batch and stream list the ``*.csv`` files with Spark's ``binaryFile``
 source (``landing_files``, ``landing_file_stream``) and turn each file's
-bytes into bronze rows with ``_parse``: the header contract, applied to
-every file's own header.  ``read_reclamacoes_batch`` runs it alone in one
-``mapInArrow`` pass; the ingest path (``streaming/ingest.py``) runs it and
+bytes into one bronze batch, rows in file order, with ``_parse``: the
+header contract, applied to every file's own header.
+``read_reclamacoes_batch`` runs it alone in one ``mapInArrow`` pass; the
+ingest path (``streaming/ingest.py``) runs it and
 the Avro encoder in the same pass, so bronze never returns to the JVM.
 Unlike the reference (which re-reads every file forever,
 ``app.py:176-196``), the stream is a checkpointed file source: once-per-file,
@@ -46,41 +47,40 @@ _FILES_SCHEMA = "path string, modificationTime timestamp, length long, content b
 _BRONZE_DDL = ", ".join(f"{name} string" for name in FIELD_ORDER)
 
 
-def _parse(content: bytes) -> pa.Table | None:
+def _parse(content: bytes) -> pa.RecordBatch | None:
     """The header contract: one landing file's bytes -> the 14 bronze
     columns in ``FIELD_ORDER``, read as the reference's per-file
-    ``csv.DictReader(delimiter=';')`` reads it.
+    ``csv.DictReader(delimiter=';')`` reads it, rows in file order.
 
     Names are sanitized (``app.py:129``) with last-wins on collisions
     (``Ano;ANO`` keeps the second), only the whitelisted bronze names are
     kept (``app.py:130``), empty strings become NULL (``app.py:131``) and a
     field the header lacks is NULL.  A file without a header (zero bytes
-    or a blank first line) gives no rows.  ``pyarrow.csv`` parses the body;
-    it cannot pad a ragged row, so those rows are collected, re-read with
-    ``csv``, padded with NULL or cut to the header as ``DictReader`` does,
-    and appended.
+    or a blank first line) gives no rows.  One ``csv`` reader reads the
+    header; ``pyarrow.csv`` parses the whole file, header as row 0.
+    ``pyarrow.csv`` cannot pad a ragged row, so a file with one is read on
+    by the same ``csv`` reader instead, blank rows skipped and each row
+    padded with NULL or cut to the header as ``DictReader`` does.
     """
     text = io.TextIOWrapper(io.BytesIO(content), _ENCODING, newline="")
-    header = next(csv.reader(text, delimiter=";"), None)
+    reader = csv.reader(text, delimiter=";")
+    header = next(reader, None)
     if not header:
         return None
     index = {name: i for i, name in enumerate(sanitize_columns(header))}
     names = [f"c{i}" for i in range(len(header))]
-    ragged: list[str] = []
+    ragged = False
 
-    def keep_ragged(row) -> str:
-        ragged.append(row.text)
+    def skip_ragged(_row) -> str:
+        nonlocal ragged
+        ragged = True
         return "skip"
 
-    if not content.endswith(b"\n"):
-        content += b"\n"  # skip_rows cannot pass an unterminated header line
-    body = pa_csv.read_csv(
+    table = pa_csv.read_csv(
         io.BytesIO(content),
-        read_options=pa_csv.ReadOptions(
-            skip_rows=1, column_names=names, encoding=_ENCODING, use_threads=False
-        ),
+        read_options=pa_csv.ReadOptions(column_names=names, encoding=_ENCODING, use_threads=False),
         parse_options=pa_csv.ParseOptions(
-            delimiter=";", newlines_in_values=True, invalid_row_handler=keep_ragged
+            delimiter=";", newlines_in_values=True, invalid_row_handler=skip_ragged
         ),
         convert_options=pa_csv.ConvertOptions(
             column_types=dict.fromkeys(names, pa.string()),
@@ -88,38 +88,27 @@ def _parse(content: bytes) -> pa.Table | None:
             strings_can_be_null=True,
         ),
     )
-    table = pa.Table.from_arrays(
-        [
-            body.column(index[c]) if c in index else pa.nulls(body.num_rows, pa.string())
-            for c in FIELD_ORDER
-        ],
+    if ragged:
+        width = len(header)
+        rows = [(row + [""] * width)[:width] for row in reader if row]
+        columns = [pa.array([row[i] or None for row in rows], pa.string()) for i in range(width)]
+    else:
+        columns = [column.combine_chunks() for column in table.slice(1).columns]
+    return pa.RecordBatch.from_arrays(
+        [columns[index[c]] if c in index else pa.nulls(len(columns[0]), pa.string())
+         for c in FIELD_ORDER],
         names=FIELD_ORDER,
     )
-    if not ragged:
-        return table
-    width = len(header)
-    rows = [(next(csv.reader([line], delimiter=";")) + [""] * width)[:width] for line in ragged]
-    cells = [
-        pa.array([row[index[c]] or None for row in rows] if c in index else [None] * len(rows),
-                 pa.string())
-        for c in FIELD_ORDER
-    ]
-    return pa.concat_tables([table, pa.Table.from_arrays(cells, names=FIELD_ORDER)])
 
 
-def parse_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Table]:
-    """``binaryFile`` ``content`` batches -> one bronze table per landing
+def parse_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``binaryFile`` ``content`` batches -> one bronze batch per landing
     file that has a header (``_parse``)."""
     for batch in batches:
         for content in batch.column(0).to_pylist():
-            table = _parse(content)
-            if table is not None:
-                yield table
-
-
-def _bronze_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for table in parse_files(batches):
-        yield from table.to_batches()
+            bronze = _parse(content)
+            if bronze is not None:
+                yield bronze
 
 
 def landing_files(spark: SparkSession, path: str) -> DataFrame:
@@ -143,4 +132,4 @@ def landing_file_stream(spark: SparkSession, path: str) -> DataFrame:
 
 def read_reclamacoes_batch(spark: SparkSession, path: str) -> DataFrame:
     """Batch scan of a reclamacoes CSV file, directory or glob (bronze)."""
-    return landing_files(spark, path).select("content").mapInArrow(_bronze_batches, _BRONZE_DDL)
+    return landing_files(spark, path).select("content").mapInArrow(parse_files, _BRONZE_DDL)

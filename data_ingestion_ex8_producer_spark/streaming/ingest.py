@@ -65,8 +65,7 @@ def sink_options(
 
 
 def _encode_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-    for bronze in parse_files(batches):
-        yield from map(value_batch, bronze.combine_chunks().to_batches())
+    return map(value_batch, parse_files(batches))
 
 
 def _datums(files: DataFrame) -> DataFrame:

@@ -271,8 +271,8 @@ def _framing(payloads: list[bytes]) -> bytes:
     return b"".join(struct.pack(">I", len(p)) + p for p in payloads)
 
 
-def _value_batch(payloads: list[bytes]) -> pa.RecordBatch:
-    return pa.RecordBatch.from_arrays([pa.array(payloads, pa.binary())], names=["value"])
+def _value_batch(payloads: list[bytes], value_type: pa.DataType = pa.binary()) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays([pa.array(payloads, value_type)], names=["value"])
 
 
 def _written(tmp_path: Path, batches: list[pa.RecordBatch]) -> bytes:
@@ -282,22 +282,27 @@ def _written(tmp_path: Path, batches: list[pa.RecordBatch]) -> bytes:
 
 
 @pytest.mark.parametrize(
-    "payloads, start",
+    "payloads, start, value_type",
     [
-        ([b"\x08abcd", b"xyz"], 0),
-        ([b"\x08abcd", b"", b"xyz"], 2),
-        ([b"", b"a", b""], 0),
-        ([], 0),
-        ([b"a", bytes(range(256)) * 300], 0),
+        ([b"\x08abcd", b"xyz"], 0, pa.binary()),
+        ([b"\x08abcd", b"", b"xyz"], 2, pa.binary()),
+        ([b"", b"a", b""], 0, pa.binary()),
+        ([], 0, pa.binary()),
+        ([b"a", bytes(range(256)) * 300], 0, pa.binary()),
+        ([b"abc", b"", b"defgh"], 1, pa.large_binary()),
     ],
-    ids=["plain", "sliced", "empty_payloads", "empty_batch", "over_64KiB"],
+    ids=["plain", "sliced", "empty_payloads", "empty_batch", "over_64KiB", "large_binary"],
 )
-def test_write_partition_framing(tmp_path: Path, payloads: list[bytes], start: int) -> None:
+def test_write_partition_framing(
+    tmp_path: Path, payloads: list[bytes], start: int, value_type: pa.DataType
+) -> None:
     """The one-step numpy framing equals a 4-byte big-endian length then the
     payload, record by record: from a slice's offset, for empty payloads
-    (a trailing one too), an empty batch, and a 76,800-byte payload whose
-    length has a non-zero third byte."""
-    batch = _value_batch([b"skip"] * start + payloads).slice(start)
+    (a trailing one too), an empty batch, a 76,800-byte payload whose
+    length has a non-zero third byte, and a sliced ``large_binary`` column
+    (int64 offsets; Spark sends one under
+    ``spark.sql.execution.arrow.useLargeVarTypes``)."""
+    batch = _value_batch([b"skip"] * start + payloads, value_type).slice(start)
     assert batch.column("value").offset == start
     assert _written(tmp_path, [batch]) == _framing(payloads)
 

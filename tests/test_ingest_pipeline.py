@@ -135,6 +135,17 @@ def test_cli_without_source_requires_bucket(tmp_path: Path, monkeypatch) -> None
         cli.main(argv)
 
 
+def test_cli_checks_sink_before_session(tmp_path: Path, monkeypatch) -> None:
+    """``--sink parquet`` without ``--output`` is fatal before any session
+    starts, as the missing bucket is."""
+    from data_ingestion_ex8_producer_spark import __main__ as cli
+
+    monkeypatch.setattr(cli, "build_session", lambda *_a, **_kw: pytest.fail("session built"))
+    argv = ["--sink", "parquet", "--source", str(tmp_path), "--replay"]
+    with pytest.raises(ValueError, match="output_path"):
+        cli.main(argv)
+
+
 def test_duplicate_header_last_wins(spark, tmp_path: Path) -> None:
     # Two raw headers sanitizing to "ano": DictReader semantics keep the last.
     path = tmp_path / "dup.csv"
@@ -292,3 +303,52 @@ def test_parse_semantics(spark, tmp_path: Path, case: str) -> None:
         (tmp_path / name).write_bytes(text.encode("iso-8859-1"))
     got = Counter(tuple(r) for r in decode_value_frame(replay_all_batch(spark, str(tmp_path))).collect())
     assert got == Counter(expected)
+
+
+def _ragged_file(path: Path) -> list[str]:
+    """One landing file whose full rows (2001, 2003, 2005) and short rows
+    (2002, 2004: the two nullable tail fields missing) interleave; returns
+    the ``ano`` of each row in file order."""
+    years = ["2001", "2002", "2003", "2004", "2005"]
+    lines = [_line(ano=y) if int(y) % 2 else _line(ano=y).rsplit(";", 2)[0] for y in years]
+    path.write_bytes(("\n".join([_HEADER, *lines]) + "\n").encode("iso-8859-1"))
+    return years
+
+
+def test_rows_keep_file_order(spark, tmp_path: Path) -> None:
+    """Full and short rows of one file come back in file order, as the
+    reference's ``DictReader`` yields them."""
+    years = _ragged_file(tmp_path / "a.csv")
+    rows = read_reclamacoes_batch(spark, str(tmp_path)).collect()
+    assert [r["ano"] for r in rows] == years
+    assert [r["quantidade_de_clientes_scr"] for r in rows] == [_CELLS[13], None] * 2 + [_CELLS[13]]
+
+
+def test_datums_keep_file_order(spark, tmp_path: Path) -> None:
+    """The ``avro_datum_dir`` part file that ``replay_all_batch`` writes
+    holds one datum per row in file order."""
+    from data_ingestion_ex8_producer_spark.sinks.datum_sink import (
+        AvroDatumDirDataSource,
+        read_datum_file,
+    )
+
+    landing, dest = tmp_path / "landing", tmp_path / "datums"
+    landing.mkdir()
+    years = _ragged_file(landing / "a.csv")
+    spark.dataSource.register(AvroDatumDirDataSource)
+    replay_all_batch(spark, str(landing)).write.format("avro_datum_dir").option(
+        "path", str(dest)
+    ).mode("overwrite").save()
+    (part,) = [line.split("\t")[0] for line in (dest / "_SUCCESS").read_text().splitlines()]
+    assert [decode_record(d)["ano"] for d in read_datum_file(str(dest / part))] == years
+
+
+def test_header_with_quoted_newline() -> None:
+    """A quoted newline inside a header name is part of one CSV record:
+    the header and two data lines give exactly two rows."""
+    from data_ingestion_ex8_producer_spark.sources.csv_source import _parse
+
+    header = _HEADER.rsplit(";", 1)[0] + ';"Quantidade de clientes\n SCR"'
+    content = "\n".join([header, _line(ano="2001"), _line(ano="2002")]) + "\n"
+    bronze = _parse(content.encode("iso-8859-1"))
+    assert bronze.column("ano").to_pylist() == ["2001", "2002"]
