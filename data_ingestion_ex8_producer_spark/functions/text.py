@@ -90,9 +90,9 @@ def sql_mix48(x: str) -> str:
 
 # ---- word k-shingles ------------------------------------------------------
 
-def with_shingles(df, k: int, col: str = "text", out: str = "shingle_set"):
-    """documents -> + ``out`` column: distinct word k-grams (empty when < k
-    tokens).
+def with_shingles(df, k: int):
+    """documents -> + ``shingle_set`` column: distinct word k-grams of
+    ``text`` (empty when < k tokens).
 
     Implementation note (perf, found via .explain + bench): a naive
     ``transform(sequence(...), i -> concat(__t[i], __t[i+1], ...))`` is
@@ -104,7 +104,7 @@ def with_shingles(df, k: int, col: str = "text", out: str = "shingle_set"):
     """
     n = F.size(F.col("__t"))
     width = n - (k - 1)
-    df = df.withColumn("__t", tokens(col))
+    df = df.withColumn("__t", tokens())
     for j in range(k):
         df = df.withColumn(
             f"__s{j}",
@@ -117,14 +117,15 @@ def with_shingles(df, k: int, col: str = "text", out: str = "shingle_set"):
         joined = F.zip_with(
             joined, F.col(f"__s{j}"), lambda a, b: F.concat(a, F.lit(" "), b)
         )
-    df = df.withColumn(out, F.array_distinct(joined))
+    df = df.withColumn("shingle_set", F.array_distinct(joined))
     return df.drop("__t", *[f"__s{j}" for j in range(k)])
 
 
-def sql_shingle_list(k: int, expr: str = "text") -> str:
-    """DuckDB: distinct word k-grams of ``expr`` as a LIST (1-based indexing)."""
-    parts = " || ' ' || ".join(f"__t[i + {j}]" for j in range(k))
+def sql_shingle_list(k: int) -> str:
+    """DuckDB: distinct word k-grams of ``text`` as a LIST (1-based indexing)."""
+    toks = sql_tokens()
+    parts = " || ' ' || ".join(f"{toks}[i + {j}]" for j in range(k))
     return (
-        f"list_distinct(list_transform(range(1, len({sql_tokens(expr)}) - {k - 2}), "
-        f"i -> {parts}))".replace("__t", sql_tokens(expr))
+        f"list_distinct(list_transform(range(1, len({toks}) - {k - 2}), "
+        f"i -> {parts}))"
     )

@@ -56,7 +56,6 @@ from ._util import persist_tracked, revenue_dec, t
            click_id AS asof_click_id, click_ts AS asof_click_ts
     FROM cand WHERE rn = 1
     """,
-    tags=("join", "asof", "temporal"),
 )
 def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase event paired with the latest click event by
@@ -130,7 +129,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS max_abs
     FROM embeddings
     """,
-    tags=("scalar", "higher_order", "array"),
 )
 def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array functions over the embedding column: transform,
@@ -176,7 +174,6 @@ def q_higher_order_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) FILTER (WHERE cnt >= 5) AS BIGINT) AS n_heavy_types
     FROM per GROUP BY user_id
     """,
-    tags=("scalar", "map"),
 )
 def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map-typed column surface: build a per-user event_type→count map with
@@ -223,7 +220,6 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                ORDER BY c_acctbal, c_custkey) AS BIGINT) AS global_decile
     FROM customer
     """,
-    tags=("window", "ntile"),
 )
 def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile bucketing: account-balance quartiles within each market segment
@@ -257,7 +253,6 @@ def q_window_ntile(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL BY NAME
     SELECT s_name AS name, s_acctbal AS acctbal FROM supplier
     """,
-    tags=("setop", "union"),
 )
 def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution union: customers and suppliers stacked by column NAME
@@ -282,7 +277,6 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderpriority, o_orderstatus FROM orders
     WHERE o_orderdate >= TIMESTAMP '1998-01-01 00:00:00'
     """,
-    tags=("setop", "intersect"),
 )
 def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset intersection (INTERSECT ALL): keeps duplicate rows up to the
@@ -306,7 +300,6 @@ def q_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_orderpriority, o_orderstatus FROM orders
     WHERE o_orderdate >= TIMESTAMP '2000-01-01 00:00:00'
     """,
-    tags=("setop", "except"),
 )
 def q_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset difference (EXCEPT ALL): multiplicity-aware subtraction —
@@ -346,7 +339,6 @@ _Q3_CUTOFF = "1998-06-01"
     ORDER BY revenue DESC, o_orderdate, l_orderkey
     LIMIT 10
     """,
-    tags=("join", "agg", "topk", "bench"),
     bench=True,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,7 +396,6 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
-    tags=("join", "agg", "topk", "bench"),
     bench=True,
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,7 +453,6 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_custkey, c_name, o_custkey, n_big, big_total
     FROM hi_cust FULL OUTER JOIN big_orders ON c_custkey = o_custkey
     """,
-    tags=("join", "outer"),
 )
 def q_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join between two partially-overlapping sets (high-balance
@@ -523,7 +513,6 @@ _SKY_BKT_W = 1 << 20  # price-cents per bucket (~$10k): value-domain bound
     FROM pts p JOIN g2 ON g2.price_c = p.price_c
     WHERE g2.smax < p.day AND g2.gmax <= p.day
     """,
-    tags=("advanced", "skyline", "pareto", "scale-pattern", "bench"),
     bench=True,
 )
 def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -638,7 +627,6 @@ _STATS_COLS = ("l_quantity", "l_extendedprice", "l_discount", "l_tax")
            b.min_value, b.max_value, m.mcv_value, m.mcv_count
     FROM base b JOIN mcv m ON m.column_name = b.column_name
     """,
-    tags=("advanced", "statistics", "profiling"),
 )
 def q_table_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE as a registered query: per numeric lineitem column,
@@ -734,7 +722,6 @@ def _ri_oracle() -> str:
 @register(
     "q_referential_integrity",
     oracle=_ri_oracle(),
-    tags=("dq", "join", "audit", "warehouse"),
 )
 def q_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity census over the star schema's six FK edges:
@@ -816,7 +803,6 @@ _GAP_BUCKET = 1024
            CAST(SUM(n_rows) - SUM(n_distinct) AS BIGINT)
     FROM b
     """,
-    tags=("dq", "audit", "sequence", "warehouse"),
 )
 def q_id_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surrogate-key sequence integrity WITHOUT a global sort: bucket the
@@ -918,7 +904,6 @@ def _jse_oracle() -> str:
 @register(
     "q_join_size_estimation",
     oracle=_jse_oracle(),
-    tags=("dq", "join", "cbo", "skew", "estimation"),
 )
 def q_join_size_estimation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cost-based optimizer's uniform-key assumption, audited against
@@ -1008,7 +993,6 @@ _EDH_CELL = 16384  # cents per coarse prefix-sum cell (domain-bounded)
     FROM cum CROSS JOIN n
     GROUP BY 1
     """,
-    tags=("stats", "cbo", "histogram", "warehouse"),
 )
 def q_equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact {16}-bucket equi-depth histogram of l_extendedprice (integer
@@ -1164,7 +1148,6 @@ def _hsa_oracle() -> str:
 @register(
     "q_histogram_selectivity_audit",
     oracle=_hsa_oracle(),
-    tags=("stats", "cbo", "histogram", "selectivity", "audit"),
 )
 def q_histogram_selectivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selectivity estimates from the 16-bucket equi-depth histogram
@@ -1292,7 +1275,6 @@ def _kanon_oracle() -> str:
 @register(
     "q_k_anonymity",
     oracle=_kanon_oracle(),
-    tags=("audit", "privacy", "k-anonymity", "curation"),
 )
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over (nation, segment, $1000 balance band): for
@@ -1401,7 +1383,6 @@ def _ldiv_oracle() -> str:
 @register(
     "q_l_diversity",
     oracle=_ldiv_oracle(),
-    tags=("audit", "privacy", "l-diversity", "curation"),
 )
 def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-l-diversity audit over quasi-identifier (nation, segment)
@@ -1537,7 +1518,6 @@ def _tclose_oracle() -> str:
 @register(
     "q_t_closeness",
     oracle=_tclose_oracle(),
-    tags=("audit", "privacy", "t-closeness", "curation"),
 )
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit (total-variation instance) over the same

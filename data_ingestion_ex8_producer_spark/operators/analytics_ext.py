@@ -48,7 +48,6 @@ from ._util import t
     FROM region JOIN nation ON r_regionkey = n_regionkey
     GROUP BY r_name
     """,
-    tags=("agg", "listagg", "string"),
 )
 def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered intra-group string concatenation: nation names per region via
@@ -85,7 +84,6 @@ def q_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(l_quantity) AS max_qty
     FROM lineitem GROUP BY l_returnflag
     """,
-    tags=("agg", "percentile", "median"),
 )
 def q_median_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact median and quartiles of order quantity per return flag
@@ -137,7 +135,6 @@ def q_median_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(cnt AS BIGINT) AS mode_cnt, n_orders
     FROM r WHERE rn = 1
     """,
-    tags=("agg", "mode"),
 )
 def q_mode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic mode: most frequent order priority per order status,
@@ -178,7 +175,6 @@ def q_mode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
            bit_xor(p_size) AS size_bxor
     FROM part GROUP BY p_type
     """,
-    tags=("agg", "boolean", "bitwise"),
 )
 def q_bool_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean quantifier aggregates (bool_and/bool_or = ALL/ANY over a
@@ -216,7 +212,6 @@ def q_bool_bit_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
            (str_split(o_orderpriority, '-'))[3] AS prio_missing
     FROM orders
     """,
-    tags=("scalar", "try", "error-safe"),
 )
 def q_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The try_* error-safe scalar family: division that yields NULL on a
@@ -285,7 +280,6 @@ _REGR_FINAL = """
     {_REGR_FINAL}
     FROM s
     """,
-    tags=("agg", "statistics", "regression"),
 )
 def q_regr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed simple linear regression (discount on quantity) per
@@ -344,7 +338,6 @@ def q_regr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY 1, 2
     """,
-    tags=("agg", "histogram"),
 )
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of extended price (10k-wide bins): the binning
@@ -386,7 +379,6 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY user_id) AS BIGINT) AS distinct_types_all
     FROM events
     """,
-    tags=("window", "distinct"),
 )
 def q_window_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-distinct over a window: per user, the number of distinct event
@@ -446,7 +438,6 @@ def q_window_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                OVER () AS DOUBLE) AS share_of_total
     FROM per_nation
     """,
-    tags=("window", "agg", "ratio"),
 )
 def q_percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-report: each nation's share of its region's (and the global)
@@ -511,7 +502,6 @@ def q_percent_of_total(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_users
     FROM a GROUP BY cohort_week, week_offset
     """,
-    tags=("events", "retention", "cohort"),
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention cohorts: users bucketed by the week of their first
@@ -581,7 +571,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 3, 'purchase', CAST(COUNT(*) AS BIGINT) FROM p
     """,
-    tags=("events", "funnel", "sequence"),
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered event funnel view → click → purchase: users counted at each
@@ -697,7 +686,6 @@ def _rfm_rank_two_phase(
              AS rfm_segment
     FROM ranked CROSS JOIN n
     """,
-    tags=("analytics", "segmentation", "rfm"),
     bench=True,  # the two-phase distributed-ranking family's bench
     # representative (r5 VERDICT item 6): three global rank-quintiles
     # computed without a single-partition window.
@@ -860,7 +848,6 @@ def _basket_pairs(baskets: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     ORDER BY p.n_orders DESC, p.p1, p.p2
     LIMIT {_COPURCHASE_TOPK}
     """,
-    tags=("analytics", "market-basket", "self-join"),
 )
 def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket co-purchase pairs — the recommender-feed primitive:
@@ -960,7 +947,6 @@ _TRI_MIN_W = 2  # minimum co-purchase count for an affinity edge: the raw
              AS closure_rate
     FROM counts
     """,
-    tags=("analytics", "graph", "triangles", "market-basket"),
 )
 def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed triangle count over the part-affinity graph — the graph
@@ -1126,8 +1112,7 @@ def _pagerank_oracle() -> str:
 
 @register(
     "q_part_pagerank",
-    oracle=None,  # generated (unrolled iteration CTEs) — attached below
-    tags=("analytics", "graph", "pagerank", "iterative", "bench"),
+    oracle=_pagerank_oracle(),
     bench=True,  # the iterative-graph family's bench representative
 )
 def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1243,19 +1228,6 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..plans import registry as _registry  # noqa: E402
-
-_spec = _registry._REGISTRY["q_part_pagerank"]
-_registry._REGISTRY["q_part_pagerank"] = _registry.QuerySpec(
-    name=_spec.name,
-    builder=_spec.builder,
-    oracle=_pagerank_oracle(),
-    tags=_spec.tags,
-    bench=_spec.bench,
-    doc=_spec.doc,
-)
-
-
 # --------------------------------------------------------------------------
 # Item-to-item PMI similarity (co-purchase lexicon)
 # --------------------------------------------------------------------------
@@ -1296,7 +1268,6 @@ _PMI_TOPK = 50
     ORDER BY pmi_scaled DESC, p1, p2
     LIMIT {_PMI_TOPK}
     """,
-    tags=("analytics", "graph", "pmi", "recsys"),
 )
 def q_item_pmi_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-to-item pointwise-mutual-information similarity over the
@@ -1426,7 +1397,6 @@ def _corr_matrix_oracle() -> str:
 @register(
     "q_column_correlation_matrix",
     oracle=_corr_matrix_oracle(),
-    tags=("agg", "statistics", "cbo", "correlation"),
 )
 def q_column_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson correlation + population covariance over the four

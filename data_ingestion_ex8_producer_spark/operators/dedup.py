@@ -53,7 +53,6 @@ from ._util import persist_tracked, spread, t, untrack_and_unpersist
     FROM documents
     GROUP BY md5(text)
     """,
-    tags=("dedup", "exact"),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact content dedup: hash-groupBy, keep the lowest doc_id per hash."""
@@ -73,7 +72,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1
     """,
-    tags=("dedup", "exact"),
 )
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup after canonicalization (lowercase + whitespace collapse) —
@@ -230,7 +228,6 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str, df_cap: int | None) -> Data
 @register(
     "dedup_ngram_jaccard",
     oracle=_jaccard_oracle(_DF_CAP),
-    tags=("dedup", "jaccard", "bench"),
     bench=True,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,7 +248,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_ngram_jaccard_exact",
     oracle=_jaccard_oracle(None),
-    tags=("dedup", "jaccard", "exact-baseline"),
 )
 def dedup_ngram_jaccard_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncapped exact word-3-gram Jaccard >= 0.6 — the oracle baseline for
@@ -320,7 +316,6 @@ def _containment_pairs(
 @register(
     "dedup_containment",
     oracle=_containment_oracle(_DF_CAP),
-    tags=("dedup", "containment"),
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle containment C(A→B) = |A∩B| / |A| ≥ 0.8 over the
@@ -342,7 +337,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment_exact",
     oracle=_containment_oracle(None),
-    tags=("dedup", "containment", "exact-baseline"),
 )
 def dedup_containment_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncapped exact containment ≥ 0.8 — the oracle baseline for
@@ -415,57 +409,15 @@ def minhash_band_signatures(docs: DataFrame) -> DataFrame:
     return _band_pivot(_minhash_perm_rows(docs))
 
 
-def band_match_condition(a: str = "a", b: str = "b"):
-    """Join condition: same band, identical 4-hash slice, ordered pair."""
-    cond = (F.col(f"{a}.band") == F.col(f"{b}.band")) & (
-        F.col(f"{a}.doc_id") < F.col(f"{b}.doc_id")
+def band_match_condition():
+    """Join condition between band rows aliased ``a`` and ``b``: same band,
+    identical 4-hash slice, ordered pair."""
+    cond = (F.col("a.band") == F.col("b.band")) & (
+        F.col("a.doc_id") < F.col("b.doc_id")
     )
     for r in range(_ROWS_PER_BAND):
-        cond = cond & (F.col(f"{a}.r{r}") == F.col(f"{b}.r{r}"))
+        cond = cond & (F.col(f"a.r{r}") == F.col(f"b.r{r}"))
     return cond
-
-
-@register(
-    "dedup_minhash_lsh",
-    oracle=None,  # oracle attached programmatically below (generated SQL)
-    tags=("dedup", "minhash", "lsh", "bench"),
-    bench=True,
-)
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidate pairs: 32 salted minhashes, 8 bands x 4 rows;
-    a pair is a candidate when any band's 4-hash slice matches exactly.
-
-    At s = 0.6 Jaccard the candidate probability is 1-(1-0.6^4)^8 ≈ 0.67;
-    at s = 0.9 it is ≈ 0.998 — the classic LSH S-curve.  Shuffle volume is
-    |docs| x 8 band rows, never the O(n^2) pair space.
-
-    The K hash functions are h_i = mix48(h1 + i*h2) — Kirsch-Mitzenmacher
-    double hashing from two md5 evaluations per shingle, with an avalanche
-    finalizer (without the mixer the linear family's correlated argmins gave
-    ~7x false-positive candidates at sf0.01; with it, candidates are
-    identical to fully independent salted md5 hashes, which benched 5x
-    slower).
-
-    Plan shape (found via bench, sf0.1): the perm index is EXPLODED to rows
-    so mix48 appears ONCE in the plan.  The earlier form — 32 parallel
-    ``min(mix48(h1 + i*h2))`` aggregates — inlined the ~300-node mixer tree
-    32 times and eager DataFrame analysis alone cost ~2.4 s per call, data-
-    independent; this shape builds in ~0.1 s and executes the same number of
-    mix evaluations.  Map-side partial min keeps the shuffle at |docs| x 32
-    rows either way, and the per-band 4-hash slice pivots into 4 plain long
-    join keys (no string concat).  (Also rejected: transform()-HOF lambda
-    for the K mixes — interpreted, 8x slower exec; Arrow/numpy pandas UDF —
-    ties the Catalyst path while leaving codegen.)
-    """
-    docs = spread(t(spark, sf_dir, "documents"), spark)
-    # Tiny (|docs| x 8 rows), feeds both join sides — persist.
-    bands = persist_tracked(minhash_band_signatures(docs))
-    return (
-        bands.alias("a")
-        .join(bands.alias("b"), band_match_condition())
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
 
 
 def _minhash_cte() -> str:
@@ -516,6 +468,48 @@ def _minhash_oracle() -> str:
     )
 
 
+@register(
+    "dedup_minhash_lsh",
+    oracle=_minhash_oracle(),
+    bench=True,
+)
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH candidate pairs: 32 salted minhashes, 8 bands x 4 rows;
+    a pair is a candidate when any band's 4-hash slice matches exactly.
+
+    At s = 0.6 Jaccard the candidate probability is 1-(1-0.6^4)^8 ≈ 0.67;
+    at s = 0.9 it is ≈ 0.998 — the classic LSH S-curve.  Shuffle volume is
+    |docs| x 8 band rows, never the O(n^2) pair space.
+
+    The K hash functions are h_i = mix48(h1 + i*h2) — Kirsch-Mitzenmacher
+    double hashing from two md5 evaluations per shingle, with an avalanche
+    finalizer (without the mixer the linear family's correlated argmins gave
+    ~7x false-positive candidates at sf0.01; with it, candidates are
+    identical to fully independent salted md5 hashes, which benched 5x
+    slower).
+
+    Plan shape (found via bench, sf0.1): the perm index is EXPLODED to rows
+    so mix48 appears ONCE in the plan.  The earlier form — 32 parallel
+    ``min(mix48(h1 + i*h2))`` aggregates — inlined the ~300-node mixer tree
+    32 times and eager DataFrame analysis alone cost ~2.4 s per call, data-
+    independent; this shape builds in ~0.1 s and executes the same number of
+    mix evaluations.  Map-side partial min keeps the shuffle at |docs| x 32
+    rows either way, and the per-band 4-hash slice pivots into 4 plain long
+    join keys (no string concat).  (Also rejected: transform()-HOF lambda
+    for the K mixes — interpreted, 8x slower exec; Arrow/numpy pandas UDF —
+    ties the Catalyst path while leaving codegen.)
+    """
+    docs = spread(t(spark, sf_dir, "documents"), spark)
+    # Tiny (|docs| x 8 rows), feeds both join sides — persist.
+    bands = persist_tracked(minhash_band_signatures(docs))
+    return (
+        bands.alias("a")
+        .join(bands.alias("b"), band_match_condition())
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
 def _minhash_estimate_oracle() -> str:
     agree = " + ".join(
         f"CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END"
@@ -555,7 +549,6 @@ def minhash_signature_rows(docs: DataFrame) -> DataFrame:
 @register(
     "q_minhash_jaccard_estimate",
     oracle=_minhash_estimate_oracle(),
-    tags=("dedup", "minhash", "similarity", "estimate"),
 )
 def q_minhash_jaccard_estimate(
     spark: SparkSession, sf_dir: str, enforce_candidate_budget: bool = False
@@ -704,10 +697,37 @@ def _simhash_combine():
     return F.expr(f"{guard} + {bits}").alias("simhash")
 
 
+def _simhash_oracle() -> str:
+    bit_sums = ",\n           ".join(
+        f"SUM(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
+        for b in range(_SIMHASH_BITS)
+    )
+    combine = " + ".join(
+        f"CASE WHEN s{b} >= 0 THEN CAST({2**b} AS BIGINT) ELSE 0 END"
+        for b in range(_SIMHASH_BITS)
+    )
+    return f"""
+    WITH toks AS (
+        SELECT doc_id, unnest(list_distinct({sql_shingle_list(1)})) AS token
+        FROM documents
+    ),
+    hashed AS (SELECT doc_id, {sql_hash48('token')} AS th FROM toks),
+    bitsum AS (
+        SELECT doc_id,
+           {bit_sums}
+        FROM hashed GROUP BY doc_id
+    ),
+    sig AS (SELECT doc_id, {combine} AS simhash FROM bitsum)
+    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+           CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
+    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
+    """
+
+
 @register(
     "dedup_simhash",
-    oracle=None,  # oracle attached programmatically below (generated SQL)
-    tags=("dedup", "simhash", "lsh", "bench"),
+    oracle=_simhash_oracle(),
     bench=True,
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,53 +790,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_oracle() -> str:
-    bit_sums = ",\n           ".join(
-        f"SUM(CASE WHEN (th >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(_SIMHASH_BITS)
-    )
-    combine = " + ".join(
-        f"CASE WHEN s{b} >= 0 THEN CAST({2**b} AS BIGINT) ELSE 0 END"
-        for b in range(_SIMHASH_BITS)
-    )
-    return f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(list_distinct({sql_shingle_list(1)})) AS token
-        FROM documents
-    ),
-    hashed AS (SELECT doc_id, {sql_hash48('token')} AS th FROM toks),
-    bitsum AS (
-        SELECT doc_id,
-           {bit_sums}
-        FROM hashed GROUP BY doc_id
-    ),
-    sig AS (SELECT doc_id, {combine} AS simhash FROM bitsum)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-    FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {_HAMMING_MAX}
-    """
-
-
-# Attach the generated oracles (registry stores specs immutably, so register
-# with the final SQL by rebuilding the entries).
-from ..plans import registry as _registry  # noqa: E402
-
-for _name, _sql in (
-    ("dedup_minhash_lsh", _minhash_oracle()),
-    ("dedup_simhash", _simhash_oracle()),
-):
-    _spec = _registry._REGISTRY[_name]
-    _registry._REGISTRY[_name] = _registry.QuerySpec(
-        name=_spec.name,
-        builder=_spec.builder,
-        oracle=_sql,
-        tags=_spec.tags,
-        bench=_spec.bench,
-        doc=_spec.doc,
-    )
-
-
 # --------------------------------------------------------------------------
 # Near-dup cluster resolution (connected components)
 # --------------------------------------------------------------------------
@@ -858,7 +831,6 @@ for _name, _sql in (
     FROM reach
     GROUP BY a
     """,
-    tags=("dedup", "clusters", "iterative"),
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the DF-capped near-dup (Jaccard >= 0.6):
@@ -983,7 +955,6 @@ def sql_keeper_ctes(extra_cols: str = "", where: str = "") -> str:
     JOIN keeper k USING (h)
     LEFT JOIN nd ON nd.doc_id = d.doc_id
     """,
-    tags=("dedup", "curation", "survivorship"),
 )
 def q_dedup_survivorship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document dedup verdict — the artifact a curation release ships:
@@ -1076,7 +1047,6 @@ _INC_MOD = 5  # doc_id % 5 == 0 -> the "incoming batch" stand-in slice
     LEFT JOIN keeper k USING (h)
     LEFT JOIN near n ON n.inc_id = i.doc_id
     """,
-    tags=("dedup", "incremental", "curation"),
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup: label each document of an INCOMING batch (here
@@ -1152,7 +1122,6 @@ def _cluster_stats_oracle() -> str:
 @register(
     "q_dedup_cluster_stats",
     oracle=_cluster_stats_oracle(),
-    tags=("dedup", "clusters", "reporting"),
 )
 def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-size distribution of the near-dup graph: for each cluster
@@ -1217,7 +1186,6 @@ def _pair_recall_oracle() -> str:
 @register(
     "q_dedup_pair_recall",
     oracle=_pair_recall_oracle(),
-    tags=("dedup", "evaluation"),
 )
 def q_dedup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall AND precision of the two deployed near-dup scale paths against
@@ -1306,7 +1274,6 @@ def q_dedup_pair_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM((c * (c - 1)) // 2) AS BIGINT) AS candidate_pairs
     FROM buckets GROUP BY band
     """,
-    tags=("dedup", "minhash", "lsh", "diagnostics"),
 )
 def q_lsh_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Band-bucket health report for the deployed MinHash-LSH index — the
@@ -1435,8 +1402,7 @@ def _edit_distance_oracle() -> str:
 
 @register(
     "dedup_edit_distance",
-    oracle=None,  # generated (shares the minhash CTE) — attached below
-    tags=("dedup", "levenshtein", "lsh", "two-stage"),
+    oracle=_edit_distance_oracle(),
 )
 def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance near-dup pairs — the character-level complement of the
@@ -1516,18 +1482,6 @@ def dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-for _name, _sql in (("dedup_edit_distance", _edit_distance_oracle()),):
-    _spec = _registry._REGISTRY[_name]
-    _registry._REGISTRY[_name] = _registry.QuerySpec(
-        name=_spec.name,
-        builder=_spec.builder,
-        oracle=_sql,
-        tags=_spec.tags,
-        bench=_spec.bench,
-        doc=_spec.doc,
-    )
-
-
 # --------------------------------------------------------------------------
 # Dedup threshold sweep (the release-threshold tuning dial)
 # --------------------------------------------------------------------------
@@ -1585,7 +1539,6 @@ def _threshold_curve_oracle() -> str:
 @register(
     "q_dedup_threshold_curve",
     oracle=_threshold_curve_oracle(),
-    tags=("dedup", "minhash", "tuning", "report"),
 )
 def q_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup release-threshold sweep: for each candidate similarity cutoff
@@ -1674,7 +1627,6 @@ _PREFIX_TAU_DEN = 5
     # reproduce the full all-shingles answer exactly — the correctness gate
     # itself verifies the filter loses nothing.
     oracle=_jaccard_oracle(None),
-    tags=("dedup", "jaccard", "prefix-filter"),
 )
 def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-3-gram Jaccard >= 0.6 pairs via PREFIX FILTERING (public:
@@ -1811,7 +1763,6 @@ def dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes sa ON sa.source = source_a
     JOIN sizes sb ON sb.source = source_b
     """,
-    tags=("dedup", "sources", "reporting"),
 )
 def q_source_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise SOURCE-level shingle Jaccard — the cross-source duplication
@@ -1904,7 +1855,6 @@ def _leakage_safe_split_oracle() -> str:
 @register(
     "q_leakage_safe_split",
     oracle=_leakage_safe_split_oracle(),
-    tags=("dedup", "pipeline", "split", "decontamination"),
 )
 def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup-aware 80/10/10 split: every document is assigned by the
@@ -1955,8 +1905,19 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_simhash_hamming_curve",
-    oracle=None,  # attached below (wraps the generated dedup_simhash SQL)
-    tags=("dedup", "simhash", "curve"),
+    oracle=f"""
+    WITH pairs AS ({_simhash_oracle()})
+    , per_radius AS (
+        SELECT CAST(hamming AS BIGINT) AS hamming,
+               CAST(COUNT(*) AS BIGINT) AS n_pairs
+        FROM pairs GROUP BY 1
+    )
+    SELECT hamming, n_pairs,
+           CAST(SUM(n_pairs) OVER (ORDER BY hamming
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                AS BIGINT) AS cum_pairs
+    FROM per_radius
+    """,
 )
 def q_simhash_hamming_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair counts by exact hamming radius 0..3 over the 48-bit
@@ -1985,29 +1946,6 @@ def q_simhash_hamming_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_radius.withColumn(
         "cum_pairs", F.sum("n_pairs").over(w).cast("long")
     )
-
-
-_curve_spec = _registry._REGISTRY["q_simhash_hamming_curve"]
-_registry._REGISTRY["q_simhash_hamming_curve"] = _registry.QuerySpec(
-    name=_curve_spec.name,
-    builder=_curve_spec.builder,
-    oracle=f"""
-    WITH pairs AS ({_simhash_oracle()})
-    , per_radius AS (
-        SELECT CAST(hamming AS BIGINT) AS hamming,
-               CAST(COUNT(*) AS BIGINT) AS n_pairs
-        FROM pairs GROUP BY 1
-    )
-    SELECT hamming, n_pairs,
-           CAST(SUM(n_pairs) OVER (ORDER BY hamming
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS cum_pairs
-    FROM per_radius
-    """,
-    tags=_curve_spec.tags,
-    bench=_curve_spec.bench,
-    doc=_curve_spec.doc,
-)
 
 
 # --------------------------------------------------------------------------
@@ -2121,7 +2059,6 @@ def _kmv_oracle() -> str:
 @register(
     "q_kmv_sketch_setops",
     oracle=_kmv_oracle(),
-    tags=("dedup", "sketch", "sources", "setops"),
     bench=True,
 )
 def q_kmv_sketch_setops(spark: SparkSession, sf_dir: str) -> DataFrame:

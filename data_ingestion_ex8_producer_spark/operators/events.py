@@ -33,7 +33,6 @@ from ._util import t
     FROM events
     GROUP BY 1, 2, 3
     """,
-    tags=("events", "window", "bench"),
     bench=True,
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -76,7 +75,6 @@ def tumbling_counts(events: DataFrame) -> DataFrame:
     FROM slid
     GROUP BY 1, 2
     """,
-    tags=("events", "window"),
 )
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (1 h length, 30 min slide): every event lands in two
@@ -124,7 +122,6 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM numbered
     GROUP BY user_id, session_id
     """,
-    tags=("events", "session"),
 )
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 10-minute inactivity gap per user.  Spark's
@@ -157,7 +154,6 @@ def session_values(events: DataFrame) -> DataFrame:
     SELECT DISTINCT user_id, event_type
     FROM events
     """,
-    tags=("events", "dedup"),
 )
 def q_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct over a projected key set — the batch twin of streaming
@@ -178,7 +174,6 @@ def q_event_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name, e.event_type
     ORDER BY n.n_name, e.event_type
     """,
-    tags=("events", "join"),
 )
 def q_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment shape (events joined to dimension tables),
@@ -220,7 +215,6 @@ def q_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(a.n_events IS NULL AS BOOLEAN) AS is_gap
     FROM hours h LEFT JOIN actual a ON h.hour_start = a.hour_start
     """,
-    tags=("events", "timeseries", "gapfill"),
 )
 def q_time_series_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-series gap filling: a generated dense hour spine left-joined to
@@ -277,7 +271,6 @@ def q_time_series_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM numbered
     GROUP BY user_id, session_id
     """,
-    tags=("events", "session", "dynamic-gap"),
 )
 def q_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a DYNAMIC per-event gap (purchases hold the
@@ -314,7 +307,6 @@ def q_session_window_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (date_trunc('day', ts), date_trunc('hour', ts))
     HAVING GROUPING(date_trunc('day', ts)) = 0
     """,
-    tags=("events", "rollup", "timeseries"),
 )
 def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style multi-granularity rollup: hourly AND daily aggregates
@@ -365,7 +357,6 @@ _BURST_FACTOR = 2  # burst = count > FACTOR x trailing mean
              AS is_burst
     FROM trailed
     """,
-    tags=("events", "window", "anomaly"),
 )
 def q_event_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Traffic-burst flags: an hour bucket is a burst when its event count
@@ -459,7 +450,6 @@ def q_event_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS is_burst
     FROM trailed
     """,
-    tags=("events", "window", "anomaly", "gapfill"),
 )
 def q_event_burst_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burst detection over a GAP-FILLED hour spine — the variant an
@@ -548,7 +538,6 @@ def q_event_burst_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=("events", "features", "ml"),
 )
 def q_user_activity_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user behavioral feature vector — the feature-extraction pass that
@@ -613,7 +602,6 @@ _PATH_TOPN = 10
           FROM paths)
     WHERE rk <= {_PATH_TOPN}
     """,
-    tags=("events", "sequence", "paths", "bench"),
     bench=True,
 )
 def q_event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -679,7 +667,6 @@ def q_event_path_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM seq WHERE to_type IS NOT NULL
     GROUP BY 1, 2
     """,
-    tags=("events", "sequence", "dwell"),
 )
 def q_event_transition_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transition dwell-time matrix: for every (from_type, to_type) pair of
@@ -745,7 +732,6 @@ _SKEW_TOPN = 20
     ) CROSS JOIN tot
     WHERE rk <= {_SKEW_TOPN}
     """,
-    tags=("events", "diagnostics", "skew"),
 )
 def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-key skew report for the stream's natural partitioning key:
@@ -823,7 +809,6 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE event_type = 'purchase'
     GROUP BY attributed_type
     """,
-    tags=("events", "attribution"),
 )
 def q_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch purchase attribution: every purchase's value is credited
@@ -889,7 +874,6 @@ _TWAP_Q4 = 10_000  # value quantization grid for the weighted sum
     WHERE hold_sec IS NOT NULL AND hold_sec > 0
     GROUP BY event_type
     """,
-    tags=("events", "timeseries", "twap"),
 )
 def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per event type (TWAP): each observation
@@ -964,7 +948,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked
     GROUP BY event_type, hour_start
     """,
-    tags=("events", "timeseries", "ohlc"),
 )
 def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event type — the canonical downsampling of an
@@ -1059,7 +1042,6 @@ _VO_Q2 = 100  # event values are 2-decimal; the 1e-2 grid is exact
     FROM vq v JOIN stats st ON st.event_type = v.event_type
     GROUP BY v.event_type, st.n_events, st.mean_q, st.var_q
     """,
-    tags=("events", "anomaly", "zscore"),
 )
 def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-based anomaly report per event type — the z-score complement
@@ -1154,7 +1136,6 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(d.dau AS DOUBLE) / w.wau AS stickiness
     FROM dau d JOIN wau w ON w.day = d.day
     """,
-    tags=("events", "engagement", "window-distinct"),
 )
 def q_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/WAU stickiness — the canonical engagement ratio: per active
@@ -1259,7 +1240,6 @@ def q_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN stats st ON st.event_type = c.event_type AND st.hod = c.hod
     GROUP BY c.event_type, c.hod, st.n_cells, st.mean_q, st.var_q
     """,
-    tags=("events", "anomaly", "seasonal", "zscore"),
 )
 def q_seasonal_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal rate-anomaly report: for every (event_type, hour-of-day)
@@ -1369,7 +1349,6 @@ _EWMA_WEIGHTS = tuple((d, 1 << (_EWMA_WINDOW - 1 - d)) for d in range(_EWMA_WIND
       ON k.event_type = o.event_type AND k.hour_start = o.hour_start
     GROUP BY o.event_type, o.hour_start, o.x
     """,
-    tags=("events", "timeseries", "smoothing"),
 )
 def q_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of the hourly event rate per
@@ -1453,7 +1432,6 @@ def q_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(x) AS BIGINT) AS n_events
     FROM isl GROUP BY event_type, grp
     """,
-    tags=("events", "islands", "timeseries"),
 )
 def q_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Activity islands per event type: maximal runs of CONSECUTIVE hours
@@ -1536,7 +1514,6 @@ def q_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1 ELSE 0 END AS BIGINT) AS is_current
     FROM ch
     """,
-    tags=("events", "scd2", "temporal", "cdc"),
 )
 def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 build from a change stream — the
@@ -1631,7 +1608,6 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN mad a ON a.event_type = d.event_type
     GROUP BY m.event_type, m.n_events, m.medq, a.madq
     """,
-    tags=("events", "anomaly", "robust", "mad"),
 )
 def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier report per event type: median and MAD (median
@@ -1757,7 +1733,6 @@ def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS is_changepoint
     FROM c CROSS JOIN m
     """,
-    tags=("events", "timeseries", "changepoint", "cusum"),
 )
 def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM change-point scan over the daily event-count series: the
@@ -1854,7 +1829,6 @@ _AC_MAX_LAG = 7
                 END AS r
     FROM s
     """,
-    tags=("events", "timeseries", "autocorrelation"),
 )
 def q_daily_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1..7 Pearson autocorrelation of the daily event-count series —
@@ -1975,7 +1949,6 @@ def _drift_oracle() -> str:
 @register(
     "q_distribution_drift",
     oracle=_drift_oracle(),
-    tags=("events", "drift", "mlops", "monitoring"),
 )
 def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-distribution drift between two time slices — the data-drift

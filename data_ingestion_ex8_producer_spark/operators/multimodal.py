@@ -47,7 +47,6 @@ from ._util import t
                 ELSE 'video' END AS kind
     FROM documents
     """,
-    tags=("multimodal", "binary"),
 )
 def mm_binary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Treat content as an opaque binary payload: byte length, content md5,
@@ -240,7 +239,6 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
              AS n_frames
     FROM documents
     """,
-    tags=("multimodal", "mapinpandas", "bench"),
     bench=True,
 )
 def mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -289,7 +287,6 @@ def _decode_batches(
     SELECT doc_id, CAST(unnest(range(0, n_frames, 30)) AS INTEGER) AS frame_idx
     FROM meta
     """,
-    tags=("multimodal", "frames"),
 )
 def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling plan for video payloads: one output row per sampled
@@ -308,11 +305,11 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _fake_resize(width: int, height: int, box: int = 224) -> tuple[int, int]:
-    """Aspect-preserving fit into a box x box target, integer arithmetic
+def _fake_resize(width: int, height: int) -> tuple[int, int]:
+    """Aspect-preserving fit into a 224 x 224 target, integer arithmetic
     only (exact in any engine), never upscaling — the real resize call
     (PIL.Image.resize / libvips) slots in where the dimensions are used."""
-    scale = min(box * 1000 // width, box * 1000 // height, 1000)
+    scale = min(224_000 // width, 224_000 // height, 1000)
     return max(1, width * scale // 1000), max(1, height * scale // 1000)
 
 
@@ -339,7 +336,6 @@ def _fake_resize(width: int, height: int, box: int = 224) -> tuple[int, int]:
                 * greatest(1, height * s // 1000) * 3 AS BIGINT) AS out_bytes
     FROM scaled
     """,
-    tags=("multimodal", "mapinpandas", "resize"),
 )
 def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Resize plan over decoded payloads: aspect-preserving 224-box target
@@ -387,7 +383,6 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 FOR k IN range(8)], ',') AS features_q3
     FROM documents
     """,
-    tags=("multimodal", "mapinpandas", "features"),
 )
 def mm_embed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature extraction over binary payloads: a fixed-length float vector
@@ -461,7 +456,6 @@ _RMS_WINDOW = 256  # samples per analysis window
            CAST(peak AS BIGINT) AS peak
     FROM w
     """,
-    tags=("multimodal", "audio", "features"),
 )
 def mm_audio_window_rms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio-style feature extraction over the binary payload: treat the
@@ -566,7 +560,6 @@ _SHARD_DOC_BUCKET = 64  # doc_ids per prefix-sum ranking bucket
     FROM placed
     GROUP BY 1
     """,
-    tags=("multimodal", "packing", "shards", "manifest"),
 )
 def mm_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset-style shard manifest: assign every sample (whole, never

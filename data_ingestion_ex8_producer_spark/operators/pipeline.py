@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions.text import hash48, sql_hash48, sql_tokens
 from ..plans.registry import register
 from ._util import t
+from .dedup import content_hashed, keeper_of, sql_keeper_ctes
 from .similarity import _DIM as _EMB_DIM  # one source of truth for vector width
 
 # --------------------------------------------------------------------------
@@ -49,7 +50,6 @@ _HASH_SPACE = float(1 << 48)
           / {_HASH_SPACE}
           < CASE lang WHEN 'en' THEN 0.35 ELSE 1.0 END
     """,
-    tags=("pipeline", "sampling"),
 )
 def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling: keep a doc when
@@ -87,7 +87,6 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'test' END AS split
     FROM assigned
     """,
-    tags=("pipeline", "split"),
 )
 def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test assignment by salted content-key
@@ -130,7 +129,6 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   AS BIGINT) AS VARCHAR)), ',') AS unit_q6
     FROM n WHERE nrm > 0
     """,
-    tags=("pipeline", "vector"),
 )
 def emb_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalize each embedding to a unit vector (the precondition for
@@ -189,7 +187,6 @@ _QUANT = 1_000_000  # 1e-6 quantization for order-independent vector sums
     FROM elems
     GROUP BY label, pos
     """,
-    tags=("pipeline", "vector", "agg"),
 )
 def emb_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid vectors, one row per (label, dimension): posexplode
@@ -243,7 +240,6 @@ def emb_centroid_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT l_orderkey, l_linenumber, 'l_tax', l_tax
     FROM lineitem WHERE l_orderkey < 1000
     """,
-    tags=("reshape", "unpivot"),
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unpivot (wide→long melt) of four lineitem measures into
@@ -293,7 +289,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
                (a, b) -> a + b) / len(embedding) AS mse
     FROM s WHERE scale > 0
     """,
-    tags=("pipeline", "vector", "quantization"),
 )
 def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric int8 scalar quantization of each embedding: per-vector
@@ -361,7 +356,6 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(total AS DOUBLE) / n_langs / n_docs AS mix_weight
     FROM counts, tot
     """,
-    tags=("pipeline", "sampling", "mixture"),
 )
 def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language resampling weights to rebalance the corpus toward a
@@ -412,7 +406,6 @@ _QUOTA_CAP = 15
         FROM documents
     ) WHERE rk <= {_QUOTA_CAP}
     """,
-    tags=("pipeline", "sampling", "quota"),
 )
 def q_source_quota_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quota: keep at most 15 documents per source, chosen by
@@ -486,7 +479,6 @@ def _emb_elems(spark: SparkSession, sf_dir: str, *extra: str) -> DataFrame:
     FROM {_SQL_EMB_ELEMS}
     GROUP BY dim
     """,
-    tags=("pipeline", "vector", "stats"),
 )
 def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension min/max/mean across the whole embedding corpus — the
@@ -536,7 +528,6 @@ def emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY ROLLUP(lang, source)
     """,
-    tags=("pipeline", "reporting", "rollup"),
 )
 def q_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE first question asked of any training corpus: how many tokens do
@@ -608,7 +599,6 @@ _FUNNEL_MIN_TTR = 0.3  # distinct/total token ratio floor
         UNION ALL SELECT 4, 'exact_dedup', dedup_ok FROM agg
     )
     """,
-    tags=("pipeline", "reporting", "funnel"),
     bench=True,
 )
 def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,7 +704,6 @@ _OUT_TOPN = 10
         FROM d2
     ) WHERE rk <= {_OUT_TOPN}
     """.replace("{elems}", _sql_emb_elems(" label,")),
-    tags=("pipeline", "vector", "outliers", "evaluation"),
 )
 def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding QA: the 10 vectors FURTHEST from their label's centroid,
@@ -814,7 +803,6 @@ _PACK_CTX = 256  # tokens per training context
              AS padded_contexts
     FROM n
     """,
-    tags=("pipeline", "reporting", "packing"),
 )
 def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-packing planning report for a 256-token training context:
@@ -882,7 +870,6 @@ _PACK_DOC_BUCKET = 64  # doc_ids per cumulative-sum ranking bucket
                      THEN 1 ELSE 0 END AS BIGINT) AS crosses_boundary
     FROM pos
     """,
-    tags=("pipeline", "packing", "ordering"),
     bench=True,
 )
 def q_concat_chunk_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,10 +944,19 @@ def q_concat_chunk_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_source_dup_profile",
-    oracle=None,  # attached below: shares dedup.sql_keeper_ctes with
-                  # q_dedup_survivorship so the keep-first policy is
-                  # single-sourced on the SQL side too
-    tags=("pipeline", "dedup", "reporting"),
+    # shares dedup.sql_keeper_ctes with q_dedup_survivorship so the
+    # keep-first policy is single-sourced on the SQL side too
+    oracle=f"""
+    WITH {sql_keeper_ctes("source")}
+    SELECT source,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_exact_dups,
+           CAST(SUM(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS DOUBLE)
+             / COUNT(*) AS dup_rate
+    FROM hashes JOIN keeper USING (h)
+    GROUP BY source
+    """,
 )
 def q_source_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source duplication profile: how many of each source's documents
@@ -973,8 +969,6 @@ def q_source_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper relations come from dedup.content_hashed/keeper_of — the SAME
     definitions q_dedup_survivorship uses, so the keep-first policy cannot
     drift between the per-doc verdict and this per-source rollup."""
-    from .dedup import content_hashed, keeper_of
-
     docs = content_hashed(spark, sf_dir, "source")
     keeper = keeper_of(docs)
     dup = (F.col("doc_id") != F.col("keep_id")).cast("int")
@@ -987,30 +981,6 @@ def q_source_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(dup).cast("double") / F.count(F.lit(1))).alias("dup_rate"),
         )
     )
-
-
-from ..plans import registry as _registry  # noqa: E402
-from .dedup import sql_keeper_ctes  # noqa: E402
-
-_spec = _registry._REGISTRY["q_source_dup_profile"]
-_registry._REGISTRY["q_source_dup_profile"] = _registry.QuerySpec(
-    name=_spec.name,
-    builder=_spec.builder,
-    oracle=f"""
-    WITH {sql_keeper_ctes("source")}
-    SELECT source,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_exact_dups,
-           CAST(SUM(CASE WHEN doc_id <> keep_id THEN 1 ELSE 0 END) AS DOUBLE)
-             / COUNT(*) AS dup_rate
-    FROM hashes JOIN keeper USING (h)
-    GROUP BY source
-    """,
-    tags=_spec.tags,
-    bench=_spec.bench,
-    doc=_spec.doc,
-)
 
 
 # --------------------------------------------------------------------------
@@ -1038,7 +1008,6 @@ _registry._REGISTRY["q_source_dup_profile"] = _registry.QuerySpec(
     FROM ranked
     GROUP BY dim
     """,
-    tags=("pipeline", "vector", "stats", "quantiles"),
 )
 def q_emb_dim_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-dimension spread profile: exact p05/p50/p95 ORDER
@@ -1102,7 +1071,6 @@ def q_emb_dim_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts
     GROUP BY lang
     """,
-    tags=("pipeline", "reporting", "diversity"),
 )
 def q_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language source-concentration report: Simpson index
@@ -1162,7 +1130,6 @@ def q_source_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE CAST({sql_hash48("'balance:' || CAST(d.doc_id AS VARCHAR)")} AS DOUBLE)
           / {_HASH_SPACE} < r.rate
     """,
-    tags=("pipeline", "sampling", "balance"),
 )
 def q_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Balanced stratified downsampling with DATA-DERIVED rates: each
@@ -1214,7 +1181,6 @@ _CURRICULUM_BUCKET = 64  # n_chars per ranking bucket
            ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS train_order
     FROM documents
     """,
-    tags=("pipeline", "curriculum", "ordering"),
 )
 def q_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global curriculum position for every document — train on short
@@ -1417,7 +1383,6 @@ def _gram_and_v2(spark: SparkSession, sf_dir: str):
 @register(
     "q_emb_top_component",
     oracle=_top_component_oracle(),
-    tags=("pipeline", "vector", "pca", "iterative"),
 )
 def q_emb_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal direction of the embedding corpus — exact
@@ -1512,7 +1477,6 @@ def _remove_top_oracle() -> str:
 @register(
     "q_emb_remove_top_component",
     oracle=_remove_top_oracle(),
-    tags=("pipeline", "vector", "pca", "projection"),
 )
 def q_emb_remove_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-but-the-top, applied: project every embedding onto the orthogonal
@@ -1616,7 +1580,6 @@ def q_emb_remove_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(top_cnt AS DOUBLE) / n_docs AS top_lang_share
     FROM base CROSS JOIN dup CROSS JOIN top
     """,
-    tags=("curation", "report", "dataset-card"),
 )
 def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row dataset card: document and token totals, language/source
@@ -1724,7 +1687,6 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(weight AS DOUBLE) * total / (wsum * n_docs) AS resample_weight
     FROM w, tot
     """,
-    tags=("pipeline", "sampling", "mixture", "temperature"),
 )
 def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-smoothed language mixture at tau = 2 — the multilingual
@@ -1834,7 +1796,6 @@ _DSIR_QUOTA_DEN = 10      # select the top 1/10th by importance weight
                 AS BIGINT) AS selected
     FROM ranked CROSS JOIN n
     """,
-    tags=("curation", "selection", "dsir", "importance"),
 )
 def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style importance-weighted data selection (Xie et al. 2023,
@@ -1983,7 +1944,6 @@ _BUDGET_HASH_BUCKET = 1 << 44  # 16 contiguous ranges of the 48-bit keyspace
                      THEN 1 ELSE 0 END AS BIGINT) AS kept
     FROM c CROSS JOIN b
     """,
-    tags=("curation", "sampling", "budget", "mixture"),
 )
 def q_token_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget-capped per-source sampling — the corpus-assembly step
@@ -2121,7 +2081,6 @@ _EPOCH_MAX_MILLI = 4000  # repeat any source at most 4 epochs (milli-units)
              AS budget_leftover
     FROM a CROSS JOIN b
     """,
-    tags=("curation", "mixture", "budget", "epochs"),
 )
 def q_epoch_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-constrained epoch allocation — the repeat-data budget planner
@@ -2227,7 +2186,6 @@ _MV_CUT = "1997-01-01"
     LEFT JOIN old o ON o.o_orderpriority = f.o_orderpriority
     LEFT JOIN delta d ON d.o_orderpriority = f.o_orderpriority
     """,
-    tags=("pipeline", "incremental", "materialized-view"),
 )
 def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialized-view delta maintenance as a verifiable identity: the
@@ -2337,7 +2295,6 @@ _MERGE_CUT = "2024-01-30"
                 AS BIGINT) AS state_checksum
     FROM merged GROUP BY action
     """,
-    tags=("pipeline", "cdc", "merge", "upsert"),
 )
 def q_cdc_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO (upsert) semantics on plain tables, with per-action
@@ -2485,7 +2442,6 @@ def _strat_oracle() -> str:
 @register(
     "q_stratified_sample",
     oracle=_strat_oracle(),
-    tags=("curation", "sampling", "stratified", "bench"),
     bench=True,
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2610,7 +2566,6 @@ def _shard_oracle() -> str:
 @register(
     "q_shard_checksum",
     oracle=_shard_oracle(),
-    tags=("pipeline", "reproducibility", "checksum", "audit"),
 )
 def q_shard_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-shard reproducibility manifest for the shipped corpus: shard

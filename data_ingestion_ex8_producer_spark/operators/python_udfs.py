@@ -61,7 +61,6 @@ def _make_fold_accents():
     FROM documents
     WHERE doc_id < 100
     """,
-    tags=("udf", "pandas-udf"),
 )
 def udf_accent_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar pandas_udf: data-level accent folding (the data-plane twin of
@@ -94,7 +93,6 @@ def udf_accent_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     )
     """,
-    tags=("udf", "applyinpandas"),
 )
 def udaf_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map applyInPandas: per-user min-max normalization of event
@@ -154,7 +152,6 @@ def udaf_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM toks
     WHERE len(ts) >= 2
     """,
-    tags=("udf", "udtf"),
 )
 def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF: one input document row -> many (pos, bigram) output rows
@@ -200,7 +197,6 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
            COALESCE(n_events, 0) AS n_events
     FROM o FULL OUTER JOIN e ON o.custkey = e.custkey
     """,
-    tags=("udf", "cogroup", "pandas"),
 )
 def udaf_cogroup_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogrouped applyInPandas: orders and events cogrouped per customer key,

@@ -60,7 +60,6 @@ from ._util import (
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    tags=("agg", "filter", "bench"),
     bench=True,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,7 +97,6 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l_discount > 0.05
       AND l_quantity < 10
     """,
-    tags=("filter", "project"),
 )
 def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective filter + narrow projection; predicate + column pruning reach
@@ -129,7 +127,6 @@ def q_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 25
     """,
-    tags=("sort", "limit"),
 )
 def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-k: orderBy + limit compiles to TakeOrderedAndProject (per-
@@ -161,7 +158,6 @@ def q_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     ORDER BY n.n_name
     """,
-    tags=("join", "agg", "bench"),
     bench=True,
 )
 def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,7 +198,6 @@ def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN orders o ON c.c_custkey = o.o_custkey
     GROUP BY c.c_custkey, c.c_name
     """,
-    tags=("join", "outer", "agg"),
 )
 def q_customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join + aggregate; COUNT(col) counts only matched rows, and
@@ -230,7 +225,6 @@ def q_customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F')
     """,
-    tags=("join", "semi"),
 )
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers with at least one finished order.  Semi join
@@ -250,7 +244,6 @@ def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'P')
     """,
-    tags=("join", "anti"),
 )
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no in-progress ('P') order."""
@@ -273,7 +266,6 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY p.p_brand
     ORDER BY p.p_brand
     """,
-    tags=("join", "range"),
 )
 def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi + range (non-equi) join condition: the equi key carries the
@@ -301,7 +293,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM region r
     CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
     """,
-    tags=("join", "cross"),
 )
 def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join of two tiny relations (5 regions x |status| enum) — the only
@@ -326,7 +317,6 @@ def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY n.n_name
     ORDER BY revenue DESC, n_name
     """,
-    tags=("join", "agg", "bench"),
     bench=True,
 )
 def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,7 +362,6 @@ def q5_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
-    tags=("agg", "distinct", "bench"),
     bench=True,
 )
 def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -393,7 +382,6 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_approx_distinct",
     oracle=None,  # HLL sketch result is engine-specific; driver rows-only check
-    tags=("agg", "approx"),
 )
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++): the scale path for distinct
@@ -419,7 +407,6 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
-    tags=("agg", "rollup"),
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (flag, flag+status, grand total) in one pass
@@ -441,7 +428,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
-    tags=("agg", "cube"),
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two low-cardinality dimensions — all 4 grouping sets."""
@@ -460,7 +446,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
     """,
-    tags=("agg", "grouping-sets"),
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (two disjoint single-column sets) via Spark SQL."""
@@ -487,7 +472,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT c_custkey, c_mktsegment AS segment FROM customer WHERE c_mktsegment = 'AUTOMOBILE'
     """,
-    tags=("setop",),
 )
 def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL (bag semantics) — a no-shuffle concatenation of partitions."""
@@ -508,7 +492,6 @@ def q_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
     """,
-    tags=("setop",),
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT (set semantics): customers holding both finished and open
@@ -526,7 +509,6 @@ def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT o_custkey AS c_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
     """,
-    tags=("setop",),
 )
 def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXCEPT (set semantics): machinery-segment customers with no urgent
@@ -556,7 +538,6 @@ def q_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
-    tags=("agg", "argminmax"),
 )
 def q_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """min_by / max_by (argmin/argmax aggregates) over a deterministic

@@ -34,7 +34,6 @@ from ._util import t
            lpad(CAST(p_size AS VARCHAR), 4, '0') AS size_padded
     FROM part
     """,
-    tags=("scalar", "string"),
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String battery: case-mapping, length, substring, concat, replace,
@@ -68,7 +67,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CAST(o_orderdate AS DATE) + INTERVAL 90 DAY AS TIMESTAMP) AS due_ts
     FROM orders
     """,
-    tags=("scalar", "date"),
 )
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date battery: extraction, truncation, diff, arithmetic.  Extractions
@@ -103,7 +101,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
            least(c_acctbal, 1000.0) AS bal_capped
     FROM customer
     """,
-    tags=("scalar", "math"),
 )
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math battery restricted to IEEE-exact operations (abs/ceil/floor/sqrt/
@@ -134,7 +131,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    tags=("scalar", "json"),
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON path extraction from the events.props payload column + aggregate.
@@ -161,7 +157,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
     """,
-    tags=("scalar", "json"),
 )
 def q_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json with an explicit schema -> typed struct -> filter on a field.
@@ -190,7 +185,6 @@ def q_from_json_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY bucket
     """,
-    tags=("scalar", "conditional"),
 )
 def q_case_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN bucketing + conditional aggregation + coalesce/nullif — the
@@ -235,7 +229,6 @@ def q_case_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    tags=("agg", "pivot"),
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot with an explicit value list (required at scale: no extra pass to
@@ -259,7 +252,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) BETWEEN 20 AND 40
     """,
-    tags=("scalar", "json", "variant"),
 )
 def q_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured access via the Spark 4 VARIANT type: parse_json once

@@ -29,7 +29,6 @@ _SALT_BUCKETS = 16
     FROM lineitem
     GROUP BY l_returnflag
     """,
-    tags=("agg", "skew", "salting"),
 )
 def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over a LOW-cardinality (hence maximally
@@ -70,7 +69,6 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY o_orderstatus
     """,
-    tags=("join", "skew", "salting"),
 )
 def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Salted (hot-key-replicated) join: the fact side gets a deterministic
@@ -125,7 +123,6 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderstatus
     ORDER BY o_orderstatus
     """,
-    tags=("agg", "percentile"),
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark percentile == DuckDB
@@ -155,7 +152,6 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ts
           FROM documents WHERE doc_id < 20) d
     """,
-    tags=("explode", "array"),
 )
 def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode: token stream with 0-based positions (oracle zips a
@@ -185,7 +181,6 @@ def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
            array_to_string(list_reverse(ts[1:3]), '-') AS head_reversed
     FROM toks
     """,
-    tags=("scalar", "array"),
 )
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-function battery: indexing, slice, sort, containment, position,
@@ -219,7 +214,6 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_approx_percentile",
     oracle=None,  # sketch (GK/KLL) results are engine-specific; rows-only
-    tags=("agg", "approx", "percentile"),
 )
 def q_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_percentile: the one-pass mergeable-sketch quantile — the scale
@@ -269,7 +263,6 @@ _PROX_WINDOW_US = 300_000_000  # +/- 5 minutes, exact integer microseconds
      AND b.event_id > a.event_id
      AND abs(b.t_us - a.t_us) <= {_PROX_WINDOW_US}
     """,
-    tags=("events", "join", "temporal", "scale-pattern"),
 )
 def q_event_proximity_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal proximity self-join: all same-user event pairs within
@@ -397,7 +390,6 @@ def _morton(x, y):
            CAST(MAX(y) - MIN(y) + 1 AS BIGINT) AS day_span
     FROM z GROUP BY zcell
     """,
-    tags=("layout", "zorder", "clustering", "pruning"),
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering cells over orders(custkey, orderdate) —
@@ -702,7 +694,6 @@ def _zonemap_eval(
 @register(
     "q_zonemap_skipping",
     oracle=_zm_oracle(),
-    tags=("layout", "zonemap", "pruning", "zorder"),
 )
 def q_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zone-map file-skipping effectiveness under four physical layouts
@@ -732,7 +723,6 @@ def q_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_zonemap_skipping_sampled",
     oracle=_zm_oracle(sampled=True, file_rows=_ZM_SAMPLE_FILE_ROWS),
-    tags=("layout", "zonemap", "pruning", "zorder", "sampled"),
 )
 def q_zonemap_skipping_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The layout advisor the docstring above tells you to run at 100 TB:
@@ -821,7 +811,6 @@ def _bloom_oracle() -> str:
 @register(
     "q_bloom_join_prefilter",
     oracle=_bloom_oracle(),
-    tags=("join", "bloom", "runtime-filter", "scale-pattern"),
 )
 def q_bloom_join_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom semi-join prefilter measurement (see module comment): build a
@@ -967,7 +956,6 @@ _CP_SMALL = _CP_TARGET_ROWS // 2  # a file under half target is "small"
              AS file_ratio
     FROM before b JOIN after a ON a.month = b.month
     """,
-    tags=("layout", "compaction", "maintenance"),
 )
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-partition small-file compaction plan (see module comment):
@@ -1099,7 +1087,6 @@ def _pp_oracle() -> str:
 @register(
     "q_partition_pruning_report",
     oracle=_pp_oracle(),
-    tags=("layout", "partitioning", "pruning", "warehouse"),
 )
 def q_partition_pruning_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-key advisor (see block comment): per candidate key, the

@@ -23,7 +23,6 @@ from ._util import t
     FROM orders
     WHERE o_totalprice > 0.9 * (SELECT MAX(o_totalprice) FROM orders)
     """,
-    tags=("subquery", "scalar"),
 )
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncorrelated scalar subquery: orders within 10% of the global max.
@@ -38,18 +37,24 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_correlated_exists",
-    oracle="""
+# The DuckDB side uses the builder's exact-average construction (see its
+# float note), not a plain AVG.
+_CORRELATED_ORACLE = """
     SELECT c_custkey, c_acctbal
     FROM customer c
-    WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
+    WHERE c_acctbal > (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(12,4))) AS DOUBLE)
+                              / COUNT(c2.c_acctbal)
+                       FROM customer c2
                        WHERE c2.c_mktsegment = c.c_mktsegment)
       AND EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderpriority = '1-URGENT')
-    """,
-    tags=("subquery", "correlated"),
+"""
+
+
+@register(
+    "q_correlated_exists",
+    oracle=_CORRELATED_ORACLE,
 )
 def q_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated aggregate subquery + correlated EXISTS: above-segment-
@@ -77,20 +82,6 @@ def q_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Keep the DuckDB side the same exact-average construction.
-_CORRELATED_ORACLE = """
-    SELECT c_custkey, c_acctbal
-    FROM customer c
-    WHERE c_acctbal > (SELECT CAST(SUM(CAST(c2.c_acctbal AS DECIMAL(12,4))) AS DOUBLE)
-                              / COUNT(c2.c_acctbal)
-                       FROM customer c2
-                       WHERE c2.c_mktsegment = c.c_mktsegment)
-      AND EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-"""
-
-
 @register(
     "q_in_subquery",
     oracle="""
@@ -99,7 +90,6 @@ _CORRELATED_ORACLE = """
     WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity >= 45)
       AND p_size > 20
     """,
-    tags=("subquery", "in"),
 )
 def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery (planned as a left-semi join on the distinct key set)."""
@@ -121,7 +111,6 @@ def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_custkey
     HAVING COUNT(*) >= 15
     """,
-    tags=("agg", "having"),
 )
 def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY + HAVING (post-aggregation filter)."""
@@ -146,7 +135,6 @@ def q_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY user_id
     """,
-    tags=("agg", "array"),
 )
 def q_collect_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array aggregation: per-user distinct event types, emitted as the
@@ -175,7 +163,6 @@ def q_collect_array(spark: SparkSession, sf_dir: str) -> DataFrame:
            regexp_extract(p_name, '([a-z]+)$', 1) AS name_tail
     FROM part
     """,
-    tags=("scalar", "regex"),
 )
 def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Regex extraction/matching (patterns restricted to the POSIX-compatible
@@ -199,7 +186,6 @@ def q_regex_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events WHERE event_id < 200) b
       ON a.k IS NOT DISTINCT FROM b.k AND a.event_id < b.event_id
     """,
-    tags=("join", "null-safe"),
 )
 def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-safe equality join (<=> / IS NOT DISTINCT FROM): NULL keys match
@@ -239,7 +225,6 @@ def q_null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM months LEFT JOIN per_month ON mo = m
     ORDER BY month
     """,
-    tags=("subquery", "recursive-cte", "calendar"),
 )
 def q_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4): generate the full 1995-01..2001-08 month
@@ -272,15 +257,6 @@ def q_recursive_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..plans import registry as _registry  # noqa: E402
-
-_spec = _registry._REGISTRY["q_correlated_exists"]
-_registry._REGISTRY["q_correlated_exists"] = _registry.QuerySpec(
-    name=_spec.name, builder=_spec.builder, oracle=_CORRELATED_ORACLE,
-    tags=_spec.tags, bench=_spec.bench, doc=_spec.doc,
-)
-
-
 @register(
     "q_lateral_topn",
     oracle="""
@@ -293,7 +269,6 @@ _registry._REGISTRY["q_correlated_exists"] = _registry.QuerySpec(
         LIMIT 3
     ) c
     """,
-    tags=("subqueries", "lateral", "topn"),
 )
 def q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LATERAL correlated subquery join (Spark 3.2+/DuckDB `, LATERAL

@@ -37,7 +37,6 @@ from ._util import persist_tracked, spread, t
            CAST(len(list_distinct(ts)) AS DOUBLE) / len(ts) AS type_token_ratio
     FROM toks
     """,
-    tags=("text", "stats"),
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts: whitespace tokens, char totals, average
@@ -91,7 +90,6 @@ _STOPWORDS = (
              + (1.0 - least(punct_ratio * 10, 1.0)) * 0.2 AS quality_score
     FROM feat
     """,
-    tags=("text", "quality"),
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic document-quality score from length, stopword density and
@@ -190,7 +188,6 @@ _LANG_ID_SQL = f"""
 @register(
     "text_lang_id",
     oracle=_LANG_ID_SQL,
-    tags=("text", "langid"),
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-profile language ID (n-gram-free heuristic): count hits
@@ -229,7 +226,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS fingerprint
     FROM sh
     """,
-    tags=("text", "fingerprint"),
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style document fingerprint: minimum 48-bit hash over word
@@ -267,7 +263,6 @@ _BPEISH_RE = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
            CAST(ceil(length(text) / 4.0) AS BIGINT) AS n_chars_div4
     FROM documents
     """,
-    tags=("text", "tokens"),
 )
 def text_bpeish_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE-ish token counting: a GPT-2-style pre-tokenizer regex (word runs,
@@ -307,7 +302,6 @@ def text_bpeish_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT doc_id, token, tf, df, tfidf FROM scored WHERE rn <= 3
     """,
-    tags=("text", "tfidf"),
     bench=True,
 )
 def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,7 +365,6 @@ _WINNOW_W = 16  # winnowing window (hashes per window)
     SELECT DISTINCT doc_id, fp
     FROM win WHERE p >= {_WINNOW_W}
     """,
-    tags=("text", "fingerprint", "winnowing"),
 )
 def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing fingerprints (the MOSS algorithm): hash every 20-char
@@ -442,7 +435,6 @@ _CHUNK_STRIDE = 24  # overlap = size - stride = 8 tokens
                 AS BIGINT) AS n_chunk_tokens
     FROM idx
     """,
-    tags=("text", "chunking", "pipeline"),
 )
 def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size token chunking with overlap: every document becomes
@@ -501,7 +493,6 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts
     GROUP BY doc_id
     """,
-    tags=("text", "quality", "repetition"),
 )
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repetition-based quality signals (the Gopher/MassiveText filters):
@@ -555,7 +546,6 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT bigram, doc_freq
     FROM df ORDER BY doc_freq DESC, bigram LIMIT 25
     """,
-    tags=("text", "ngram", "vocab"),
 )
 def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level top-25 word bigrams by DOCUMENT frequency (distinct
@@ -602,7 +592,6 @@ _EVAL_MOD = 11  # doc_id % 11 == 0 -> held-out "benchmark" partition
     WHERE s.doc_id % {_EVAL_MOD} <> 0
     GROUP BY s.doc_id
     """,
-    tags=("text", "contamination", "curation"),
 )
 def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train/eval decontamination: flag every training document sharing at
@@ -665,7 +654,6 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                (a, b) -> a + b) AS simpson_index
     FROM c
     """,
-    tags=("text", "stats", "quality"),
 )
 def text_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Character-level quality signals per document: distinct-char count,
@@ -728,7 +716,6 @@ def text_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pred
     GROUP BY lang, predicted_lang
     """,
-    tags=("text", "langid", "evaluation"),
 )
 def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lang-ID evaluation: confusion matrix of the labeled language vs the
@@ -771,7 +758,6 @@ _NOVELTY_K = 3
            CAST(COALESCE(n.n_novel, 0) AS DOUBLE) / t.n_shingles AS novelty
     FROM tot t LEFT JOIN novel n ON n.doc_id = t.doc_id
     """,
-    tags=("text", "novelty", "dedup"),
     bench=True,
 )
 def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -845,7 +831,6 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(*) AS BIGINT) AS n_docs
     FROM b GROUP BY lang, bucket
     """,
-    tags=("text", "stats", "histogram"),
 )
 def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language log2-bucketed document-length histogram (bucket b holds
@@ -907,7 +892,6 @@ _XLING_K = 3
     JOIN tot ta ON ta.lang = pairs.lang_a
     JOIN tot tb ON tb.lang = pairs.lang_b
     """,
-    tags=("text", "contamination", "cross-lingual"),
 )
 def q_cross_lingual_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-lingual shingle leakage: for every language pair, how many
@@ -998,7 +982,6 @@ _PURITY_LANGS = tuple(_LANG_PROFILES)  # en, es, de, fr
             AND best_other_hits * 2 > own_hits) AS is_mixed
     FROM scored
     """,
-    tags=("text", "langid", "quality"),
 )
 def q_doc_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Code-switching / mislabel detection: for each document, function-word
@@ -1062,7 +1045,6 @@ def q_doc_language_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sh JOIN df ON df.shingle = sh.shingle
     GROUP BY sh.doc_id
     """,
-    tags=("text", "quality", "boilerplate"),
 )
 def q_doc_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document corpus-commonness score: the mean (and max) document
@@ -1146,7 +1128,6 @@ _BPE_TOP = 25
         FROM agg
     ) WHERE rk <= {_BPE_TOP}
     """,
-    tags=("text", "tokenizer", "bpe"),
 )
 def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BPE-training inner loop as a query: the top-25 adjacent
@@ -1231,7 +1212,6 @@ def _vocab_coverage_oracle() -> str:
 @register(
     "q_vocab_coverage",
     oracle=_vocab_coverage_oracle(),
-    tags=("text", "tokenizer", "vocab"),
 )
 def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary coverage / OOV-rate curve: for each candidate vocab size
@@ -1326,7 +1306,6 @@ _INV_POSTINGS = 10  # posting-list sample depth per term
     ORDER BY f.df DESC, f.term
     LIMIT {_INV_TOPK}
     """,
-    tags=("text", "search", "inverted-index"),
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index construction — the search-side primitive a corpus
@@ -1464,7 +1443,6 @@ def _bm25_contrib_sql(n: str, df: str, tf: str, dl: str, total: str) -> str:
            CAST(rk AS INTEGER) AS rk
     FROM ranked WHERE rk <= {_BM25_TOPK}
     """,
-    tags=("text", "search", "bm25", "retrieval"),
 )
 def q_bm25_mlt_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 "more-like-this" retrieval: for each query document (doc_id < 8,
@@ -1592,7 +1570,6 @@ _SPAN_DUP_DEN = 10  # >= 3/10, compared in integers (no float boundary).
     FROM spans s JOIN sdf d USING (span_hash)
     GROUP BY s.doc_id
     """,
-    tags=("text", "dedup", "substring"),
     bench=True,
 )
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1697,7 +1674,6 @@ _SURPRISAL_LOW_BITS = 7  # mean bits/token below this flags low-info docs
                      THEN 1 ELSE 0 END AS BIGINT) AS flag_low_info
     FROM per_doc
     """,
-    tags=("text", "quality", "surprisal", "filtering"),
 )
 def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean unigram surprisal — the information-density
@@ -1817,7 +1793,6 @@ _BIGRAM_LOW_BITS = 3  # mean conditional bits/bigram below this = templated
                      THEN 1 ELSE 0 END AS BIGINT) AS flag_templated
     FROM per_doc
     """,
-    tags=("text", "quality", "surprisal", "lm", "filtering"),
 )
 def q_doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document mean BIGRAM surprisal — the conditional-information
@@ -1931,7 +1906,6 @@ _PII_TOKEN = "[PII]"
                               '{_PII_TOKEN}', 'g')) AS redacted_md5
     FROM documents
     """,
-    tags=("text", "pii", "redaction", "filtering"),
 )
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deny-list sensitive-term redaction — the scrubbing pass every
@@ -2004,7 +1978,6 @@ _COLLOC_MIN_COUNT = 5  # PMI is unstable on rare pairs; the standard floor
     )
     SELECT bigram, cnt12, pmi_bits FROM pmi
     """,
-    tags=("text", "collocations", "pmi", "phrases"),
 )
 def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collocation (phrase-candidate) mining: bigrams whose joint frequency
@@ -2146,7 +2119,6 @@ def _quality_gate_oracle() -> str:
 @register(
     "q_quality_gate",
     oracle=_quality_gate_oracle(),
-    tags=("text", "quality", "gate", "filtering", "composition"),
 )
 def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed keep/drop RELEASE GATE — the verdict table a corpus
@@ -2311,7 +2283,6 @@ _REP_DUP3_NUM, _REP_DUP3_DEN = 3, 10
              AS BIGINT) AS rep_mask
     FROM j
     """,
-    tags=("text", "quality", "repetition", "filtering"),
 )
 def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition filters — the published MassiveText/Gopher
@@ -2458,7 +2429,6 @@ _PREFIX_DUP_TOKENS = 16  # header length that defines a shared boilerplate
            CAST(COUNT(*) - 1 AS BIGINT) AS n_dup_docs
     FROM p GROUP BY prefix_md5 HAVING COUNT(*) >= 2
     """,
-    tags=("text", "dedup", "boilerplate", "report"),
 )
 def q_doc_prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-prefix (boilerplate header) duplicate groups: documents whose
@@ -2529,7 +2499,6 @@ def q_doc_prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_instances AS DOUBLE) / total_tokens AS mass_share
     FROM dec CROSS JOIN tot
     """,
-    tags=("text", "corpus", "zipf", "report"),
 )
 def q_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus frequency-spectrum profile — the Zipf-health report a corpus
@@ -2613,7 +2582,6 @@ def q_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(SUM(n_chars) AS DOUBLE) / SUM(n_ws) AS chars_per_word
     FROM d GROUP BY lang
     """,
-    tags=("text", "tokens", "tokenizer", "report"),
 )
 def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer fertility — subword tokens emitted per
@@ -2699,7 +2667,6 @@ _PPL_QKEY_SCALE = 1_000_000  # integer mean-surprisal key: (1e6*sum_bits) div n
            CAST(MAX(surp_q) AS BIGINT) AS max_surp_q
     FROM bucketed GROUP BY 1, 2
     """,
-    tags=("text", "quality", "curation", "perplexity", "ccnet"),
 )
 def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020): within each
@@ -2843,7 +2810,6 @@ _GOPHER_MAX_WORDS = 100_000
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_pass_all
     FROM rules GROUP BY source
     """,
-    tags=("text", "quality", "gopher", "census"),
 )
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source census of the Gopher quality-rule battery (Rae et al.
@@ -2945,7 +2911,6 @@ _TTR_MAX_BUCKET = 9
            CAST(SUM(n_uniq) AS DOUBLE) / SUM(n_tok) AS ttr_micro
     FROM d GROUP BY bucket
     """,
-    tags=("text", "diversity", "ttr", "census"),
 )
 def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-averaged type-token ratio by document-length bucket — the
@@ -3099,7 +3064,6 @@ def _qc_oracle() -> str:
 @register(
     "q_quality_classifier",
     oracle=_qc_oracle(),
-    tags=("text", "quality", "classifier", "inference", "bench"),
     bench=True,
 )
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -60,7 +60,6 @@ from ._util import (
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
-    tags=("tpch", "filter", "agg"),
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure scan-filter-aggregate.  All four predicates push to the
@@ -112,7 +111,6 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year
     """,
-    tags=("tpch", "join", "agg"),
 )
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: six-table join with a disjunctive cross-nation predicate,
@@ -183,7 +181,6 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_year
     ORDER BY o_year
     """,
-    tags=("tpch", "join", "agg"),
 )
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: eight-table join computing NATION_1's share of PROMO-part
@@ -253,7 +250,6 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
-    tags=("tpch", "join", "agg"),
 )
 def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13: distribution of order counts per customer, including the
@@ -290,7 +286,6 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '1996-03-01 00:00:00'
       AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
     """,
-    tags=("tpch", "join", "agg"),
 )
 def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: percentage of one month's revenue from PROMO parts.  The
@@ -337,7 +332,6 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE total_revenue = (SELECT MAX(total_revenue) FROM revenue)
     ORDER BY s_suppkey
     """,
-    tags=("tpch", "join", "subquery"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: supplier(s) with the maximum quarterly revenue — an
@@ -382,7 +376,6 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p_brand = 'Brand#3' AND p_size < 15
       AND l_quantity < qty_limit
     """,
-    tags=("tpch", "join", "subquery", "agg"),
 )
 def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17: yearly revenue lost if small-quantity orders (below 20% of
@@ -436,7 +429,6 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
     LIMIT 100
     """,
-    tags=("tpch", "join", "agg", "subquery"),
     bench=True,
 )
 def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -487,7 +479,6 @@ def q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
            AND l_quantity >= 20 AND l_quantity <= 30)
     """,
-    tags=("tpch", "join", "filter"),
 )
 def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19: three OR'd brand/size/quantity branches over the part-
@@ -546,7 +537,6 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY cntrycode
     ORDER BY cntrycode
     """,
-    tags=("tpch", "anti-join", "subquery", "agg"),
 )
 def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22: wealthy customers (balance above the positive-balance
@@ -596,7 +586,6 @@ def q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
-    tags=("tpch", "semi-join", "agg"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: count one quarter's orders that have at least one
@@ -656,7 +645,6 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
-    tags=("tpch", "semi-join", "anti-join", "agg"),
     bench=True,
 )
 def q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,7 +33,6 @@ def _order_w():
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)
     """,
-    tags=("window", "rank", "bench"),
     bench=True,
 )
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -61,7 +60,6 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS order_seq
     FROM orders
     """,
-    tags=("window", "frame"),
 )
 def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running (prefix) sum per customer with an explicit ROWS frame; exact
@@ -87,7 +85,6 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
     """,
-    tags=("window", "lag"),
 )
 def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """lag/lead navigation along each user's event timeline (per-row double
@@ -117,7 +114,6 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     WHERE rk <= 3
     """,
-    tags=("window", "topk"),
 )
 def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group top-k = row_number <= k.  Spark pushes the rank limit into
@@ -144,7 +140,6 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS orders_trailing_30d
     FROM orders
     """,
-    tags=("window", "range-frame"),
 )
 def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE frame over event-time: trailing-30-day order count per customer,
@@ -173,7 +168,6 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
     """,
-    tags=("window", "distribution"),
 )
 def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: ntile / percent_rank / cume_dist.
@@ -200,7 +194,6 @@ def q_window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
-    tags=("window", "first-last"),
 )
 def q_window_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first_value / last_value / nth_value over an explicit full-partition

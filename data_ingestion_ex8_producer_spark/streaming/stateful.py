@@ -1228,7 +1228,7 @@ def cusum_regime_stream(events: DataFrame) -> DataFrame:
 
 KMV_SCHEMA = "source string, n_sketch bigint, h_k bigint, d_hat bigint"
 _KMV_STATE_SCHEMA = "sk array<long>"
-from ..operators.dedup import _KMV_K, _KMV_SCALE  # noqa: E402
+from ..operators.dedup import _KMV_K, _KMV_SCALE, _SHINGLE_K  # noqa: E402
 
 
 def _update_kmv(
@@ -1281,7 +1281,6 @@ def kmv_sketch_stream(docs: DataFrame) -> DataFrame:
     then applyInPandasWithState merges bottom-K per source."""
     from ..functions.text import hash48, with_shingles
 
-    _SHINGLE_K = 3  # operators/dedup.py:_SHINGLE_K
     sh = (
         with_shingles(
             docs.filter(

@@ -102,6 +102,14 @@ def test_coverage_doc_counts_match_registry() -> None:
     assert int(m.group(2)) == n_oracled, (
         f"COVERAGE.md says {m.group(2)} oracled, registry has {n_oracled}"
     )
+    # The rows-only set by name: a spec registered with oracle=None for any
+    # other reason would silently get only the driver's weaker check.
+    rows_only = {name for name, s in specs.items() if s.oracle is None}
+    assert rows_only == {
+        "q_ivf_argmax_margin_canary",
+        "q_approx_distinct",
+        "q_approx_percentile",
+    }, f"rows-only specs changed: {sorted(rows_only)}"
 
 
 @pytest.mark.parametrize(
