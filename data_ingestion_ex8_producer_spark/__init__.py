@@ -7,8 +7,10 @@ Layout:
   config.py     env-driven configuration (same env-var names as the reference's
                 ``settings.py:11-18``)
   session.py    SparkSession factory (AQE, Arrow, s3a wiring)
-  schemas.py    bronze/silver StructTypes + verbatim Avro schema JSON
-  functions/    pure column/name helpers (sanitize port, text, vectors, avro)
+  schemas.py    Avro record fields (name, order, nullability), bronze
+                StructType, raw landing header, silver projection
+  functions/    names.py (header sanitize port), text.py (text/hash column
+                helpers with DuckDB twins), avro_codec.py (Avro datum codec)
   sources/      batch + streaming readers (csv, parquet star schema, kafka)
   sinks/        encode.py (Avro value frame) + datum_sink.py (avro_datum_dir)
   operators/    the analytics query surface (driver-scored via plans.registry)

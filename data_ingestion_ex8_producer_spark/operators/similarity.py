@@ -18,15 +18,34 @@ here): the join key becomes (table, bucket), shuffle volume collapses to
 O(n x tables), and recall follows the angular-LSH collision curve.  The
 hyperplanes are derived from the portable 48-bit md5 hash — fully
 deterministic, reproducible on any engine, no RNG state to ship.
+
+The product-quantization (PQ) family — full-corpus ADC, its exact
+re-rank, the composed IVF-PQ index (sampled or trained quantizer, raw or
+residual codes) and the hybrid fusions on top — is a few stages, each
+written once and composed per index:
+
+- kernel: ``_pq_sq_table``, the numpy squared-L2 table of one subspace on
+  the 1e-9 grid (the encoder's argmin and every lookup table);
+- LUT: ``_pq_lut_frame``, per-query (or per query and probed cell)
+  lookup tables built executor-side;
+- ADC ranking: ``_adc_ranked``, self-match filter, integer sum, rank;
+- L2 tail: ``_l2_topk``, the exact squared-L2 top-k of brute force and
+  of every re-rank (``_exact_l2_rerank`` cuts the shortlist);
+- RRF: ``_rrf_fuse`` and its oracle ``_rrf_oracle``, BM25 fused with any
+  vector leg.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
+from collections.abc import Iterator
+from functools import reduce
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import registry as _registry
@@ -207,8 +226,6 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         queries.join(corpus, F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", "neighbor_label", cosine.alias("cosine"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -408,8 +425,6 @@ def _lsh_topk_frame(
         F.col("norm").alias("n_c"),
     )
     cosine = _dot_d(F.col("e_q"), F.col("e_c")) / (F.col("n_q") * F.col("n_c"))
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -1042,8 +1057,6 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with k-means — the salted-hash sample here keeps the operator
     reproducible and oracle-checkable while exercising the identical
     plan."""
-    from pyspark.sql import Window
-
     emb = _persisted_valid_emb(spark, sf_dir)
     centroid_rows = _ivf_centroid_rows(emb)
     assignment = _ivf_assignment(emb, centroid_rows)
@@ -1345,7 +1358,8 @@ def q_emb_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Product quantization (the PQ half of an IVF-PQ vector index)
+# Product quantization (the PQ half of an IVF-PQ vector index); the shared
+# squared-L2 kernel (_pq_sq_table) and its SQL twin (_pq_sq_terms)
 # --------------------------------------------------------------------------
 
 _PQ_M = 8          # subspaces (8 dims each over the 64-dim vectors)
@@ -1367,6 +1381,24 @@ def _pq_sq_terms(m: int, a: str, b: str) -> str:
         f" - CAST({b}[{m * sub_dim + i}] AS DOUBLE))"
         for i in range(1, sub_dim + 1)
     )
+
+
+def _pq_sq_table(X: np.ndarray, c_mat: np.ndarray, m: int) -> np.ndarray:
+    """The ONE numpy squared-L2 kernel of every PQ path (the encoder's
+    argmin, the raw and the residual ADC lookup tables): subspace ``m``'s
+    (n, K) table between the rows of ``X`` (n, _DIM) and the codebook
+    ``c_mat`` (K, _DIM) on the 1e-9 BIGINT grid.  Each entry folds the
+    subspace's (x-c)^2 terms strictly left to right (numpy multiply and
+    add are separate correctly-rounded ops, no FMA) — the chain
+    _pq_sq_terms spells out for the oracle — then quantizes HALF-UP:
+    floor(x*Q + 0.5) equals both engines' round() on a non-negative
+    distance.  One subspace per call keeps one (n, K) table live."""
+    sub_dim = _DIM // _PQ_M
+    acc = np.zeros((len(X), len(c_mat)), dtype=np.float64)
+    for i in range(m * sub_dim, (m + 1) * sub_dim):
+        d = X[:, i : i + 1] - c_mat[:, i]
+        acc += d * d
+    return np.floor(acc * _PQ_Q9 + 0.5).astype(np.int64)
 
 
 def _pq_codes_ctes_tail() -> str:
@@ -1505,15 +1537,11 @@ def pq_encode(
     index partitions its scan by) are replicated onto each of the M output
     rows per vector, keeping the combined assign+encode a SINGLE
     shuffle-free pass."""
-    from collections.abc import Iterator as _Iter
-
     c_mat = np.array([r.c_ed for r in code_rows], dtype=np.float64)  # (K, 64)
     code_ids = np.array([r.code for r in code_rows], dtype=np.int64)
-    n_codes = len(code_rows)
-    sub_dim = _DIM // _PQ_M
     extra = tuple(passthrough)
 
-    def encode(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
+    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -1522,12 +1550,7 @@ def pq_encode(
             vec_ids = pdf["vec_id"].to_numpy()
             out_vec, out_m, out_code, out_d = [], [], [], []
             for m in range(_PQ_M):
-                acc = np.zeros((n, n_codes), dtype=np.float64)
-                for i in range(m * sub_dim, (m + 1) * sub_dim):
-                    d = E[:, i : i + 1] - c_mat[:, i]
-                    acc += d * d
-                # HALF-UP on a non-negative grid == both engines' round().
-                dq = np.floor(acc * _PQ_Q9 + 0.5).astype(np.int64)
+                dq = _pq_sq_table(E, c_mat, m)
                 best = np.argmin(dq, axis=1)  # first min = smallest code
                 out_vec.append(vec_ids)
                 out_m.append(np.full(n, m, dtype=np.int32))
@@ -1552,8 +1575,59 @@ def pq_encode(
 
 
 # --------------------------------------------------------------------------
-# ADC search over the PQ codes (the query half of an IVF-PQ index)
+# ADC search over the PQ codes (the query half of an IVF-PQ index); the
+# shared stages every PQ search composes: the exact-L2 tail (_l2_topk), the
+# lookup tables (_pq_lut_frame), the ADC ranking (_adc_ranked) and the
+# shortlist re-rank (_exact_l2_rerank)
 # --------------------------------------------------------------------------
+
+
+def _query_vecs(emb: DataFrame) -> DataFrame:
+    """The query slice (query_id, ed): vec_id < _N_QUERIES."""
+    return emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "ed"
+    )
+
+
+def _l2_sides(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two sides of an exact-L2 candidate frame: the broadcast query
+    vectors (query_id, q_ed) and the corpus (neighbor_id, neighbor_label,
+    c_ed)."""
+    queries = F.broadcast(
+        _query_vecs(emb).select("query_id", F.col("ed").alias("q_ed"))
+    )
+    corpus = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("label").alias("neighbor_label"),
+        F.col("ed").alias("c_ed"),
+    )
+    return queries, corpus
+
+
+def _l2_topk(cand: DataFrame) -> DataFrame:
+    """The ONE exact-L2 top-k tail, shared by the brute-force search and
+    every re-rank: over (query_id, neighbor_id, neighbor_label, q_ed, c_ed)
+    candidates, fold the 64 (x-y)^2 terms left to right (the subspace-major
+    order of _pq_sq_terms), quantize HALF-UP onto the 1e-9 BIGINT grid,
+    rank per query on (dq, neighbor_id) and keep the top-k."""
+    d2 = F.aggregate(
+        F.zip_with(F.col("q_ed"), F.col("c_ed"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy("query_id").orderBy("dq", "neighbor_id")
+    return (
+        cand.withColumn("dq", F.round(d2 * _PQ_Q9).cast("long"))
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "neighbor_label",
+            (F.col("dq").cast("double") / _PQ_Q9).alias("dist_sq"),
+            "rk",
+        )
+    )
 
 
 def _l2_oracle() -> str:
@@ -1601,37 +1675,9 @@ def sim_bruteforce_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to sim_bruteforce_topk — broadcast the |Q|=8
     queries, one narrow scan of the corpus, WindowGroupLimit prunes to
     top-k per query before the final exchange."""
-    from pyspark.sql import Window
-
-    emb = _persisted_valid_emb(spark, sf_dir)
-    queries = F.broadcast(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("ed").alias("q_ed")
-        )
-    )
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("ed").alias("c_ed"),
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("q_ed"), F.col("c_ed"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy("dq", "neighbor_id")
-    return (
+    queries, corpus = _l2_sides(_persisted_valid_emb(spark, sf_dir))
+    return _l2_topk(
         queries.join(corpus, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dq", F.round(d2 * _PQ_Q9).cast("long"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            (F.col("dq").cast("double") / _PQ_Q9).alias("dist_sq"),
-            "rk",
-        )
     )
 
 
@@ -1662,84 +1708,73 @@ def _pq_adc_oracle() -> str:
 
 
 def _pq_lut_frame(
-    spark: SparkSession, emb: DataFrame, code_rows: list
+    src: DataFrame, keys: tuple[str, ...], vec: str, code_rows: list
 ) -> DataFrame:
-    """The per-query ADC lookup tables (query_id, subspace, code, dq) as a
-    broadcast frame — |Q| x M x K rows, constant at any corpus size.
+    """The ONE ADC lookup-table builder (*keys, subspace, code, dq): for
+    each row of ``src`` — a query (raw ADC, keys query_id) or a (query,
+    probed cell) pair (residual ADC, keys query_id, centroid_id) — the
+    quantized squared-L2 distance of its ``vec`` column to every
+    closure-shipped codebook entry in every subspace (_pq_sq_table).  A
+    broadcast frame of |src| x M x K rows, constant at any corpus size.
 
     Built EXECUTOR-SIDE (VERDICT r6 #4): a mapInPandas pass over the query
-    slice against the closure-shipped codebook — pq_encode's exact pattern
-    — so there is no driver-side per-query arithmetic on any similarity
-    path and a production batch of 1e6 queries builds its LUTs with the
-    same parallelism as the encode pass.  The fold is numerically
-    IDENTICAL to the r5/r6 builds: per subspace the (q, K) accumulator
-    adds separate multiply/add (x-c)^2 terms dimension-by-dimension
-    (strict left fold, no FMA — numpy multiply and add are separate
-    correctly-rounded ops), then HALF-UP quantizes on the shared 1e-9
-    BIGINT grid — bit-identical to the oracle's left-associated sums, so
-    moving the build off the driver cannot change a single code."""
-    from collections.abc import Iterator as _Iter
-
-    sub_dim = _DIM // _PQ_M
+    slice, pq_encode's exact pattern, so there is no driver-side per-query
+    arithmetic on any similarity path and a production batch of 1e6
+    queries builds its LUTs with the same parallelism as the encode pass.
+    The entries are bit-identical to the oracle's left-associated sums,
+    so moving the build off the driver cannot change a single code."""
     c_mat = np.array([r.c_ed for r in code_rows], dtype=np.float64)  # (K, D)
     c_ids = np.array([int(r.code) for r in code_rows], dtype=np.int64)
     n_codes = len(code_rows)
 
-    def build(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
+    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n = len(pdf)
             if n == 0:
                 continue
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["ed"]])
-            q_ids = pdf["query_id"].to_numpy()
-            out_q, out_m, out_c, out_d = [], [], [], []
+            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec]])
+            outs: dict[str, list] = {
+                c: [] for c in (*keys, "subspace", "code", "dq")
+            }
             for m in range(_PQ_M):
-                acc = np.zeros((n, n_codes), dtype=np.float64)
-                for i in range(m * sub_dim, (m + 1) * sub_dim):
-                    d = Q[:, i : i + 1] - c_mat[:, i]
-                    acc += d * d
-                dq = np.floor(acc * _PQ_Q9 + 0.5).astype(np.int64)
-                out_q.append(np.repeat(q_ids, n_codes))
-                out_m.append(np.full(n * n_codes, m, dtype=np.int32))
-                out_c.append(np.tile(c_ids, n))
-                out_d.append(dq.reshape(-1))  # row-major: q0's K, q1's K, …
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "subspace": np.concatenate(out_m),
-                    "code": np.concatenate(out_c),
-                    "dq": np.concatenate(out_d),
-                }
-            )
+                for k in keys:
+                    outs[k].append(np.repeat(pdf[k].to_numpy(), n_codes))
+                outs["subspace"].append(np.full(n * n_codes, m, dtype=np.int32))
+                outs["code"].append(np.tile(c_ids, n))
+                # row-major: row 0's K entries, then row 1's, ...
+                outs["dq"].append(_pq_sq_table(X, c_mat, m).reshape(-1))
+            yield pd.DataFrame({c: np.concatenate(v) for c, v in outs.items()})
 
-    queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "ed"
+    schema = ", ".join(
+        [*(f"{k} long" for k in keys), "subspace int, code long, dq long"]
     )
-    return F.broadcast(
-        queries.mapInPandas(build, "query_id long, subspace int, code long, dq long")
+    return F.broadcast(src.select(*keys, vec).mapInPandas(build, schema))
+
+
+def _adc_ranked(scan: DataFrame) -> DataFrame:
+    """The ONE ADC ranking (query_id, neighbor_id, adc_q, rk) over a
+    code-to-LUT join carrying (query_id, vec_id, dq): drop each query's
+    self-match, sum its M lookups to the integer ADC distance (map-side
+    combinable — the one exchange carries ids and one BIGINT), and rank
+    per query on (adc_q, neighbor_id)."""
+    w = Window.partitionBy("query_id").orderBy("adc_q", "neighbor_id")
+    return (
+        scan.filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum("dq").alias("adc_q"))
+        .withColumn("rk", F.row_number().over(w))
     )
 
 
 def _pq_adc_ranked(
     spark: SparkSession, sf_dir: str, emb: DataFrame
 ) -> DataFrame:
-    """The shared ADC ranking (query_id, neighbor_id, adc_q, rk): per-query
-    LUTs (_pq_lut_frame — one vectorized numpy build, constant-size)
-    broadcast-joined to the registered encoder's codes, summed to integer
-    ADC distances with map-side combine, ranked per query."""
-    from pyspark.sql import Window
-
+    """The full-corpus ADC ranking: per-query LUTs broadcast-joined to the
+    registered encoder's codes, ranked by _adc_ranked."""
     code_rows = _pq_codebook_rows(emb)
-    lut = _pq_lut_frame(spark, emb, code_rows)
+    lut = _pq_lut_frame(_query_vecs(emb), ("query_id",), "ed", code_rows)
     codes = q_emb_pq_codes(spark, sf_dir).select("vec_id", "subspace", "code")
-    w = Window.partitionBy("query_id").orderBy("adc_q", "neighbor_id")
-    return (
-        codes.join(lut, ["subspace", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dq").alias("adc_q"))
-        .withColumn("rk", F.row_number().over(w))
-    )
+    return _adc_ranked(codes.join(lut, ["subspace", "code"]))
 
 
 @register(
@@ -1756,9 +1791,9 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     by its stored codes — the scan never touches raw floats, which is the
     entire point of PQ compression.
 
-    Exactness: LUT entries fold the same per-dimension (x-c)^2 terms as
-    the encoder and HALF-UP quantize to the shared 1e-9 BIGINT grid
-    driver-side (plain Python doubles = the same IEEE ops); the ADC
+    Exactness: LUT entries come from the encoder's own kernel
+    (_pq_sq_table: left-folded (x-c)^2 terms, HALF-UP quantized to the
+    shared 1e-9 BIGINT grid, executor-side); the ADC
     distance is then a SUM of 8 BIGINTs — pure integer arithmetic on both
     engines — and ranking runs on that integer with a neighbor_id
     tie-break.
@@ -1881,45 +1916,17 @@ def _pq_rerank_oracle() -> str:
     """
 
 
-def _exact_l2_rerank(emb: DataFrame, shortlist: DataFrame) -> DataFrame:
-    """Stage-2 exact re-rank, Spark side: broadcast the CONSTANT-size
-    (|Q| x shortlist-depth) id set against one corpus scan to fetch raw
-    vectors — never a shuffle of embeddings — compute the same left-folded
-    (x-y)^2 sums as sim_bruteforce_l2_topk on the shared BIGINT grid, and
-    WindowGroupLimit-prune to top-k."""
-    from pyspark.sql import Window
-
-    q_vecs = F.broadcast(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("ed").alias("q_ed")
-        )
+def _exact_l2_rerank(emb: DataFrame, adc: DataFrame) -> DataFrame:
+    """Stage-2 exact re-rank, Spark side: cut an ADC ranking to its
+    _PQ_RERANK-deep shortlist, broadcast that CONSTANT-size (|Q| x depth)
+    id set against one corpus scan to fetch raw vectors — never a shuffle
+    of embeddings — and finish with the shared exact-L2 tail (_l2_topk)."""
+    shortlist = adc.filter(F.col("rk") <= _PQ_RERANK).select(
+        "query_id", "neighbor_id"
     )
-    cand = (
-        emb.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("neighbor_label"),
-            F.col("ed").alias("c_ed"),
-        )
-        .join(F.broadcast(shortlist), "neighbor_id")
-        .join(q_vecs, "query_id")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("q_ed"), F.col("c_ed"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("query_id").orderBy("dq", "neighbor_id")
-    return (
-        cand.withColumn("dq", F.round(d2 * _PQ_Q9).cast("long"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            (F.col("dq").cast("double") / _PQ_Q9).alias("dist_sq"),
-            "rk",
-        )
+    queries, corpus = _l2_sides(emb)
+    return _l2_topk(
+        corpus.join(F.broadcast(shortlist), "neighbor_id").join(queries, "query_id")
     )
 
 
@@ -1950,11 +1957,7 @@ def sim_pq_adc_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with sim_ivfpq_topk).  The expensive exact metric touches a constant
     512 vectors per query of a 100 TB corpus instead of all of it."""
     emb = _persisted_valid_emb(spark, sf_dir)
-    adc = _pq_adc_ranked(spark, sf_dir, emb)
-    shortlist = adc.filter(F.col("rk") <= _PQ_RERANK).select(
-        "query_id", "neighbor_id"
-    )
-    return _exact_l2_rerank(emb, shortlist)
+    return _exact_l2_rerank(emb, _pq_adc_ranked(spark, sf_dir, emb))
 
 
 @register(
@@ -1999,8 +2002,6 @@ def _probe_frame(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     sim_ivf_topk (argmax over id-ascending centroids == the oracle's
     cos DESC, centroid_id ASC).  Shared by the composed IVF-PQ searches
     (raw-vector and residual-encoded)."""
-    from pyspark.sql import Window
-
     pair_cos = _dot_d(F.col("ed"), F.col("c_ed")) / (
         F.col("norm") * F.col("c_norm")
     )
@@ -2155,21 +2156,13 @@ def _ivfpq_search(
     ).select("vec_id", "subspace", "code", "centroid_id")
     centroids = _ivf_centroid_frame(spark, centroid_rows)
     probes = _probe_frame(emb, centroids)
-    lut = _pq_lut_frame(spark, emb, code_rows)
-    from pyspark.sql import Window
-    w = Window.partitionBy("query_id").orderBy("adc_q", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(lut, ["query_id", "subspace", "code"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dq").alias("adc_q"))
-        .withColumn("rk", F.row_number().over(w))
+    lut = _pq_lut_frame(_query_vecs(emb), ("query_id",), "ed", code_rows)
+    adc = _adc_ranked(
+        codes.join(F.broadcast(probes), "centroid_id").join(
+            lut, ["query_id", "subspace", "code"]
+        )
     )
-    shortlist = adc.filter(F.col("rk") <= _PQ_RERANK).select(
-        "query_id", "neighbor_id"
-    )
-    return _exact_l2_rerank(emb, shortlist)
+    return _exact_l2_rerank(emb, adc)
 
 
 @register(
@@ -2260,9 +2253,6 @@ def _trained_centroid_rows(emb: DataFrame) -> list:
     the same IEEE chain as the oracle's inline sqrt(dot) — so the next
     iteration's cosines stay bit-identical.  Cells that lose every member
     drop out on both engines identically."""
-    import math
-    from types import SimpleNamespace
-
     rows = _ivf_centroid_rows(emb)
     for _ in range(_KM_ITERS):
         assignment = _ivf_assignment(emb, rows)
@@ -2510,27 +2500,26 @@ def _residual_frame(
     )
 
 
-def _pqr_lut_frame(
-    spark: SparkSession,
-    emb: DataFrame,
-    centroid_rows: list,
-    probes: DataFrame,
-    code_rows: list,
-) -> DataFrame:
-    """Per-(query, probed-cell) residual ADC lookup tables (query_id,
-    centroid_id, subspace, code, dq) — |Q| x nprobe x M x K rows, constant
-    at any corpus size, built EXECUTOR-SIDE like _pq_lut_frame: the
-    query-minus-centroid residual is one JVM zip_with subtraction, then a
-    mapInPandas pass folds (qr - code)^2 per subspace against the
-    closure-shipped residual codebook — the identical two-subtract chain
-    the oracle's ((q - cent) - code)^2 terms evaluate."""
-    from collections.abc import Iterator as _Iter
-
+def _pqr_adc_ranked(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """The residual ADC ranking (query_id, neighbor_id, adc_q, rk), shared
+    by the full search (shortlist + exact re-rank) and the ADC-stage
+    recall measurement.  The LUTs are per (query, probed cell): the
+    query-minus-centroid residual is one JVM zip_with subtraction, then
+    the shared LUT builder folds (qr - code)^2 against the residual
+    codebook — the identical two-subtract chain the oracle's
+    ((q - cent) - code)^2 terms evaluate.  |Q| x nprobe x M x K rows,
+    constant at any corpus size; joining codes to them on (centroid_id,
+    subspace, code) restricts the scan to the probed cells."""
+    centroid_rows = _ivf_centroid_rows(emb)
     cents = _ivf_centroid_frame(spark, centroid_rows)
+    resid = persist_tracked(_residual_frame(spark, emb, centroid_rows))
+    code_rows = _pq_codebook_rows(resid, salt=_PQR_SALT)
+    codes = pq_encode(resid, code_rows, passthrough=("centroid_id",)).select(
+        "vec_id", "subspace", "code", "centroid_id"
+    )
     qr = (
-        emb.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "ed")
-        .join(F.broadcast(probes), "query_id")
+        _query_vecs(emb)
+        .join(F.broadcast(_probe_frame(emb, cents)), "query_id")
         .join(cents, "centroid_id")
         .select(
             "query_id",
@@ -2538,73 +2527,8 @@ def _pqr_lut_frame(
             F.zip_with("ed", "c_ed", lambda x, c: x - c).alias("qr"),
         )
     )
-    sub_dim = _DIM // _PQ_M
-    c_mat = np.array([r.c_ed for r in code_rows], dtype=np.float64)
-    c_ids = np.array([int(r.code) for r in code_rows], dtype=np.int64)
-    n_codes = len(code_rows)
-
-    def build(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            QR = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["qr"]])
-            q_ids = pdf["query_id"].to_numpy()
-            cent_ids = pdf["centroid_id"].to_numpy()
-            outs: dict[str, list] = {
-                "query_id": [], "centroid_id": [], "subspace": [],
-                "code": [], "dq": [],
-            }
-            for m in range(_PQ_M):
-                acc = np.zeros((n, n_codes), dtype=np.float64)
-                for i in range(m * sub_dim, (m + 1) * sub_dim):
-                    d = QR[:, i : i + 1] - c_mat[:, i]
-                    acc += d * d
-                dq = np.floor(acc * _PQ_Q9 + 0.5).astype(np.int64)
-                outs["query_id"].append(np.repeat(q_ids, n_codes))
-                outs["centroid_id"].append(np.repeat(cent_ids, n_codes))
-                outs["subspace"].append(np.full(n * n_codes, m, dtype=np.int32))
-                outs["code"].append(np.tile(c_ids, n))
-                outs["dq"].append(dq.reshape(-1))
-            yield pd.DataFrame({k: np.concatenate(v) for k, v in outs.items()})
-
-    return F.broadcast(
-        qr.mapInPandas(
-            build,
-            "query_id long, centroid_id long, subspace int, code long, dq long",
-        )
-    )
-
-
-def _pqr_adc_ranked(
-    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
-) -> DataFrame:
-    """The residual ADC ranking (query_id, neighbor_id, adc_q, rk) —
-    shared by the full search (shortlist + exact re-rank, which passes its
-    own persisted corpus so the build shares ONE cache) and the ADC-stage
-    recall measurement."""
-    from pyspark.sql import Window
-
-    from ._util import persist_tracked
-
-    if emb is None:
-        emb = _persisted_valid_emb(spark, sf_dir)
-    centroid_rows = _ivf_centroid_rows(emb)
-    resid = persist_tracked(_residual_frame(spark, emb, centroid_rows))
-    code_rows = _pq_codebook_rows(resid, salt=_PQR_SALT)
-    codes = pq_encode(resid, code_rows, passthrough=("centroid_id",)).select(
-        "vec_id", "subspace", "code", "centroid_id"
-    )
-    probes = _probe_frame(emb, _ivf_centroid_frame(spark, centroid_rows))
-    lut = _pqr_lut_frame(spark, emb, centroid_rows, probes, code_rows)
-    w = Window.partitionBy("query_id").orderBy("adc_q", "neighbor_id")
-    return (
-        codes.join(lut, ["centroid_id", "subspace", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("dq").alias("adc_q"))
-        .withColumn("rk", F.row_number().over(w))
-    )
+    lut = _pq_lut_frame(qr, ("query_id", "centroid_id"), "qr", code_rows)
+    return _adc_ranked(codes.join(lut, ["centroid_id", "subspace", "code"]))
 
 
 @register(
@@ -2654,11 +2578,7 @@ def sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (x-y)^2 chains as every PQ path, HALF-UP quantized to the shared 1e-9
     BIGINT grid; the ADC sum and ranking are pure integer arithmetic."""
     emb = _persisted_valid_emb(spark, sf_dir)
-    adc = _pqr_adc_ranked(spark, sf_dir, emb=emb)
-    shortlist = adc.filter(F.col("rk") <= _PQ_RERANK).select(
-        "query_id", "neighbor_id"
-    )
-    return _exact_l2_rerank(emb, shortlist)
+    return _exact_l2_rerank(emb, _pqr_adc_ranked(spark, emb))
 
 
 @register(
@@ -2706,13 +2626,16 @@ def q_pqr_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_frame(
         spark,
         sf_dir,
-        _pqr_adc_ranked(spark, sf_dir).filter(F.col("rk") <= _TOP_K),
+        _pqr_adc_ranked(spark, _persisted_valid_emb(spark, sf_dir)).filter(
+            F.col("rk") <= _TOP_K
+        ),
         exact=sim_bruteforce_l2_topk(spark, sf_dir),
     )
 
 
 # --------------------------------------------------------------------------
-# Hybrid lexical/vector retrieval — reciprocal-rank fusion
+# Hybrid lexical/vector retrieval — reciprocal-rank fusion, one builder
+# (_rrf_fuse) and one oracle (_rrf_oracle) for any vector leg
 # --------------------------------------------------------------------------
 
 _RRF_K = 60       # the standard RRF damping constant (Cormack et al.)
@@ -2724,16 +2647,17 @@ _RRF_EXPR = (
 )
 
 
-def _hybrid_rrf_oracle() -> str:
+def _rrf_oracle(vec_sql: str) -> str:
+    """The ONE fusion oracle: the BM25 top-k fused with a vector leg's
+    top-k (``vec_sql``: query_id, neighbor_id, rk)."""
     from . import textops  # noqa: F401 — registers the BM25 spec when this
     # module is imported directly (the registry loads textops first, but the
     # oracle must not depend on that ordering)
 
     lex = _registry._REGISTRY["q_bm25_mlt_topk"].oracle
-    vec = _registry._REGISTRY["sim_bruteforce_topk"].oracle
     return f"""
     WITH lex AS ({lex}),
-    vec AS ({vec}),
+    vec AS ({vec_sql}),
     fused AS (
         SELECT COALESCE(l.query_id, v.query_id) AS query_id,
                COALESCE(l.doc_id, v.neighbor_id) AS doc_id,
@@ -2753,9 +2677,47 @@ def _hybrid_rrf_oracle() -> str:
     """
 
 
+def _rrf_fuse(spark: SparkSession, sf_dir: str, vec: DataFrame) -> DataFrame:
+    """The ONE fusion builder: full-outer join the BM25 top-k with a
+    vector leg's top-k (query_id, neighbor_id, rk) on (query, id), score
+    each candidate by RRF, and keep the top-k per query."""
+    from .textops import q_bm25_mlt_topk
+
+    lex = q_bm25_mlt_topk(spark, sf_dir).select(
+        F.col("query_id").alias("l_q"),
+        F.col("doc_id").alias("l_d"),
+        F.col("rk").alias("rk_lex"),
+    )
+    vec = vec.select(
+        F.col("query_id").alias("v_q"),
+        F.col("neighbor_id").alias("v_d"),
+        F.col("rk").alias("rk_vec"),
+    )
+    fused = lex.join(
+        vec,
+        (F.col("v_q") == F.col("l_q")) & (F.col("v_d") == F.col("l_d")),
+        "full_outer",
+    ).select(
+        F.coalesce("l_q", "v_q").alias("query_id"),
+        F.coalesce("l_d", "v_d").alias("doc_id"),
+        "rk_lex",
+        "rk_vec",
+    )
+    scored = fused.withColumn("rrf", F.expr(_RRF_EXPR))
+    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col("doc_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _RRF_TOPK)
+        .select(
+            "query_id", "doc_id", "rk_lex", "rk_vec", "rrf",
+            F.col("rk").cast("integer").alias("rk"),
+        )
+    )
+
+
 @register(
     "q_hybrid_rrf",
-    oracle=_hybrid_rrf_oracle(),
+    oracle=_rrf_oracle(_registry._REGISTRY["sim_bruteforce_topk"].oracle),
 )
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval by reciprocal-rank fusion: fuse the lexical BM25
@@ -2776,71 +2738,12 @@ def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries its own scale story (the BM25 index aggregates; the ANN family
     up to IVF-PQ).  In production the vector leg swaps to sim_ivfpq_topk
     unchanged — the fusion consumes only (query_id, id, rk)."""
-    from .textops import q_bm25_mlt_topk
-
-    lex = q_bm25_mlt_topk(spark, sf_dir).select(
-        F.col("query_id").alias("l_q"),
-        F.col("doc_id").alias("l_d"),
-        F.col("rk").alias("rk_lex"),
-    )
-    vec = sim_bruteforce_topk(spark, sf_dir).select(
-        F.col("query_id").alias("v_q"),
-        F.col("neighbor_id").alias("v_d"),
-        F.col("rk").alias("rk_vec"),
-    )
-    fused = lex.join(
-        vec,
-        (F.col("v_q") == F.col("l_q")) & (F.col("v_d") == F.col("l_d")),
-        "full_outer",
-    ).select(
-        F.coalesce("l_q", "v_q").alias("query_id"),
-        F.coalesce("l_d", "v_d").alias("doc_id"),
-        "rk_lex",
-        "rk_vec",
-    )
-    scored = fused.withColumn("rrf", F.expr(_RRF_EXPR))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select(
-            "query_id", "doc_id", "rk_lex", "rk_vec", "rrf",
-            F.col("rk").cast("integer").alias("rk"),
-        )
-    )
-
-
-def _hybrid_rrf_ivfpq_oracle() -> str:
-    from . import textops  # noqa: F401 — ordering-independent (see above)
-
-    lex = _registry._REGISTRY["q_bm25_mlt_topk"].oracle
-    return f"""
-    WITH lex AS ({lex}),
-    vec AS ({_ivfpq_oracle()}),
-    fused AS (
-        SELECT COALESCE(l.query_id, v.query_id) AS query_id,
-               COALESCE(l.doc_id, v.neighbor_id) AS doc_id,
-               l.rk AS rk_lex, v.rk AS rk_vec
-        FROM lex l
-        FULL OUTER JOIN vec v
-          ON v.query_id = l.query_id AND v.neighbor_id = l.doc_id
-    ),
-    scored AS (SELECT *, {_RRF_EXPR} AS rrf FROM fused),
-    ranked AS (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY rrf DESC, doc_id) AS rk
-        FROM scored
-    )
-    SELECT query_id, doc_id, rk_lex, rk_vec, rrf, CAST(rk AS INTEGER) AS rk
-    FROM ranked WHERE rk <= {_RRF_TOPK}
-    """
+    return _rrf_fuse(spark, sf_dir, sim_bruteforce_topk(spark, sf_dir))
 
 
 @register(
     "q_hybrid_rrf_ivfpq",
-    oracle=_hybrid_rrf_ivfpq_oracle(),
+    oracle=_rrf_oracle(_ivfpq_oracle()),
 )
 def q_hybrid_rrf_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PRODUCTION hybrid search: q_hybrid_rrf with its vector leg
@@ -2854,46 +2757,13 @@ def q_hybrid_rrf_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion is the quality ceiling, this is the deployed approximation;
     comparing the two end-to-end result lists is the retrieval-stack twin
     of q_ivfpq_recall's index-level measurement."""
-    from .textops import q_bm25_mlt_topk
-
-    lex = q_bm25_mlt_topk(spark, sf_dir).select(
-        F.col("query_id").alias("l_q"),
-        F.col("doc_id").alias("l_d"),
-        F.col("rk").alias("rk_lex"),
-    )
-    vec = sim_ivfpq_topk(spark, sf_dir).select(
-        F.col("query_id").alias("v_q"),
-        F.col("neighbor_id").alias("v_d"),
-        F.col("rk").alias("rk_vec"),
-    )
-    fused = lex.join(
-        vec,
-        (F.col("v_q") == F.col("l_q")) & (F.col("v_d") == F.col("l_d")),
-        "full_outer",
-    ).select(
-        F.coalesce("l_q", "v_q").alias("query_id"),
-        F.coalesce("l_d", "v_d").alias("doc_id"),
-        "rk_lex",
-        "rk_vec",
-    )
-    scored = fused.withColumn("rrf", F.expr(_RRF_EXPR))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("rrf").desc(), F.col("doc_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _RRF_TOPK)
-        .select(
-            "query_id", "doc_id", "rk_lex", "rk_vec", "rrf",
-            F.col("rk").cast("integer").alias("rk"),
-        )
-    )
+    return _rrf_fuse(spark, sf_dir, sim_ivfpq_topk(spark, sf_dir))
 
 
 def _hybrid_agreement_oracle() -> str:
     return f"""
-    WITH exact_f AS ({_hybrid_rrf_oracle()}),
-    deployed AS ({_hybrid_rrf_ivfpq_oracle()}),
+    WITH exact_f AS ({_registry._REGISTRY["q_hybrid_rrf"].oracle}),
+    deployed AS ({_registry._REGISTRY["q_hybrid_rrf_ivfpq"].oracle}),
     hits AS (
         SELECT e.query_id,
                CAST(COUNT(*) AS BIGINT) AS n_ceiling,
@@ -3025,10 +2895,6 @@ def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     persisted through the persist_tracked seam (the caller's scope releases
     it).  Pair columns carry the exact-integer (pdot, da, db) triple plus
     the derived bit-identical ``cosine`` double."""
-    import math
-
-    from ._util import persist_tracked
-
     emb = _persisted_valid_emb(spark, sf_dir)
     cents = _ivf_centroid_rows(emb)
     cq_rows = []
@@ -3158,8 +3024,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     populations, and therefore per-cell pair counts, bounded.  The member
     relation feeds both sides of the self-join, so it is persisted through
     the persist_tracked seam.  No all-pairs stage anywhere."""
-    from pyspark.sql import Window
-
     _mem, pairs = _semdedup_pairs(spark, sf_dir)
     qual = pairs.filter(_sem_qual(_SEMDEDUP_COSINE_C))
     w = Window.partitionBy("vec_id").orderBy(F.col("cc_a").asc(), F.col("kept_by").asc())
@@ -3314,8 +3178,6 @@ def _trunc_topk_frame(spark: SparkSession, sf_dir: str, d: int) -> DataFrame:
     same broadcast-scan/WindowGroupLimit shape as sim_bruteforce_topk.
     Truncation happens BEFORE the broadcast, so the shipped query set and
     the per-pair fold both shrink with d."""
-    from pyspark.sql import Window
-
     emb = t(spark, sf_dir, "embeddings")
     queries = F.broadcast(
         emb.filter(F.col("vec_id") < _N_QUERIES).select(
@@ -3392,10 +3254,6 @@ def q_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query set and every per-pair fold shrink with d); the evaluation joins
     are |Q| x k metadata.  The truth set is computed once and persisted
     through the persist_tracked seam; |dims| adds scans, never shuffles."""
-    from functools import reduce
-
-    from ._util import persist_tracked
-
     exact = persist_tracked(
         sim_bruteforce_topk(spark, sf_dir).select("query_id", "neighbor_id")
     )
@@ -3486,10 +3344,6 @@ def q_incremental_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production deployment materializes the archive's (vec_id, cell,
     vector) relation once and reuses it across batches (here both sides
     derive from one table, split by the modulo stand-in)."""
-    from pyspark.sql import Window
-
-    from ._util import persist_tracked
-
     emb = _persisted_valid_emb(spark, sf_dir)
     cents = _ivf_centroid_rows(emb)
     mem = persist_tracked(
@@ -3626,8 +3480,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("cand_label") == F.col("query_label")).alias("same"),
         cosine.alias("cosine"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id", "same").orderBy(
         F.col("cosine").desc(), F.col("cand_id")
     )
@@ -3927,10 +3779,6 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent; argmax ties break on candidate id.  The oracle runs
     the SAME greedy as a recursive CTE with a LATERAL argmax — exact row
     match, not rows-only."""
-    from pyspark.sql import Window
-
-    from ._util import persist_tracked
-
     emb = t(spark, sf_dir, "embeddings")
     qz = (
         emb.select("vec_id", _quant(F.col("embedding")).alias("eq"))
@@ -4135,8 +3983,6 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows (nlist ≈ √n keeps the pair stage ~n^1.5; occupancy-capped cells
     make it ~n) and the graph runs on the POST-dedup corpus, which removes
     duplicate concentration by construction."""
-    from ._util import persist_tracked
-
     emb = _persisted_valid_emb(spark, sf_dir)
     centroid_rows = _ivf_centroid_rows(emb)
     asn = _ivf_assignment(emb, centroid_rows)
@@ -4167,8 +4013,6 @@ def q_knn_graph_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = F.col("pdot").cast("double") / (
         F.sqrt(F.col("da").cast("double")) * F.sqrt(F.col("db").cast("double"))
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
     edges = persist_tracked(
         a.join(b, ["cell"])
@@ -4288,8 +4132,6 @@ def q_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     asn = _ivf_assignment(emb, centroid_rows).select(
         "vec_id", "label", "centroid_id"
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("centroid_id").orderBy(
         F.md5(F.concat(F.lit(_CBS_SALT), F.col("vec_id").cast("string"))),
         F.col("vec_id"),
@@ -4428,8 +4270,6 @@ def q_kmeans_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     loops exactly this plan shape (with k and iterations as dials).
     Overflow: |eq| <= ~2^13 per component, dists <= ~2^32, inertia sums
     <= n*2^32 — BIGINT headroom to ~2^31 vectors."""
-    from ._util import persist_tracked
-
     members = persist_tracked(
         _ivf_valid_emb(spark, sf_dir)
         .select("vec_id", _quant(F.col("ed")).alias("eq"))
@@ -4660,8 +4500,6 @@ def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_label",
         _qdot(F.col("q_code"), F.col("c_code")).alias("dot8"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("dot8").desc(), F.col("neighbor_id")
     )

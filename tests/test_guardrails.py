@@ -23,6 +23,8 @@ from data_ingestion_ex8_producer_spark.operators.dedup import (
 )
 from data_ingestion_ex8_producer_spark.operators.similarity import _bucket_udf
 
+_REPO = Path(__file__).resolve().parents[1]
+
 
 def _simhash_sig(spark, text: str):
     docs = spark.createDataFrame([(1, text)], "doc_id int, text string")
@@ -84,14 +86,13 @@ def test_coverage_doc_counts_match_registry() -> None:
     '<N> registered queries; <M> with exact DuckDB oracles'; both numbers
     are asserted here so any registry growth forces the doc update."""
     import re
-    from pathlib import Path
 
     from data_ingestion_ex8_producer_spark.plans.registry import all_specs
 
     specs = all_specs()
     n_total = len(specs)
     n_oracled = sum(1 for s in specs.values() if s.oracle is not None)
-    text = Path("/root/repo/COVERAGE.md").read_text()
+    text = (_REPO / "COVERAGE.md").read_text()
     m = re.search(
         r"(\d+) registered queries; (\d+) with exact DuckDB oracles", text
     )
@@ -221,7 +222,7 @@ def test_every_registered_spec_has_a_measured_scale_curve() -> None:
     from tools.scale_probe import scaling_row_names
 
     covered = scaling_row_names(
-        "/root/repo/SCALING.md", "/root/repo/SCALING_100X.md"
+        _REPO / "SCALING.md", _REPO / "SCALING_100X.md"
     )
     missing = [n for n in all_specs() if n not in covered]
     assert not missing, (
@@ -233,8 +234,8 @@ def test_every_registered_spec_has_a_measured_scale_curve() -> None:
 @pytest.mark.parametrize(
     "artifact",
     [
-        "/root/repo/CORRECTNESS_full_sf0.01.json",
-        "/root/repo/CORRECTNESS_full_sf0.1.json",
+        "CORRECTNESS_full_sf0.01.json",
+        "CORRECTNESS_full_sf0.1.json",
     ],
 )
 def test_full_correctness_artifacts_cover_the_live_registry(artifact) -> None:
@@ -249,7 +250,7 @@ def test_full_correctness_artifacts_cover_the_live_registry(artifact) -> None:
 
     from data_ingestion_ex8_producer_spark.plans.registry import all_specs
 
-    data = json.loads(Path(artifact).read_text())
+    data = json.loads((_REPO / artifact).read_text())
     registered = set(all_specs())
     assert set(data) == registered, (
         f"{artifact} is stale: {len(data)} entries vs {len(registered)} "

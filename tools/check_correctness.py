@@ -19,10 +19,12 @@ import json
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402

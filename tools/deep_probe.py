@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import shutil
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
@@ -247,7 +249,7 @@ def main() -> None:
         "curve should track the token volume linearly like the",
         "surprisal annotate joins.",
     ]
-    with open("/root/repo/SCALING_100X.md", "w") as fh:
+    with open(REPO / "SCALING_100X.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote SCALING_100X.md")
     shutil.rmtree(out10, ignore_errors=True)

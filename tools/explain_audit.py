@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
@@ -49,7 +51,7 @@ def main() -> None:
 
     lines += ["", *_skew_evidence(spark, sf_dir)]
     lines += ["", *_ivf_evidence(spark, sf_dir)]
-    with open("/root/repo/EXPLAINS.md", "w") as fh:
+    with open(REPO / "EXPLAINS.md", "w") as fh:
         fh.write("\n".join(lines) + "\n" + "\n".join(details) + "\n")
     print("wrote EXPLAINS.md")
     spark.stop()

@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
@@ -36,7 +38,7 @@ from tools.scale_probe import (  # noqa: E402
 
 def missing_names() -> list[str]:
     covered = scaling_row_names(
-        "/root/repo/SCALING.md", "/root/repo/SCALING_100X.md"
+        REPO / "SCALING.md", REPO / "SCALING_100X.md"
     )
     return [n for n in all_specs() if n not in covered]
 
@@ -74,7 +76,7 @@ def main() -> None:
     ]
     for name, tb, tg, r in rows:
         lines.append(f"| {name} | {tb:.2f} | {tg:.2f} | {r:.1f} |")
-    with open("/root/repo/SCALING.md", "a") as fh:
+    with open(REPO / "SCALING.md", "a") as fh:
         fh.write("\n".join(lines) + "\n")
     print("appended to SCALING.md")
     spark.stop()

@@ -28,8 +28,10 @@ import os
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import duckdb  # noqa: E402
 
@@ -335,7 +337,7 @@ def build_archive_only_replica(base: str, out: str, k: int) -> None:
     )
 
 
-def scaling_row_names(*paths: str) -> set[str]:
+def scaling_row_names(*paths: str | Path) -> set[str]:
     """Exact spec names that carry a measured table row in the given
     SCALING docs.  A row is ``| name | ...`` or ``| name (note) | ...``;
     parsing actual first-cell names (instead of substring containment
@@ -709,7 +711,7 @@ def main() -> None:
         f"| {k}x archive | fixed | {inc_t_arch:.2f} | "
         f"{inc_t_arch / inc_t_base:.1f} |",
     ]
-    with open("/root/repo/SCALING.md", "w") as fh:
+    with open(REPO / "SCALING.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print("wrote SCALING.md")
     spark.stop()

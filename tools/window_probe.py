@@ -19,8 +19,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from data_ingestion_ex8_producer_spark.plans.registry import all_specs  # noqa: E402
 from data_ingestion_ex8_producer_spark.session import build_session  # noqa: E402
@@ -121,7 +123,7 @@ def main() -> None:
         f"| dedup_containment_exact (sf0.01 base) | {exact_rows[0][1]:.2f} "
         f"| {exact_rows[0][2]:.2f} | {exact_rows[0][3]:.1f} |",
     ]
-    with open("/root/repo/SCALING.md", "a") as fh:
+    with open(REPO / "SCALING.md", "a") as fh:
         fh.write("\n".join(lines) + "\n")
     print("appended to SCALING.md")
     spark.stop()
