@@ -7,6 +7,10 @@ Layout:
   config.py     env-driven configuration (same env-var names as the reference's
                 ``settings.py:11-18``)
   session.py    SparkSession factory (AQE, Arrow, s3a wiring)
+  worker_daemon.py  Python worker daemon: takes Spark's zip and jar archives
+                off the task workers' sys.path, so they import the
+                installed pyspark.  It is imported through this package
+                before that edit, so this file must not import pyspark.
   schemas.py    Avro record fields (name, order, nullability), bronze
                 StructType, raw landing header, silver projection
   functions/    names.py (header sanitize port), text.py (text/hash column

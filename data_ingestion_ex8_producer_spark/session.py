@@ -13,6 +13,22 @@ partitions (AQE coalesces downward at runtime), and a driver heap of
 ``SPARK_GRAFT_DRIVER_MEM`` or else half of physical memory, at most 12g.  On
 a real cluster the same builder is used with master/memory supplied by the
 cluster manager.
+
+Python task workers (``mapInArrow``, ``mapInPandas``, Python data-source
+readers and writers, RDD functions) start from the engine's own daemon,
+``worker_daemon.py``.  Spark puts ``pyspark.zip``, the py4j zip and the
+spark-core jar first on a worker's path; a worker that imports from them
+keeps zip finders that re-read each archive's directory at the start of every
+task (PySpark calls ``importlib.invalidate_caches()`` there), about 0.2 cpu-s
+a task.  The daemon removes those files under ``$SPARK_HOME`` from
+``sys.path``, so workers import the installed pyspark and py4j the driver
+uses, from bytecode.  It falls back to Spark's path, unchanged, when
+``SPARK_HOME`` is unset, or when either installed package is missing or of
+another version than the archive's.  Like every package function a worker
+runs, the daemon must be importable by the worker: from the working
+directory, ``PYTHONPATH`` or an install.  Spark's planner workers (Python
+data-source lookup, write planning and commit) always use Spark's default
+daemon and keep the archives.
 """
 
 from __future__ import annotations
@@ -22,6 +38,9 @@ import os
 from pyspark.sql import SparkSession
 
 from .config import EngineConfig
+
+# Spark runs `python -m WORKER_DAEMON <worker module>` and forks task workers from it.
+WORKER_DAEMON = "data_ingestion_ex8_producer_spark.worker_daemon"
 
 
 def build_session(
@@ -50,6 +69,7 @@ def build_session(
         # Arrow for pandas UDF / toPandas exchange (the only sanctioned Python path).
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": os.getenv("SPARK_GRAFT_UI", "false"),
+        "spark.python.daemon.module": WORKER_DAEMON,
     }
 
     # s3a wiring from the reference's env surface (settings.py:11-14).

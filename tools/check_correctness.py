@@ -14,6 +14,7 @@ row count and ``"oracle": "none"``).
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import json
 import math
@@ -60,18 +61,19 @@ def frame_fingerprint(columns: list[str], rows: list[tuple]) -> tuple[int, list[
 
 
 def main() -> int:
-    argv = list(sys.argv[1:])
-    json_out = None
-    if argv and argv[0] == "--json":
-        if len(argv) < 2:
-            print(
-                "usage: check_correctness.py [--json out.json] [sf_dir] [query ...]"
-            )
-            return 2
-        json_out = argv[1]
-        argv = argv[2:]
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
+    parser = argparse.ArgumentParser(
+        description="Compare every registered query (or the named ones) with its DuckDB oracle."
+    )
+    parser.add_argument("--json", metavar="OUT", help="also write a driver-style report here")
+    parser.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01",
+                        help="directory of the star-schema parquet files")
+    parser.add_argument("queries", nargs="*", help="registered query names (default: all)")
+    args = parser.parse_args()
+    json_out, sf_dir, only = args.json, args.sf_dir, set(args.queries)
+    specs = all_specs()
+    unknown = sorted(only - specs.keys())
+    if unknown:
+        parser.error(f"unknown queries: {', '.join(unknown)}")
     report: dict[str, dict] = {}
 
     spark = build_session("check_correctness")
@@ -81,7 +83,6 @@ def main() -> int:
             f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
         )
 
-    specs = all_specs()
     failures = []
     for name, spec in sorted(specs.items()):
         if only and name not in only:
