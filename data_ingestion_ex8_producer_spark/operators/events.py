@@ -1,7 +1,9 @@
 """Event-time windowing over the ``events`` table.  ``tumbling_counts``,
 ``session_values`` and ``ohlc_bars`` are the plans of three registered
 builders as functions of an events frame; ``streaming/events.py`` applies
-them unchanged to watermarked streams.
+them unchanged to watermarked streams.  ``drift_buckets`` is
+q_distribution_drift's projection, shared the same way with
+``streaming/stateful.py``'s drift monitor.
 
 ``F.window`` / ``F.session_window`` work identically on batch DataFrames, so
 the driver-scored batch results here pin the exact same grouping semantics the
@@ -1005,6 +1007,8 @@ def ohlc_bars(events: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _VO_Q2 = 100  # event values are 2-decimal; the 1e-2 grid is exact
+_OUTLIER_Z_SQ = 9.0  # 3-sigma test, squared: (x - mean)^2 > 9 * var
+_OUTLIER_MAD_K = 3  # robust test: |x - median| > 3 * MAD
 
 
 @register(
@@ -1033,10 +1037,10 @@ _VO_Q2 = 100  # event values are 2-decimal; the 1e-2 grid is exact
            st.mean_q / {_VO_Q2} AS mean_value,
            sqrt(st.var_q) / {_VO_Q2} AS std_value,
            CAST(SUM(CASE WHEN (v.vq - st.mean_q) * (v.vq - st.mean_q)
-                              > 9.0 * st.var_q
+                              > {_OUTLIER_Z_SQ} * st.var_q
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
            CAST(SUM(CASE WHEN (v.vq - st.mean_q) * (v.vq - st.mean_q)
-                              > 9.0 * st.var_q
+                              > {_OUTLIER_Z_SQ} * st.var_q
                          THEN 1 ELSE 0 END) AS DOUBLE) / st.n_events
              AS outlier_share
     FROM vq v JOIN stats st ON st.event_type = v.event_type
@@ -1091,7 +1095,7 @@ def q_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     d = F.col("vq") - F.col("mean_q")
-    is_out = (d * d > F.lit(9.0) * F.col("var_q")).cast("long")
+    is_out = (d * d > F.lit(_OUTLIER_Z_SQ) * F.col("var_q")).cast("long")
     return (
         ev.join(stats, "event_type")
         .groupBy("event_type", "n_events", "mean_q", "var_q")
@@ -1199,7 +1203,7 @@ def q_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_seasonal_hourly_anomaly",
-    oracle="""
+    oracle=f"""
     WITH cells AS (
         SELECT event_type,
                date_trunc('day', ts) AS day,
@@ -1229,11 +1233,11 @@ def q_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
            sqrt(st.var_q) AS std_cnt,
            CAST(SUM(CASE WHEN (CAST(c.x AS DOUBLE) - st.mean_q)
                               * (CAST(c.x AS DOUBLE) - st.mean_q)
-                              > 9.0 * st.var_q
+                              > {_OUTLIER_Z_SQ} * st.var_q
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
            CAST(SUM(CASE WHEN (CAST(c.x AS DOUBLE) - st.mean_q)
                               * (CAST(c.x AS DOUBLE) - st.mean_q)
-                              > 9.0 * st.var_q
+                              > {_OUTLIER_Z_SQ} * st.var_q
                          THEN 1 ELSE 0 END) AS DOUBLE) / st.n_cells
              AS anomaly_share
     FROM cells c
@@ -1293,7 +1297,7 @@ def q_seasonal_hourly_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     dev2 = (F.col("x").cast("double") - F.col("mean_q")) * (
         F.col("x").cast("double") - F.col("mean_q")
     )
-    is_anom = F.when(dev2 > F.lit(9.0) * F.col("var_q"), 1).otherwise(0)
+    is_anom = F.when(dev2 > F.lit(_OUTLIER_Z_SQ) * F.col("var_q"), 1).otherwise(0)
     return (
         cells.join(F.broadcast(stats), ["event_type", "hod"])
         .groupBy("event_type", "hod", "n_cells", "mean_q", "var_q")
@@ -1599,9 +1603,9 @@ def q_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT m.event_type, m.n_events,
            CAST(m.medq AS DOUBLE) / {_VO_Q2} AS median_value,
            CAST(a.madq AS DOUBLE) / {_VO_Q2} AS mad_value,
-           CAST(SUM(CASE WHEN d.dq > 3 * a.madq THEN 1 ELSE 0 END) AS BIGINT)
+           CAST(SUM(CASE WHEN d.dq > {_OUTLIER_MAD_K} * a.madq THEN 1 ELSE 0 END) AS BIGINT)
              AS n_outliers,
-           CAST(SUM(CASE WHEN d.dq > 3 * a.madq THEN 1 ELSE 0 END) AS DOUBLE)
+           CAST(SUM(CASE WHEN d.dq > {_OUTLIER_MAD_K} * a.madq THEN 1 ELSE 0 END) AS DOUBLE)
              / m.n_events AS outlier_share
     FROM dev d
     JOIN med m ON m.event_type = d.event_type
@@ -1683,7 +1687,7 @@ def q_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(mad), "event_type")
         .groupBy("event_type", "n_events", "medq", "madq")
         .agg(
-            F.sum((F.col("dq") > 3 * F.col("madq")).cast("long"))
+            F.sum((F.col("dq") > _OUTLIER_MAD_K * F.col("madq")).cast("long"))
             .cast("long")
             .alias("n_outliers")
         )
@@ -1965,45 +1969,21 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     based alarm anyway (Pinsker's inequality).  The one DOUBLE is a single
     division of exact integers (Class B, reported only).
 
-    Shape: one scan emits (feature, bucket, is_cur) rows (a 3-arm
-    projection union — still scan-stage, no join); buckets are bounded
-    domains (catalog / 24 hours / ~16 log2 decades), so the groupBy is
-    map-side-combinable into a metadata-sized relation and everything
-    after is arithmetic on <= ~50 rows.  At 100 TB the cross-multiplied
+    Shape: one scan emits (feature, bucket, is_cur) rows
+    (``drift_buckets``, which the streaming twin shares — still
+    scan-stage, no join); buckets are bounded domains (catalog / 24 hours
+    / ~16 log2 decades), so the groupBy is map-side-combinable into a
+    metadata-sized relation and everything after is arithmetic on <= ~50
+    rows.  At 100 TB the cross-multiplied
     BIGINT form holds while slice counts stay < ~3e9 (the product must fit
     int64); beyond that the same identity runs in DECIMAL(38,0) — still
     exact — or on per-million-scaled counts."""
-    ev = t(spark, sf_dir, "events")
-    is_cur = F.when(
-        F.col("ts") >= F.lit(_DRIFT_SPLIT).cast("timestamp"), 1
-    ).otherwise(0)
-    # r11-opt: the three feature arms explode from ONE scan (the per-arm
-    # unionByName scanned events three times), and the per-bucket census —
-    # |features| x |buckets| rows of metadata — persists because both the
-    # totals and the deviation join consume it (6 scans -> 1).
+    # r11-opt: the per-bucket census — |features| x |buckets| rows of
+    # metadata — persists because both the totals and the deviation join
+    # consume it.
     from ..operators._util import persist_tracked
 
-    arm_structs = F.array(
-        F.struct(
-            F.lit("event_type").alias("feature"),
-            F.col("event_type").alias("bucket"),
-        ),
-        F.struct(
-            F.lit("hour_of_day").alias("feature"),
-            F.hour("ts").cast("string").alias("bucket"),
-        ),
-        F.struct(
-            F.lit("value_log2_centi").alias("feature"),
-            (
-                F.length(F.bin(F.floor(F.col("value") * 100).cast("long"))) - 1
-            )
-            .cast("string")
-            .alias("bucket"),
-        ),
-    )
-    b = ev.select(
-        F.explode(arm_structs).alias("e"), is_cur.alias("is_cur")
-    ).select("e.feature", "e.bucket", "is_cur")
+    b = drift_buckets(t(spark, sf_dir, "events"))
     per_bucket = persist_tracked(
         b.groupBy("feature", "bucket").agg(
             F.sum(F.lit(1) - F.col("is_cur")).alias("nr"),
@@ -2046,3 +2026,34 @@ def q_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tvd"),
         )
     )
+
+
+def drift_buckets(events: DataFrame) -> DataFrame:
+    """The q_distribution_drift projection over any events frame, batch or
+    stream: one (feature, bucket, is_cur) row per event and feature, the
+    three feature arms exploded from one scan (a per-arm unionByName would
+    scan the events three times)."""
+    is_cur = F.when(
+        F.col("ts") >= F.lit(_DRIFT_SPLIT).cast("timestamp"), 1
+    ).otherwise(0)
+    arm_structs = F.array(
+        F.struct(
+            F.lit("event_type").alias("feature"),
+            F.col("event_type").alias("bucket"),
+        ),
+        F.struct(
+            F.lit("hour_of_day").alias("feature"),
+            F.hour("ts").cast("string").alias("bucket"),
+        ),
+        F.struct(
+            F.lit("value_log2_centi").alias("feature"),
+            (
+                F.length(F.bin(F.floor(F.col("value") * 100).cast("long"))) - 1
+            )
+            .cast("string")
+            .alias("bucket"),
+        ),
+    )
+    return events.select(
+        F.explode(arm_structs).alias("e"), is_cur.alias("is_cur")
+    ).select("e.feature", "e.bucket", "is_cur")

@@ -1,12 +1,32 @@
-"""Custom stateful streaming operators (applyInPandasWithState,
-transformWithStateInPandas) and stream-stream joins — the streaming surface
-that has no SQL equivalent.  None is a registered query: the tests pin each
-against its batch twin, and a constant shared with a twin is imported from it.
+"""Custom stateful streaming operators (applyInPandasWithState) and
+stream-stream joins — the streaming surface that has no SQL equivalent.
+None is a registered query: the tests pin each against its batch twin, and a
+constant or projection shared with a twin is imported from it.
+
+Each twin is one keyed update function ``_update_*(key, batches, state)``,
+and each state shape is written once:
+
+- ``_merge_counts`` adds a micro-batch's bucket counts into a
+  ``{bucket: count}`` map behind an optional late-data horizon.  The burst,
+  gap-filled burst and EWMA twins merge hour buckets behind their horizons,
+  the seasonal twin merges (day, hour-of-day) cells behind its pruned
+  frontier, and the robust and CUSUM twins merge value and day histograms
+  with no horizon.  ``_encode_hist`` cap-checks a histogram and encodes it
+  as sorted state arrays (robust, CUSUM, drift).
+- ``_burst_frame`` emits the trailing-window burst rows over a spine of hour
+  buckets: the observed hours of the burst twin, the dense hours of the
+  gap-filled twin.  ``_prune`` keeps the newest buckets of a spine and
+  counts the rest (bursts, EWMA, seasonal cells).
+- ``_quantize`` puts values on the 1e-2 grid as the batch twins'
+  ``round(value * 100)`` does in Spark and DuckDB: half away from zero
+  (numpy and pandas round half to even).
+- Every emitted frame, the empty ones included, takes its column names from
+  its twin's ``*_SCHEMA`` string (``_frame``).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
 import numpy as np
@@ -15,6 +35,105 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.dedup import _KMV_K, _KMV_SCALE, _SHINGLE_K
+from ..operators.events import (
+    _BURST_FACTOR,
+    _BURST_TRAIL,
+    _DRIFT_FLAG_X10,
+    _EWMA_WEIGHTS,
+    _EWMA_WINDOW,
+    _OUTLIER_MAD_K,
+    _OUTLIER_Z_SQ,
+    _VO_Q2,
+    drift_buckets,
+)
+
+_HOUR_US = 3_600_000_000
+_DAY_US = 86_400_000_000
+
+
+def _columns(schema: str) -> list[str]:
+    """Field names of a DDL schema string, in order."""
+    return [field.split()[0] for field in schema.split(",")]
+
+
+def _frame(schema: str, rows: list) -> pd.DataFrame:
+    """An emitted frame: ``rows`` (tuples in schema order, or dicts keyed by
+    field name) under the field names of ``schema``."""
+    return pd.DataFrame(rows, columns=_columns(schema))
+
+
+def _micros(ts: pd.Series) -> pd.Series:
+    """Epoch microseconds of a datetime64[ns] column."""
+    return ts.astype("int64") // 1_000
+
+
+def _hour_bucket(pdf: pd.DataFrame) -> pd.Series:
+    """Each event's hour bucket, in epoch microseconds."""
+    return (_micros(pdf["ts"]) // _HOUR_US) * _HOUR_US
+
+
+def _quantize(values: pd.Series) -> np.ndarray:
+    """Values on the 1e-2 grid as int64, rounded as the batch twins'
+    ``round(value * 100)``: half away from zero.  ``x - trunc(x)`` is exact
+    in doubles, so only a product that is exactly a half rounds away."""
+    x = values.to_numpy(dtype="float64") * _VO_Q2
+    whole = np.trunc(x)
+    away = np.where(np.abs(x - whole) >= 0.5, np.sign(x), 0.0)
+    return (whole + away).astype("int64")
+
+
+def _merge_counts(
+    batches: Iterable[pd.DataFrame],
+    bucket_of: Callable[[pd.DataFrame], Any],
+    counts: dict[int, int],
+    horizon: int | None = None,
+) -> set[int]:
+    """Add each micro-batch's per-bucket event counts into ``counts`` and
+    return the buckets changed.  Events in a bucket below ``horizon`` are
+    behind the late-data horizon and dropped."""
+    changed: set[int] = set()
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        for b, c in pd.Series(bucket_of(pdf)).value_counts().items():
+            b = int(b)
+            if horizon is not None and b < horizon:
+                continue
+            counts[b] = counts.get(b, 0) + int(c)
+            changed.add(b)
+    return changed
+
+
+def _decode_hist(state: GroupState) -> dict:
+    """The {key: count} histogram of a (keys, counts) state, or {}."""
+    return dict(zip(*state.get)) if state.exists else {}
+
+
+def _encode_hist(hist: dict, cap: int, error: str) -> tuple[list, list]:
+    """A histogram as its sorted (keys, values) state arrays.  Beyond ``cap``
+    keys the monitor fails fast with ``error`` instead of growing state
+    silently."""
+    if len(hist) > cap:
+        raise ValueError(error)
+    keys = sorted(hist)
+    return keys, [hist[k] for k in keys]
+
+
+def _prune(spine: list[int], n_pruned: int, retain: int) -> tuple[list[int], int]:
+    """The newest ``retain`` buckets of a sorted spine, and ``n_pruned`` plus
+    the number of buckets dropped."""
+    kept = spine[-retain:]
+    return kept, n_pruned + len(spine) - len(kept)
+
+
+def _mean_var(n: int, s: int, ss: int) -> tuple[float, float]:
+    """Mean and variance from exact integer moments (n, Σx, Σx²), through
+    the batch twins' double expression tree."""
+    mean = s / n
+    return mean, max(ss / n - mean * mean, 0.0)
+
 
 USER_TOTALS_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 _STATE_SCHEMA = "n bigint, total double"
@@ -35,9 +154,7 @@ def _update_user_totals(
         n += len(pdf)
         total += float(pdf["value"].sum())
     state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 2)]}
-    )
+    yield _frame(USER_TOTALS_SCHEMA, [(key[0], n, round(total, 2))])
 
 
 def user_running_totals(events: DataFrame) -> DataFrame:
@@ -97,84 +214,6 @@ def purchases_after_signup(events: DataFrame, how: str = "inner") -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# transformWithStateInPandas — the Spark 4.x arbitrary-state API
-# --------------------------------------------------------------------------
-
-USER_PROFILE_SCHEMA = (
-    "user_id bigint, n_events bigint, total_value double, n_types bigint"
-)
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class UserProfileProcessor(StatefulProcessor):
-    """StatefulProcessor: per-user running profile built from TWO typed state
-    variables — a ValueState (event count + value sum) and a MapState
-    (per-event-type counts, whose size yields the distinct-type count).
-
-    transformWithStateInPandas supersedes applyInPandasWithState in Spark
-    4.x: state is declared as named, independently-evolvable variables
-    (value/list/map, optional TTL) instead of one monolithic tuple, and the
-    runtime can store each in its own RocksDB column family — the layout a
-    100 TB streaming deployment needs for state that outgrows the heap.
-    """
-
-    def init(self, handle) -> None:  # StatefulProcessorHandle
-        self._totals = handle.getValueState("totals", "n bigint, total double")
-        self._type_counts = handle.getMapState(
-            "type_counts", "event_type string", "cnt bigint"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd  # executor-side import
-
-        n, total = (0, 0.0)
-        if self._totals.exists():
-            n, total = self._totals.get()
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-            for etype, cnt in pdf.groupby("event_type").size().items():
-                prev = (
-                    self._type_counts.getValue((etype,))[0]
-                    if self._type_counts.containsKey((etype,))
-                    else 0
-                )
-                self._type_counts.updateValue((etype,), (prev + int(cnt),))
-        self._totals.update((n, total))
-        n_types = sum(1 for _ in self._type_counts.keys())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(total, 2)],
-                "n_types": [n_types],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def user_profiles(events: DataFrame) -> DataFrame:
-    """Arbitrary-state streaming profile per user via the Spark 4
-    transformWithStateInPandas API (update mode, no timers).
-
-    Runtime dependencies beyond pyspark: the ``protobuf`` package (the
-    transformWithState state-server wire protocol is protobuf-framed) and
-    the RocksDB state store provider.  The pinning test skips itself where
-    protobuf is absent; ``user_running_totals`` above is the
-    applyInPandasWithState equivalent with no extra dependency."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserProfileProcessor(),
-        outputStructType=USER_PROFILE_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# --------------------------------------------------------------------------
 # Streaming burst detection (stateful twin of operators/events.py's
 # q_event_burst_detection)
 # --------------------------------------------------------------------------
@@ -187,10 +226,64 @@ BURST_SCHEMA = (
 # the number of buckets ever pruned off the front (tells us whether the
 # oldest retained buckets have complete trailing history).
 _BURST_STATE_SCHEMA = "hours array<long>, counts array<long>, n_pruned bigint"
-# Single source of truth for the predicate parameters: the batch twin.
-from ..operators.events import _BURST_FACTOR, _BURST_TRAIL  # noqa: E402
 
 _BURST_RETAIN = 24    # observed buckets kept for late-update handling
+
+
+def _observed_hours(state: GroupState) -> tuple[dict[int, int], int]:
+    """({hour: count}, n_pruned) of an observed-hours state, the shape the
+    burst and EWMA twins share."""
+    if not state.exists:
+        return {}, 0
+    hours, counts, n_pruned = state.get
+    return dict(zip(hours, counts)), int(n_pruned)
+
+
+def _burst_horizon(spine: list[int], n_pruned: int) -> int | None:
+    """The oldest bucket a batch may still update.  Once pruning has
+    happened, only buckets whose full trail is retained stay updatable;
+    before, any bucket is, because complete history is present."""
+    if n_pruned == 0:
+        return None
+    return spine[_BURST_TRAIL] if len(spine) > _BURST_TRAIL else spine[0]
+
+
+def _burst_frame(
+    key: tuple[Any, ...],
+    schema: str,
+    spine: list[int],
+    counts: dict[int, int],
+    changed: set[int],
+) -> pd.DataFrame:
+    """Burst rows for the buckets the batch AFFECTED: each changed bucket
+    and the next ``_BURST_TRAIL`` buckets of ``spine``, whose trailing
+    windows contain it.  A bucket's trail is the ``_BURST_TRAIL`` spine
+    buckets before it, and the predicate is the batch twin's integer-exact
+    count * trail_n > FACTOR * trail_sum.  Untouched buckets are not
+    emitted: after pruning, their trails would be recomputed from
+    truncated history and overwrite correct rows downstream.  A zero-count
+    bucket (only the dense spine has them) is a gap."""
+    pos = {h: i for i, h in enumerate(spine)}
+    affected: set[int] = set()
+    for h in changed:
+        affected.update(spine[pos[h] : pos[h] + _BURST_TRAIL + 1])
+    rows = []
+    for h in sorted(affected):
+        trail = spine[max(0, pos[h] - _BURST_TRAIL) : pos[h]]
+        trail_sum = sum(counts[t] for t in trail)
+        rows.append(
+            {
+                "event_type": key[0],
+                "hour_start": pd.Timestamp(h, unit="us"),
+                "n_events": counts[h],
+                "is_gap": counts[h] == 0,
+                "trail_sum": trail_sum,
+                "trail_n": len(trail),
+                "is_burst": len(trail) > 0
+                and counts[h] * len(trail) > _BURST_FACTOR * trail_sum,
+            }
+        )
+    return _frame(schema, rows)
 
 
 def _update_bursts(
@@ -202,15 +295,10 @@ def _update_bursts(
 
     State is the last ``_BURST_RETAIN`` observed (hour, count) buckets plus
     a pruned-bucket counter — constant-size.  Each batch merges its hourly
-    counts into the state and recomputes the integer-exact burst predicate
-    (count * trail_n > FACTOR * trail_sum over the trailing
-    ``_BURST_TRAIL`` OBSERVED buckets — identical to the batch twin's ROWS
-    frame) for the buckets the batch AFFECTED: the changed buckets and any
-    bucket whose trailing window contains one.  Only those are emitted
-    (update mode: latest emission per (type, hour) wins downstream);
-    untouched buckets keep their previously-emitted, still-correct rows —
-    re-emitting them after pruning would recompute their trails from
-    truncated history and overwrite correct values with wrong ones.
+    counts into the state and emits ``_burst_frame`` over the OBSERVED
+    hours: the trail is the ``_BURST_TRAIL`` preceding observed buckets,
+    identical to the batch twin's ROWS frame (update mode: latest emission
+    per (type, hour) wins downstream).
 
     Late-data contract: once pruning has happened, events for buckets
     older than the ``_BURST_TRAIL``-th retained bucket are dropped (the
@@ -218,65 +306,14 @@ def _update_bursts(
     may still UPDATE has its full trailing window inside retained state;
     before any pruning, arbitrarily old/out-of-order buckets are accepted
     because complete history is present."""
-    if state.exists:
-        hours, counts, n_pruned = (
-            list(state.get[0]), list(state.get[1]), int(state.get[2])
-        )
-        m = dict(zip(hours, counts))
-    else:
-        hours, m, n_pruned = [], {}, 0
-    # Once pruned, only buckets whose full trail is retained stay updatable.
-    update_horizon = (
-        hours[_BURST_TRAIL] if n_pruned > 0 and len(hours) > _BURST_TRAIL
-        else (hours[0] if n_pruned > 0 else None)
+    counts, n_pruned = _observed_hours(state)
+    changed = _merge_counts(
+        batches, _hour_bucket, counts, _burst_horizon(sorted(counts), n_pruned)
     )
-    floor_hour = 3_600_000_000  # micros per hour
-    changed: set[int] = set()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        us = pdf["ts"].astype("int64") // 1_000  # ns -> us
-        bucket = (us // floor_hour) * floor_hour
-        for h, c in bucket.value_counts().items():
-            h = int(h)
-            if update_horizon is not None and h < update_horizon:
-                continue  # behind the late-data horizon: dropped
-            m[h] = m.get(h, 0) + int(c)
-            changed.add(h)
-    ordered = sorted(m)
-    # Affected = changed buckets + every bucket whose trailing window
-    # contains a changed bucket (the next _BURST_TRAIL observed positions).
-    idx = {h: i for i, h in enumerate(ordered)}
-    affected: set[int] = set()
-    for h in changed:
-        i = idx[h]
-        affected.update(ordered[i : i + _BURST_TRAIL + 1])
-    retained = ordered[-_BURST_RETAIN:]
-    n_pruned += len(ordered) - len(retained)
-    state.update((retained, [m[h] for h in retained], n_pruned))
-    rows = []
-    for h in sorted(affected):
-        i = idx[h]
-        trail = ordered[max(0, i - _BURST_TRAIL) : i]
-        trail_sum = sum(m[t] for t in trail)
-        trail_n = len(trail)
-        rows.append(
-            (
-                key[0],
-                pd.Timestamp(h, unit="us"),
-                m[h],
-                trail_sum,
-                trail_n,
-                trail_n > 0 and m[h] * trail_n > _BURST_FACTOR * trail_sum,
-            )
-        )
-    yield pd.DataFrame(
-        rows,
-        columns=[
-            "event_type", "hour_start", "n_events",
-            "trail_sum", "trail_n", "is_burst",
-        ],
-    )
+    spine = sorted(counts)
+    retained, n_pruned = _prune(spine, n_pruned, _BURST_RETAIN)
+    state.update((retained, [counts[h] for h in retained], n_pruned))
+    yield _burst_frame(key, BURST_SCHEMA, spine, counts, changed)
 
 
 def event_bursts_stream(events: DataFrame) -> DataFrame:
@@ -306,8 +343,6 @@ GAPFILLED_BURST_SCHEMA = (
 # Dense spine state: the first retained hour (epoch micros) + a CONTIGUOUS
 # per-hour count array (zeros are real buckets here), + pruned-bucket count.
 _GF_STATE_SCHEMA = "first_hour bigint, counts array<long>, n_pruned bigint"
-
-_HOUR_US = 3_600_000_000
 
 # Upper bound on the dense spine ONE invocation will materialize (ADVICE r5):
 # without it, a single event arriving after a months-long silent period would
@@ -348,35 +383,16 @@ def _update_bursts_gapfilled(
     of densifying the whole gap (the skipped hours count into n_pruned),
     so one post-silence event can never trigger an O(gap-hours) batch."""
     if state.exists:
-        first, counts, n_pruned = (
-            int(state.get[0]), list(state.get[1]), int(state.get[2])
-        )
-        m = {first + i * _HOUR_US: int(c) for i, c in enumerate(counts)}
+        first, dense, n_pruned = state.get
+        counts = {int(first) + i * _HOUR_US: int(c) for i, c in enumerate(dense)}
+        n_pruned = int(n_pruned)
     else:
-        m, n_pruned = {}, 0
-    dense0 = sorted(m)
-    update_horizon = (
-        dense0[_BURST_TRAIL] if n_pruned > 0 and len(dense0) > _BURST_TRAIL
-        else (dense0[0] if n_pruned > 0 else None)
+        counts, n_pruned = {}, 0
+    changed = _merge_counts(
+        batches, _hour_bucket, counts, _burst_horizon(sorted(counts), n_pruned)
     )
-    changed: set[int] = set()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        us = pdf["ts"].astype("int64") // 1_000  # ns -> us
-        bucket = (us // _HOUR_US) * _HOUR_US
-        for h, c in bucket.value_counts().items():
-            h = int(h)
-            if update_horizon is not None and h < update_horizon:
-                continue  # behind the late-data horizon: dropped
-            m[h] = m.get(h, 0) + int(c)
-            changed.add(h)
-    cols = [
-        "event_type", "hour_start", "n_events", "is_gap",
-        "trail_sum", "trail_n", "is_burst",
-    ]
-    if not m:
-        yield pd.DataFrame([], columns=cols)
+    if not counts:
+        yield _frame(GAPFILLED_BURST_SCHEMA, [])
         return
     # Densify: every missing hour inside [lo, hi] becomes a NEW zero bucket
     # (changed -> emitted with its trail, exactly once).  If the merged span
@@ -384,47 +400,21 @@ def _update_bursts_gapfilled(
     # below the capped lo (counting dropped AND never-materialized hours
     # into n_pruned) so state update and emission stay bounded even when
     # one event arrives after a months-long silence.
-    lo, hi = min(m), max(m)
-    span_hours = (hi - lo) // _HOUR_US + 1
-    if span_hours > _GF_MAX_DENSE:
+    lo, hi = min(counts), max(counts)
+    if (hi - lo) // _HOUR_US + 1 > _GF_MAX_DENSE:
         capped_lo = hi - (_GF_MAX_DENSE - 1) * _HOUR_US
         n_pruned += (capped_lo - lo) // _HOUR_US
-        m = {h: c for h, c in m.items() if h >= capped_lo}
+        counts = {h: c for h, c in counts.items() if h >= capped_lo}
         changed = {h for h in changed if h >= capped_lo}
         lo = capped_lo
-    dense, h = [], lo
-    while h <= hi:
-        if h not in m:
-            m[h] = 0
+    spine = list(range(lo, hi + 1, _HOUR_US))
+    for h in spine:
+        if h not in counts:
+            counts[h] = 0
             changed.add(h)
-        dense.append(h)
-        h += _HOUR_US
-    idx = {h: i for i, h in enumerate(dense)}
-    affected: set[int] = set()
-    for h in changed:
-        i = idx[h]
-        affected.update(dense[i : i + _BURST_TRAIL + 1])
-    retained = dense[-_BURST_RETAIN:]
-    n_pruned += len(dense) - len(retained)
-    state.update((retained[0], [m[x] for x in retained], n_pruned))
-    rows = []
-    for h in sorted(affected):
-        i = idx[h]
-        trail = dense[max(0, i - _BURST_TRAIL) : i]
-        trail_sum = sum(m[t] for t in trail)
-        trail_n = len(trail)
-        rows.append(
-            (
-                key[0],
-                pd.Timestamp(h, unit="us"),
-                m[h],
-                m[h] == 0,
-                trail_sum,
-                trail_n,
-                trail_n > 0 and m[h] * trail_n > _BURST_FACTOR * trail_sum,
-            )
-        )
-    yield pd.DataFrame(rows, columns=cols)
+    retained, n_pruned = _prune(spine, n_pruned, _BURST_RETAIN)
+    state.update((retained[0], [counts[h] for h in retained], n_pruned))
+    yield _burst_frame(key, GAPFILLED_BURST_SCHEMA, spine, counts, changed)
 
 
 def event_bursts_gapfilled_stream(events: DataFrame) -> DataFrame:
@@ -453,8 +443,6 @@ VALUE_OUTLIER_SCHEMA = (
 # Exact integer moments on the shared 1e-2 grid: n, sum(vq), sum(vq^2),
 # plus the running outlier count.
 _VO_STATE_SCHEMA = "n bigint, s bigint, ss bigint, n_out bigint"
-from ..operators.events import _VO_Q2  # noqa: E402
-_VO_FACTOR_SQ = 9.0  # 3-sigma, squared
 
 
 def _update_value_outliers(
@@ -482,36 +470,22 @@ def _update_value_outliers(
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        v = pdf["value"].to_numpy(dtype="float64")
-        vq = np.floor(v * _VO_Q2 + 0.5).astype("int64")
+        vq = _quantize(pdf["value"])
         vqs.append(vq)
         n += len(vq)
         s += int(vq.sum())
         ss += int((vq * vq).sum())
     if n == 0:
-        yield pd.DataFrame(
-            [],
-            columns=[
-                "event_type", "n_events", "mean_value", "std_value",
-                "n_outliers", "outlier_share",
-            ],
-        )
+        yield _frame(VALUE_OUTLIER_SCHEMA, [])
         return
-    mean_q = s / n
-    var_q = max(ss / n - mean_q * mean_q, 0.0)
+    mean_q, var_q = _mean_var(n, s, ss)
     for vq in vqs:
         d = vq - mean_q
-        n_out += int(((d * d) > _VO_FACTOR_SQ * var_q).sum())
+        n_out += int(((d * d) > _OUTLIER_Z_SQ * var_q).sum())
     state.update((n, s, ss, n_out))
-    yield pd.DataFrame(
-        {
-            "event_type": [key[0]],
-            "n_events": [n],
-            "mean_value": [mean_q / _VO_Q2],
-            "std_value": [var_q ** 0.5 / _VO_Q2],
-            "n_outliers": [n_out],
-            "outlier_share": [n_out / n],
-        }
+    yield _frame(
+        VALUE_OUTLIER_SCHEMA,
+        [(key[0], n, mean_q / _VO_Q2, var_q ** 0.5 / _VO_Q2, n_out, n_out / n)],
     )
 
 
@@ -543,8 +517,6 @@ EWMA_SCHEMA = (
 # Observed (hour, count) buckets + pruned count — same constant-size shape
 # as the burst detector's state.
 _EWMA_STATE_SCHEMA = "hours array<long>, counts array<long>, n_pruned bigint"
-# Single source of truth for window length and weights: the batch twin.
-from ..operators.events import _EWMA_WEIGHTS, _EWMA_WINDOW  # noqa: E402
 
 _EWMA_RETAIN = 2 * _EWMA_WINDOW  # late-update headroom beyond one window
 _EWMA_WT = dict(_EWMA_WEIGHTS)   # lag (hours) -> integer weight 2^(15-lag)
@@ -577,40 +549,14 @@ def _update_ewma(
     bucket, has its full 15-hour lookback present in the merged map, and
     previously-emitted rows for older hours remain the correct prefix
     values."""
-    if state.exists:
-        hours, counts, n_pruned = (
-            list(state.get[0]), list(state.get[1]), int(state.get[2])
-        )
-        m = dict(zip(hours, counts))
-    else:
-        hours, m, n_pruned = [], {}, 0
-    horizon = (
-        hours[0] + (_EWMA_WINDOW - 1) * _HOUR_US
-        if n_pruned > 0 and hours
-        else None
-    )
-    changed: set[int] = set()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        us = pdf["ts"].astype("int64") // 1_000  # ns -> us
-        bucket = (us // _HOUR_US) * _HOUR_US
-        for h, c in bucket.value_counts().items():
-            h = int(h)
-            if horizon is not None and h < horizon:
-                continue  # behind the late-data horizon: dropped
-            m[h] = m.get(h, 0) + int(c)
-            changed.add(h)
-    ordered = sorted(m)
-    affected = {
-        h
-        for h in ordered
-        for c in changed
-        if 0 <= h - c <= (_EWMA_WINDOW - 1) * _HOUR_US
-    }
-    retained = ordered[-_EWMA_RETAIN:]
-    n_pruned += len(ordered) - len(retained)
-    state.update((retained, [m[h] for h in retained], n_pruned))
+    counts, n_pruned = _observed_hours(state)
+    window_us = (_EWMA_WINDOW - 1) * _HOUR_US
+    horizon = min(counts) + window_us if n_pruned > 0 and counts else None
+    changed = _merge_counts(batches, _hour_bucket, counts, horizon)
+    spine = sorted(counts)
+    affected = {h for h in spine for c in changed if 0 <= h - c <= window_us}
+    retained, n_pruned = _prune(spine, n_pruned, _EWMA_RETAIN)
+    state.update((retained, [counts[h] for h in retained], n_pruned))
     # Emission reads the PRE-PRUNE map: the horizon drop above guarantees
     # every affected bucket's full lookback is present in it (changes are
     # only accepted at >= prior_first + 15h), so no affected row is ever
@@ -620,18 +566,15 @@ def _update_ewma(
         num = den = n_win = 0
         for lag in range(_EWMA_WINDOW):
             src = h - lag * _HOUR_US
-            if src in m:
+            if src in counts:
                 wt = _EWMA_WT[lag]
-                num += m[src] * wt
+                num += counts[src] * wt
                 den += wt
                 n_win += 1
         rows.append(
-            (key[0], pd.Timestamp(h, unit="us"), m[h], n_win, num / den)
+            (key[0], pd.Timestamp(h, unit="us"), counts[h], n_win, num / den)
         )
-    yield pd.DataFrame(
-        rows,
-        columns=["event_type", "hour_start", "x", "n_window", "ewma"],
-    )
+    yield _frame(EWMA_SCHEMA, rows)
 
 
 def ewma_hourly_stream(events: DataFrame) -> DataFrame:
@@ -669,7 +612,18 @@ _SEAS_STATE_SCHEMA = (
     "closed_anom array<long>, n_pruned bigint, max_pruned_key bigint"
 )
 _SEAS_RETAIN = 768  # open day-cells kept per type (~32 days x 24 slots)
-_DAY_US = 86_400_000_000
+
+
+def _day_hod_cell(pdf: pd.DataFrame) -> pd.Series:
+    """Each event's packed (day, hour-of-day) cell key: day_us + hod."""
+    us = _micros(pdf["ts"])
+    return (us // _DAY_US) * _DAY_US + (us // _HOUR_US) % 24
+
+
+def _beyond_3sigma(x: int, mean: float, var: float) -> bool:
+    """The batch twin's anomaly test (x - mean)^2 > 9 * var, in doubles."""
+    d = float(x) - mean
+    return d * d > _OUTLIER_Z_SQ * var
 
 
 def _update_seasonal(
@@ -700,77 +654,51 @@ def _update_seasonal(
     replaces let a late event resurrect a mid-day-pruned cell of the
     oldest retained day; ADVICE r6)."""
     if state.exists:
-        (keys, counts, c_n, c_s, c_ss, c_an, n_pruned, max_pruned) = (
-            list(state.get[0]), list(state.get[1]), list(state.get[2]),
-            list(state.get[3]), list(state.get[4]), list(state.get[5]),
-            int(state.get[6]), int(state.get[7]),
-        )
-        cells = dict(zip(keys, counts))
+        keys, vals, c_n, c_s, c_ss, c_an, n_pruned, max_pruned = state.get
+        cells = dict(zip(keys, vals))
+        c_n, c_s, c_ss, c_an = list(c_n), list(c_s), list(c_ss), list(c_an)
+        n_pruned, max_pruned = int(n_pruned), int(max_pruned)
     else:
         cells, n_pruned, max_pruned = {}, 0, -1
         c_n, c_s, c_ss, c_an = [0] * 24, [0] * 24, [0] * 24, [0] * 24
-    touched_hods: set[int] = set()
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        us = pdf["ts"].astype("int64") // 1_000  # ns -> us
-        day = (us // _DAY_US) * _DAY_US
-        hod = (us // _HOUR_US) % 24
-        packed = day + hod
-        for k, c in packed.value_counts().items():
-            k = int(k)
-            if k <= max_pruned:
-                continue  # at/behind the pruned frontier: dropped
-            cells[k] = cells.get(k, 0) + int(c)
-            touched_hods.add(int(k % _DAY_US))  # k = day_us + hod, hod < 24
+    # At or behind the pruned frontier: dropped.
+    changed = _merge_counts(batches, _day_hod_cell, cells, max_pruned + 1)
+
+    def open_counts(hod: int) -> list[int]:
+        return [cells[k] for k in cells if k % _DAY_US == hod]
+
+    def moments(hod: int, xs: list[int]) -> tuple[int, float, float]:
+        """(n, mean, var) of hod's closed moments plus the open counts xs."""
+        n = c_n[hod] + len(xs)
+        return n, *_mean_var(
+            n, c_s[hod] + sum(xs), c_ss[hod] + sum(x * x for x in xs)
+        )
+
     ordered = sorted(cells)
-    for k in ordered[:-_SEAS_RETAIN] if len(ordered) > _SEAS_RETAIN else []:
-        hod = int(k % _DAY_US)
+    kept, n_pruned = _prune(ordered, n_pruned, _SEAS_RETAIN)
+    for k in ordered[: len(ordered) - len(kept)]:
+        hod = k % _DAY_US  # k = day_us + hod, hod < 24
         x = cells.pop(k)
         max_pruned = k  # ascending walk: the frontier ends at the max
         # freeze the verdict with the full moments known NOW (closed+open)
-        n_all = c_n[hod] + sum(1 for kk in cells if kk % _DAY_US == hod) + 1
-        s_all = c_s[hod] + sum(
-            cells[kk] for kk in cells if kk % _DAY_US == hod
-        ) + x
-        ss_all = c_ss[hod] + sum(
-            cells[kk] * cells[kk] for kk in cells if kk % _DAY_US == hod
-        ) + x * x
-        mean_q = s_all / n_all
-        var_q = max(ss_all / n_all - mean_q * mean_q, 0.0)
-        d = float(x) - mean_q
-        c_an[hod] += int(d * d > 9.0 * var_q)
+        _, mean_q, var_q = moments(hod, [*open_counts(hod), x])
+        c_an[hod] += int(_beyond_3sigma(x, mean_q, var_q))
         c_n[hod] += 1
         c_s[hod] += x
         c_ss[hod] += x * x
-        n_pruned += 1
-    state.update((
-        sorted(cells), [cells[k] for k in sorted(cells)],
-        c_n, c_s, c_ss, c_an, n_pruned, max_pruned,
-    ))
+    state.update(
+        (kept, [cells[k] for k in kept], c_n, c_s, c_ss, c_an, n_pruned, max_pruned)
+    )
+    # Every touched hod has a cell: still open, or just closed into c_n.
     rows = []
-    for hod in sorted(touched_hods):
-        open_x = [cells[k] for k in cells if k % _DAY_US == hod]
-        n_all = c_n[hod] + len(open_x)
-        if n_all == 0:
-            continue
-        s_all = c_s[hod] + sum(open_x)
-        ss_all = c_ss[hod] + sum(x * x for x in open_x)
-        mean_q = s_all / n_all
-        var_q = max(ss_all / n_all - mean_q * mean_q, 0.0)
-        n_anom = c_an[hod] + sum(
-            1 for x in open_x if (float(x) - mean_q) ** 2 > 9.0 * var_q
-        )
+    for hod in sorted({k % _DAY_US for k in changed}):
+        xs = open_counts(hod)
+        n_all, mean_q, var_q = moments(hod, xs)
+        n_anom = c_an[hod] + sum(_beyond_3sigma(x, mean_q, var_q) for x in xs)
         rows.append(
             (key[0], hod, n_all, mean_q, var_q ** 0.5, n_anom, n_anom / n_all)
         )
-    yield pd.DataFrame(
-        rows,
-        columns=[
-            "event_type", "hod", "n_cells", "mean_cnt", "std_cnt",
-            "n_anomalies", "anomaly_share",
-        ],
-    )
+    yield _frame(SEASONAL_SCHEMA, rows)
 
 
 def seasonal_anomaly_stream(events: DataFrame) -> DataFrame:
@@ -846,10 +774,8 @@ def _update_scd2(
     rows = []
     user = key[0]
     changed = False  # open row re-emits ONLY when this batch moved it
-    for ts_ns, etype in zip(
-        pdf["ts"].astype("int64"), pdf["event_type"]
-    ):
-        us = int(ts_ns) // 1_000
+    for us, etype in zip(_micros(pdf["ts"]), pdf["event_type"]):
+        us = int(us)
         if etype is None:
             continue
         if since0 is not None and us <= since0:
@@ -871,13 +797,7 @@ def _update_scd2(
             (user, cur_state, pd.Timestamp(since_us, unit="us"),
              None, version, 1)
         )
-    yield pd.DataFrame(
-        rows,
-        columns=[
-            "user_id", "state", "valid_from", "valid_to", "version",
-            "is_current",
-        ],
-    )
+    yield _frame(SCD2_SCHEMA, rows)
 
 
 def scd2_stream(events: DataFrame) -> DataFrame:
@@ -958,26 +878,18 @@ def _update_robust(
     need the full histogram, which is value-cardinality-bounded — the
     monitor's memory follows the DATA DOMAIN, not the stream length, the
     same reason the batch twin's scale story holds at 100 TB."""
-    if state.exists:
-        hist = dict(zip(list(state.get[0]), list(state.get[1])))
-    else:
-        hist = {}
-    touched = False
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        vq = (pdf["value"].astype("float64") * _VO_Q2).round().astype("int64")
-        for v, c in vq.value_counts().items():
-            hist[int(v)] = hist.get(int(v), 0) + int(c)
-        touched = True
-    if len(hist) > _RO_MAX_BINS:
-        raise ValueError(
+    hist = _decode_hist(state)
+    changed = _merge_counts(batches, lambda pdf: _quantize(pdf["value"]), hist)
+    state.update(
+        _encode_hist(
+            hist,
+            _RO_MAX_BINS,
             f"robust monitor for {key[0]!r} exceeds {_RO_MAX_BINS} value "
-            "bins; widen the quantization grid or clamp the value domain"
+            "bins; widen the quantization grid or clamp the value domain",
         )
-    state.update((sorted(hist), [hist[v] for v in sorted(hist)]))
-    if not touched or not hist:
-        yield pd.DataFrame(columns=[c.split()[0] for c in ROBUST_SCHEMA.split(", ")])
+    )
+    if not changed:
+        yield _frame(ROBUST_SCHEMA, [])
         return
     pairs = list(hist.items())
     med, n = _hist_order_stat(pairs)
@@ -986,22 +898,10 @@ def _update_robust(
         d = abs(v - med)
         dev[d] = dev.get(d, 0) + c
     mad, _ = _hist_order_stat(list(dev.items()))
-    n_out = sum(c for d, c in dev.items() if d > 3 * mad)
-    yield pd.DataFrame(
-        [
-            (
-                key[0],
-                n,
-                med / _VO_Q2,
-                mad / _VO_Q2,
-                n_out,
-                n_out / n,
-            )
-        ],
-        columns=[
-            "event_type", "n_events", "median_value",
-            "mad_value", "n_outliers", "outlier_share",
-        ],
+    n_out = sum(c for d, c in dev.items() if d > _OUTLIER_MAD_K * mad)
+    yield _frame(
+        ROBUST_SCHEMA,
+        [(key[0], n, med / _VO_Q2, mad / _VO_Q2, n_out, n_out / n)],
     )
 
 
@@ -1065,13 +965,18 @@ def _make_update_token_budget(budget: int):
         cum = int(cums.iloc[-1])
         state.update((cum,))
         yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "source": key[0],
-                "n_tokens": pdf["n_tokens"].astype("int64"),
-                "cum_tokens": cums.astype("int64"),
-                "kept": (cums <= budget).astype("int64"),
-            }
+            dict(
+                zip(
+                    _columns(TOKEN_BUDGET_SCHEMA),
+                    (
+                        pdf["doc_id"].astype("int64"),
+                        key[0],
+                        pdf["n_tokens"].astype("int64"),
+                        cums.astype("int64"),
+                        (cums <= budget).astype("int64"),
+                    ),
+                )
+            )
         )
 
     return _update
@@ -1156,29 +1061,24 @@ def _update_cusum(
     current CUSUM summary (update mode): the day where the cumulative
     residual peaks is the most likely mean-shift point of that type's
     daily volume series so far."""
-    if state.exists:
-        hist = dict(zip(list(state.get[0]), list(state.get[1])))
-    else:
-        hist = {}
-    touched = False
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        days = (pdf["ts_us"].astype("int64") // _DAY_US).astype("int64")
-        for d, c in days.value_counts().items():
-            hist[int(d)] = hist.get(int(d), 0) + int(c)
-        touched = True
-    if len(hist) > _CU_MAX_DAYS:
-        raise ValueError(
+    hist = _decode_hist(state)
+    changed = _merge_counts(
+        batches, lambda pdf: pdf["ts_us"].astype("int64") // _DAY_US, hist
+    )
+    state.update(
+        _encode_hist(
+            hist,
+            _CU_MAX_DAYS,
             f"cusum monitor for {key[0]!r} exceeds {_CU_MAX_DAYS} day "
-            "cells; the stream is feeding implausible timestamps"
+            "cells; the stream is feeding implausible timestamps",
         )
-    state.update((sorted(hist), [hist[d] for d in sorted(hist)]))
-    if not touched or not hist:
-        yield pd.DataFrame(columns=[c.split()[0] for c in CUSUM_SCHEMA.split(", ")])
+    )
+    if not changed:
+        yield _frame(CUSUM_SCHEMA, [])
         return
     peak_day, peak_abs, n_peak = _cusum_trace(list(hist.items()))
-    yield pd.DataFrame(
+    yield _frame(
+        CUSUM_SCHEMA,
         [
             (
                 key[0],
@@ -1188,10 +1088,6 @@ def _update_cusum(
                 peak_abs,
                 n_peak,
             )
-        ],
-        columns=[
-            "event_type", "n_days", "n_events", "peak_day",
-            "peak_abs_cusum", "n_peak_days",
         ],
     )
 
@@ -1228,7 +1124,6 @@ def cusum_regime_stream(events: DataFrame) -> DataFrame:
 
 KMV_SCHEMA = "source string, n_sketch bigint, h_k bigint, d_hat bigint"
 _KMV_STATE_SCHEMA = "sk array<long>"
-from ..operators.dedup import _KMV_K, _KMV_SCALE, _SHINGLE_K  # noqa: E402
 
 
 def _update_kmv(
@@ -1261,17 +1156,12 @@ def _update_kmv(
     sk_sorted = sorted(sk)[:_KMV_K]
     state.update((sk_sorted,))
     if not touched or not sk_sorted:
-        yield pd.DataFrame(
-            columns=[c.split()[0] for c in KMV_SCHEMA.split(", ")]
-        )
+        yield _frame(KMV_SCHEMA, [])
         return
     n = len(sk_sorted)
     hk = sk_sorted[-1]
     d_hat = n if n < _KMV_K else _KMV_SCALE // hk
-    yield pd.DataFrame(
-        [(key[0], n, hk, d_hat)],
-        columns=["source", "n_sketch", "h_k", "d_hat"],
-    )
+    yield _frame(KMV_SCHEMA, [(key[0], n, hk, d_hat)])
 
 
 def kmv_sketch_stream(docs: DataFrame) -> DataFrame:
@@ -1312,7 +1202,6 @@ _DRIFT_STATE_SCHEMA = "buckets array<string>, nr array<long>, nc array<long>"
 _DRIFT_MAX_BUCKETS = 100_000  # fail-fast bound (the _RO_MAX_BINS doctrine):
 # feature bucket domains are bounded (catalog / 24 hours / log2 decades);
 # exceeding this means a mis-bucketed feature, not data.
-from ..operators.events import _DRIFT_FLAG_X10  # noqa: E402
 
 
 def _update_drift(
@@ -1352,15 +1241,15 @@ def _update_drift(
             cell[0] += ref
             cell[1] += cur
         touched = True
-    if len(hist) > _DRIFT_MAX_BUCKETS:
-        raise ValueError(
-            f"drift monitor for {key[0]!r} exceeds {_DRIFT_MAX_BUCKETS} "
-            "buckets; the feature is mis-bucketed (unbounded domain)"
-        )
-    ks = sorted(hist)
-    state.update((ks, [hist[k][0] for k in ks], [hist[k][1] for k in ks]))
+    ks, cells = _encode_hist(
+        hist,
+        _DRIFT_MAX_BUCKETS,
+        f"drift monitor for {key[0]!r} exceeds {_DRIFT_MAX_BUCKETS} "
+        "buckets; the feature is mis-bucketed (unbounded domain)",
+    )
+    state.update((ks, [c[0] for c in cells], [c[1] for c in cells]))
     if not touched or not hist:
-        yield pd.DataFrame(columns=[c.split()[0] for c in DRIFT_SCHEMA.split(", ")])
+        yield _frame(DRIFT_SCHEMA, [])
         return
     n_ref = sum(v[0] for v in hist.values())
     n_cur = sum(v[1] for v in hist.values())
@@ -1368,13 +1257,14 @@ def _update_drift(
         # One side empty: TVD is undefined (division by zero) — emit the
         # counts with a NULL verdict so the dashboard shows the monitor is
         # alive but not yet comparable.
-        yield pd.DataFrame(
+        yield _frame(
+            DRIFT_SCHEMA,
             [(key[0], len(hist), n_ref, n_cur, None, None, None, None)],
-            columns=[c.split()[0] for c in DRIFT_SCHEMA.split(", ")],
         )
         return
     tvd_num = sum(abs(r * n_cur - c * n_ref) for r, c in hist.values())
-    yield pd.DataFrame(
+    yield _frame(
+        DRIFT_SCHEMA,
         [
             (
                 key[0],
@@ -1387,43 +1277,17 @@ def _update_drift(
                 tvd_num / (2 * n_ref * n_cur),
             )
         ],
-        columns=[c.split()[0] for c in DRIFT_SCHEMA.split(", ")],
     )
 
 
 def drift_monitor_stream(events: DataFrame) -> DataFrame:
-    """Streaming feature-distribution drift monitor: the same 3-arm
-    (feature, bucket, is_cur) projection as the batch q_distribution_drift
-    (built from the registered builder's expressions so bucketing fidelity
-    holds by construction), then applyInPandasWithState per feature."""
-    from ..operators.events import _DRIFT_SPLIT
-
-    is_cur = F.when(
-        F.col("ts") >= F.lit(_DRIFT_SPLIT).cast("timestamp"), 1
-    ).otherwise(0)
-    arms = [
-        events.select(
-            F.lit("event_type").alias("feature"),
-            F.col("event_type").alias("bucket"),
-            is_cur.alias("is_cur"),
-        ),
-        events.select(
-            F.lit("hour_of_day").alias("feature"),
-            F.hour("ts").cast("string").alias("bucket"),
-            is_cur.alias("is_cur"),
-        ),
-        events.select(
-            F.lit("value_log2_centi").alias("feature"),
-            (
-                F.length(F.bin(F.floor(F.col("value") * 100).cast("long"))) - 1
-            )
-            .cast("string")
-            .alias("bucket"),
-            is_cur.alias("is_cur"),
-        ),
-    ]
-    b = arms[0].unionByName(arms[1]).unionByName(arms[2])
-    return b.groupBy("feature").applyInPandasWithState(
+    """Streaming feature-distribution drift monitor: the batch
+    q_distribution_drift's own (feature, bucket, is_cur) projection
+    (``drift_buckets``, so bucketing fidelity holds by construction), then
+    applyInPandasWithState per feature.  The projection reads the stream
+    once; a checkpoint from the earlier three-arm union (three sources)
+    does not restart on it."""
+    return drift_buckets(events).groupBy("feature").applyInPandasWithState(
         _update_drift,
         outputStructType=DRIFT_SCHEMA,
         stateStructType=_DRIFT_STATE_SCHEMA,
@@ -1496,11 +1360,11 @@ def _update_qc(
         min_score = b_min if min_score is None else min(min_score, b_min)
         max_score = b_max if max_score is None else max(max_score, b_max)
     state.update((n_docs, n_keep, sum_score, min_score, max_score))
-    cols = [c.split()[0] for c in QC_SCHEMA.split(", ")]
     if not touched or n_docs == 0:
-        yield pd.DataFrame(columns=cols)
+        yield _frame(QC_SCHEMA, [])
         return
-    yield pd.DataFrame(
+    yield _frame(
+        QC_SCHEMA,
         [
             (
                 key[0],
@@ -1512,7 +1376,6 @@ def _update_qc(
                 max_score,
             )
         ],
-        columns=cols,
     )
 
 

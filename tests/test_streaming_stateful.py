@@ -145,58 +145,6 @@ def test_stateful_stream_with_rocksdb_state_store(spark, tmp_path: Path) -> None
 
 
 @pytest.mark.slow
-def test_transform_with_state_profiles_match_batch(spark, tmp_path: Path) -> None:
-    """The Spark 4 transformWithStateInPandas operator (ValueState + MapState
-    per user) must converge to the batch per-user profile.  The API requires
-    the RocksDB state store provider AND protobuf (the state-server wire
-    protocol) — skipped where protobuf isn't installed."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from data_ingestion_ex8_producer_spark.streaming.stateful import user_profiles
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events = stream_events_fixture(spark, SF, str(tmp_path / "tws"))
-        q = (
-            user_profiles(events)
-            .writeStream.format("memory")
-            .queryName("tws_profiles")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .start()
-        )
-        q.awaitTermination(180)
-        q.stop()
-        got = {
-            r["user_id"]: (r["n_events"], r["total_value"], r["n_types"])
-            for r in spark.sql("SELECT * FROM tws_profiles").collect()
-        }
-        expected = {
-            r["user_id"]: (r["n_events"], r["total_value"], r["n_types"])
-            for r in _batch_events(spark)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-                F.countDistinct("event_type").alias("n_types"),
-            )
-            .collect()
-        }
-        assert len(expected) > 0
-        assert got == expected
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-@pytest.mark.slow
 def test_stream_stream_left_outer_join_emits_nulls(spark, tmp_path: Path) -> None:
     """Left-outer stream-stream join: a signup with no purchase inside the
     horizon is emitted with null purchase columns — but only after the global
@@ -393,6 +341,25 @@ def test_burst_state_drops_data_behind_horizon() -> None:
     out2 = pd.concat(_update_bursts(("e",), iter([_mk_events({150: 4})]), state2))
     assert 150 * 3_600_000_000 in [int(h) for h in state2.get[0]]
     assert len(out2) >= 1  # the new bucket (and affected successors) emit
+
+
+@pytest.mark.parametrize("update", ["_update_bursts", "_update_bursts_gapfilled"])
+def test_burst_horizon_is_the_trail_th_retained_bucket(update) -> None:
+    """After pruning, the oldest bucket a batch may update is the
+    _BURST_TRAIL-th retained one, on either spine: an event in the bucket
+    just before it is dropped, an event in it is merged and emitted."""
+    import pandas as pd
+
+    from data_ingestion_ex8_producer_spark.operators.events import _BURST_TRAIL
+    from data_ingestion_ex8_producer_spark.streaming import stateful as _st
+
+    fn = getattr(_st, update)
+    state = _FakeState()
+    pd.concat(fn(("e",), iter([_mk_events({h: 1 for h in range(100, 130)})]), state))
+    edge = 130 - _st._BURST_RETAIN + _BURST_TRAIL
+    assert len(pd.concat(fn(("e",), iter([_mk_events({edge - 1: 5})]), state))) == 0
+    out = pd.concat(fn(("e",), iter([_mk_events({edge: 5})]), state))
+    assert pd.Timestamp(edge * 3_600_000_000, unit="us") in set(out["hour_start"])
 
 
 @pytest.mark.slow
@@ -2445,3 +2412,43 @@ def test_streaming_token_budget_checkpoint_restart(spark, tmp_path: Path) -> Non
         for r in q_token_budget_sample(spark, SF).collect()
     }
     assert got == expected
+
+
+# --------------------------------------------------------------------------
+# The 1e-2 value grid: stream twins round like the batch twins
+# --------------------------------------------------------------------------
+
+# Products that are exact halves (0.125 * 100 == 12.5, 0.005 * 100 == 0.5,
+# 2.675 * 100 == 267.5 in doubles) and one just below a half
+# (1.005 * 100 == 100.49999999999999).
+_GRID_VALUES = [0.125, -0.125, 0.005, -0.005, 2.675, -2.675, 1.005, 0.0]
+
+
+def test_stream_twins_quantize_like_batch_round(spark) -> None:
+    """``_update_value_outliers`` and ``_update_robust`` put a value on the
+    1e-2 grid exactly as the batch twins' ``round(value * 100)`` does (half
+    away from zero); pandas ``round`` (half to even) and
+    ``floor(x + 0.5)`` (half up) each disagree on the halves above."""
+    import pandas as pd
+
+    from data_ingestion_ex8_producer_spark.operators.events import _VO_Q2
+    from data_ingestion_ex8_producer_spark.streaming.stateful import (
+        _update_robust,
+        _update_value_outliers,
+    )
+
+    want = [
+        r["vq"]
+        for r in spark.createDataFrame([(v,) for v in _GRID_VALUES], "value double")
+        .select(F.round(F.col("value") * _VO_Q2).cast("long").alias("vq"))
+        .collect()
+    ]
+    assert want[:4] == [13, -13, 1, -1]
+
+    def one(update, v):
+        st = _FakeState()
+        list(update(("k",), iter([pd.DataFrame({"value": [v]})]), st))
+        return st.get
+
+    assert [one(_update_value_outliers, v)[1] for v in _GRID_VALUES] == want
+    assert [one(_update_robust, v)[0] for v in _GRID_VALUES] == [[q] for q in want]
