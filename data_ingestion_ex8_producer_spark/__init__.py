@@ -9,8 +9,10 @@ Layout:
   session.py    SparkSession factory (AQE, Arrow, s3a wiring)
   worker_daemon.py  Python worker daemon: takes Spark's zip and jar archives
                 off the task workers' sys.path, so they import the
-                installed pyspark.  It is imported through this package
-                before that edit, so this file must not import pyspark.
+                installed pyspark; its ``drop_loaded_archives`` takes them
+                off a planner worker once pyspark and py4j are loaded.  It
+                is imported through this package before the daemon's edit,
+                so this file must not import pyspark.
   schemas.py    Avro record fields (name, order, nullability), bronze
                 StructType, raw landing header, silver projection
   functions/    names.py (header sanitize port), text.py (text/hash column

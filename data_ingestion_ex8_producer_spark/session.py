@@ -27,8 +27,12 @@ uses, from bytecode.  It falls back to Spark's path, unchanged, when
 another version than the archive's.  Like every package function a worker
 runs, the daemon must be importable by the worker: from the working
 directory, ``PYTHONPATH`` or an install.  Spark's planner workers (Python
-data-source lookup, write planning and commit) always use Spark's default
-daemon and keep the archives.
+data-source lookup, write planning and commit) start from Spark's default
+daemon, which this conf does not reach, and import pyspark from the archives.
+Importing ``sinks/datum_sink.py``, which every ``avro_datum_dir`` planner
+call unpickles, takes the archives off such a worker
+(``worker_daemon.drop_loaded_archives``), so from its second call on its
+``importlib.invalidate_caches()`` re-reads none.
 """
 
 from __future__ import annotations

@@ -49,6 +49,14 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..functions.avro_codec import binary_offsets
+from ..worker_daemon import drop_loaded_archives
+
+# Write planning and commit unpickle this module in Spark's planner workers,
+# which import pyspark from Spark's archives and re-read every cached zip
+# finder at the start of each call; taking the archives off here spares the
+# calls that follow in the same worker.  The driver and the engine's task
+# workers hold no archive, so there it changes nothing.
+drop_loaded_archives()
 
 
 class _DatumCommit(WriterCommitMessage):

@@ -661,8 +661,10 @@ def _update_seasonal(
     else:
         cells, n_pruned, max_pruned = {}, 0, -1
         c_n, c_s, c_ss, c_an = [0] * 24, [0] * 24, [0] * 24, [0] * 24
-    # At or behind the pruned frontier: dropped.
-    changed = _merge_counts(batches, _day_hod_cell, cells, max_pruned + 1)
+    # At or behind the pruned frontier: dropped.  Until a cell is pruned
+    # there is no frontier, and events before 1970 (negative keys) count.
+    horizon = max_pruned + 1 if n_pruned > 0 else None
+    changed = _merge_counts(batches, _day_hod_cell, cells, horizon)
 
     def open_counts(hod: int) -> list[int]:
         return [cells[k] for k in cells if k % _DAY_US == hod]

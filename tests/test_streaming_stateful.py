@@ -1093,6 +1093,57 @@ def test_seasonal_state_pruned_cell_cannot_be_resurrected() -> None:
     assert st.get[2][0] == n0_closed  # closed moments untouched
 
 
+@pytest.mark.parametrize("ts", ["1969-12-31 23:30", "1970-01-01 00:30"])
+def test_seasonal_fresh_state_counts_events_either_side_of_epoch(ts) -> None:
+    """Nothing is pruned on fresh state, so there is no late-data horizon: an
+    event before 1970 (a negative packed key) emits its (type, hod) row as
+    one after it does, as the batch q_seasonal_hourly_anomaly counts both."""
+    import pandas as pd
+
+    from data_ingestion_ex8_producer_spark.streaming.stateful import (
+        _update_seasonal,
+    )
+
+    t = pd.Timestamp(ts)
+    st = _FakeState()
+    out = pd.concat(
+        _update_seasonal(
+            ("click",), iter([pd.DataFrame({"ts": pd.Series([t], dtype="datetime64[ns]")})]), st
+        )
+    )
+    assert [(r.event_type, r.hod, r.n_cells) for r in out.itertuples()] == [
+        ("click", t.hour, 1)
+    ]
+    assert st.get[6] == 0 and len(st.get[0]) == 1
+
+
+def test_seasonal_state_drops_events_at_a_negative_pruned_frontier() -> None:
+    """A real frontier before 1970 still drops the late events at or behind
+    it, and keeps the ones above it."""
+    import pandas as pd
+
+    from data_ingestion_ex8_producer_spark.streaming.stateful import (
+        _SEAS_RETAIN,
+        _update_seasonal,
+    )
+
+    hours = range(-(_SEAS_RETAIN + 1), 0)
+    st = _FakeState()
+    list(_update_seasonal(("click",), iter([_mk_events({h: 1 for h in hours})]), st))
+    frontier = st.get[7]
+    assert st.get[6] == 1 and frontier < 0
+    n_closed = list(st.get[2])
+    behind = pd.concat(
+        _update_seasonal(("click",), iter([_mk_events({hours[0]: 3})]), st)
+    )
+    assert len(behind) == 0
+    assert frontier not in set(st.get[0]) and list(st.get[2]) == n_closed
+    above = pd.concat(
+        _update_seasonal(("click",), iter([_mk_events({hours[1]: 2})]), st)
+    )
+    assert len(above) == 1
+
+
 @pytest.mark.slow
 def test_streaming_ewma_checkpoint_restart(spark, tmp_path: Path) -> None:
     """Two-run checkpoint restart: the EWMA smoother's state (retained

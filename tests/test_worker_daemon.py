@@ -1,17 +1,21 @@
 """The engine's Python worker daemon: task workers import the installed
-pyspark, not Spark's archives, and the path rule keeps everything else."""
+pyspark, not Spark's archives, and the path rule keeps everything else;
+planner workers drop the archives once pyspark and py4j are imported."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
+import types
 import zipfile
+import zipimport
 from pathlib import Path
 
 import pytest
 
-from data_ingestion_ex8_producer_spark.worker_daemon import worker_path
+from data_ingestion_ex8_producer_spark.worker_daemon import drop_loaded_archives, worker_path
 
 ROOT = Path(__file__).resolve().parents[1]
 
@@ -39,6 +43,44 @@ def test_task_worker_imports_installed_pyspark_without_zip_finders(spark) -> Non
     )
     assert os.path.isfile(row.pyspark_file), row.pyspark_file
     assert row.zip_finders == 0
+
+
+def test_planner_workers_drop_spark_archives(spark, tmp_path) -> None:
+    """Spark starts planner workers from its own daemon, so they import
+    pyspark from its archives; after the datum sink's import they hold no
+    zip finder, and pyspark stays the module they loaded first."""
+    from tests.planner_probe import ProbeDatumDirDataSource
+
+    spark.dataSource.register(ProbeDatumDirDataSource)
+    report = tmp_path / "report.jsonl"
+    frame = spark.createDataFrame([(b"x",)], "value binary")
+    for _ in range(2):
+        (frame.write.format(ProbeDatumDirDataSource.name()).mode("append")
+         .option("path", str(tmp_path / "batch")).option("report", str(report)).save())
+    src = tmp_path / "src"
+    for i in range(2):
+        frame.coalesce(1).write.parquet(str(src / f"f{i}"))
+    query = (
+        spark.readStream.schema("value binary")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+        .writeStream.format(ProbeDatumDirDataSource.name())
+        .option("path", str(tmp_path / "stream")).option("report", str(report))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination(120)
+    query.stop()
+
+    commits = [json.loads(line) for line in report.read_text().splitlines()]
+    assert [c["kind"] for c in commits] == ["batch", "batch", "stream", "stream"]
+    for first, second in (commits[:2], commits[2:]):
+        assert second["zip_finders"] == 0, commits
+        assert first["pyspark_file"] == second["pyspark_file"], commits
+        for c in (first, second):
+            assert c["pyspark_file"] == c["loaded_from"], commits
 
 
 def _zip(path: Path, files: dict[str, str]) -> str:
@@ -119,3 +161,45 @@ def test_package_import_leaves_pyspark_unimported() -> None:
     )
     assert done.returncode == 0, done.stderr
     assert done.stdout.strip() == "[]"
+
+
+@pytest.fixture
+def planner_worker(spark_layout, monkeypatch):
+    """The layout as a planner worker sees it: Spark's archives on
+    ``sys.path``, a zip finder for each archive and for a package directory
+    inside it, the user zip's finders, and pyspark and py4j imported."""
+    home, _, path = spark_layout
+    monkeypatch.setattr(sys, "path", list(path))
+    monkeypatch.setenv("SPARK_HOME", str(home))
+    for package in ("pyspark", "py4j"):
+        monkeypatch.setitem(sys.modules, package, types.ModuleType(package))
+    spark_keys = [
+        path[1], os.path.join(path[1], "pyspark"), path[2], os.path.join(path[2], "py4j"), path[3]
+    ]
+    user_keys = [path[5], os.path.join(path[5], "userlib")]
+    for key in spark_keys + user_keys:
+        sys.path_importer_cache[key] = zipimport.zipimporter(key)
+    return path, spark_keys
+
+
+def test_drop_loaded_archives_drops_spark_archives_and_their_finders(planner_worker) -> None:
+    path, spark_keys = planner_worker
+    cache = dict(sys.path_importer_cache)
+    drop_loaded_archives()
+    assert sys.path == [path[0], path[4], path[5], path[6]]
+    assert sys.path_importer_cache == {k: v for k, v in cache.items() if k not in spark_keys}
+
+
+@pytest.mark.parametrize("unset", ["SPARK_HOME", "pyspark", "py4j"])
+def test_drop_loaded_archives_waits_for_spark_home_and_imports(
+    planner_worker, monkeypatch, unset
+) -> None:
+    if unset == "SPARK_HOME":
+        monkeypatch.delenv(unset)
+    else:
+        monkeypatch.delitem(sys.modules, unset)
+    path, _ = planner_worker
+    cache = dict(sys.path_importer_cache)
+    drop_loaded_archives()
+    assert sys.path == path
+    assert sys.path_importer_cache == cache
