@@ -15,8 +15,10 @@ Layout:
                 so this file must not import pyspark.
   schemas.py    Avro record fields (name, order, nullability), bronze
                 StructType, raw landing header, silver projection
-  functions/    names.py (header sanitize port), text.py (text/hash column
-                helpers with DuckDB twins), avro_codec.py (Avro datum codec)
+  functions/    names.py (header sanitize port), text.py (tokens, positional
+                word n-grams, k-shingles and hashes, each with its DuckDB
+                twin: ngrams/sql_ngrams, ...), avro_codec.py (Avro datum
+                codec)
   sources/      batch + streaming readers (csv, parquet star schema, kafka)
   sinks/        encode.py (Avro value frame) + datum_sink.py (avro_datum_dir)
   operators/    the analytics query surface (driver-scored via plans.registry)

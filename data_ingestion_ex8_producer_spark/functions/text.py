@@ -29,6 +29,27 @@ def sql_tokens(expr: str = "text") -> str:
     return f"regexp_split_to_array(trim({expr}), '\\s+')"
 
 
+def ngrams(ts: str, n: int) -> Column:
+    """Positional word n-grams of the token-array column ``ts``: element i
+    is tokens i..i+n-1 joined by one space, repeats kept, empty when ``ts``
+    has fewer than n tokens, NULL when ``ts`` is NULL.  Pass a projected
+    column, not an inline ``tokens()``: the lambda reads ``ts`` n times per
+    element (see ``with_shingles`` on what re-splitting costs)."""
+    arr = F.col(ts)
+    return F.transform(
+        F.slice(arr, 1, F.greatest(F.size(arr) - (n - 1), F.lit(0))),
+        lambda x, i: F.concat(
+            x, *[c for j in range(2, n + 1) for c in (F.lit(" "), F.element_at(arr, i + j))]
+        ),
+    )
+
+
+def sql_ngrams(expr: str, n: int) -> str:
+    """DuckDB twin of ``ngrams`` over the LIST ``expr`` (1-based indexing)."""
+    parts = " || ' ' || ".join(f"{expr}[i + {j}]" for j in range(n))
+    return f"list_transform(range(1, len({expr}) - {n - 2}), i -> {parts})"
+
+
 # ---- portable 48-bit hash -------------------------------------------------
 
 def hash48(col: Column) -> Column:
@@ -123,9 +144,4 @@ def with_shingles(df, k: int):
 
 def sql_shingle_list(k: int) -> str:
     """DuckDB: distinct word k-grams of ``text`` as a LIST (1-based indexing)."""
-    toks = sql_tokens()
-    parts = " || ' ' || ".join(f"{toks}[i + {j}]" for j in range(k))
-    return (
-        f"list_distinct(list_transform(range(1, len({toks}) - {k - 2}), "
-        f"i -> {parts}))"
-    )
+    return f"list_distinct({sql_ngrams(sql_tokens(), k)})"

@@ -155,6 +155,14 @@ def davg(col: str | Column, alias: str) -> Column:
     return (F.sum(dec4(col)).cast("double") / F.count(col if isinstance(col, str) else col)).alias(alias)
 
 
+def ilog2(x: Column) -> Column:
+    """floor(log2(x)) of a positive integer as BIGINT, in integer arithmetic:
+    the length of x's binary string minus one.  No floating log, so exact
+    powers of two land in the same bucket on both engines (FLOAT_QUALS.md
+    Class A)."""
+    return (F.length(F.bin(x)) - 1).cast("long")
+
+
 def revenue_dec() -> Column:
     """l_extendedprice * (1 - l_discount) as exact decimal.
 
@@ -187,6 +195,10 @@ def sql_dsum(expr: str, alias: str) -> str:
 
 def sql_davg(expr: str, alias: str) -> str:
     return f"(CAST(SUM({sql_dec4(expr)}) AS DOUBLE) / COUNT({expr})) AS {alias}"
+
+
+def sql_ilog2(expr: str) -> str:
+    return f"CAST(length(bin({expr})) - 1 AS BIGINT)"
 
 
 SQL_REVENUE_DEC = (

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import hash48, sql_hash48, sql_tokens
 from ..plans.registry import register
-from ._util import t
+from ._util import ilog2, sql_ilog2, t
 from .dedup import content_hashed, keeper_of, sql_keeper_ctes
 from .similarity import _DIM as _EMB_DIM  # one source of truth for vector width
 
@@ -1770,10 +1770,8 @@ _DSIR_QUOTA_DEN = 10      # select the top 1/10th by importance weight
     ),
     bits AS (
         SELECT r.term,
-               CAST(length(bin(t.total_r // r.cnt_r)) - 1 AS BIGINT)
-                 AS bits_r,
-               CAST(length(bin((tt.total_t + t.vocab)
-                               // (COALESCE(g.cnt_t, 0) + 1))) - 1 AS BIGINT)
+               {sql_ilog2("t.total_r // r.cnt_r")} AS bits_r,
+               {sql_ilog2("(tt.total_t + t.vocab) // (COALESCE(g.cnt_t, 0) + 1)")}
                  AS bits_t
         FROM raw r LEFT JOIN tgt g ON g.term = r.term
         CROSS JOIN tot t CROSS JOIN ttot tt
@@ -1807,7 +1805,7 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     high-quality reference domain without training a classifier.
 
     Exactness: both models use the repo's INTEGER log2
-    (length(bin(n)) - 1 over integer quotients, the q_doc_surprisal
+    (``ilog2``: length(bin(n)) - 1 over integer quotients, the q_doc_surprisal
     doctrine) — bits_raw = ilog2(total_raw/cnt) and bits_target =
     ilog2((total_target + V)/(cnt_target + 1)) (add-one smoothing over the
     raw vocabulary, so unseen-in-target terms get a finite penalty).  The
@@ -1862,21 +1860,10 @@ def q_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(ttot))
         .select(
             "term",
-            (F.length(F.bin(F.expr("total_r div cnt_r"))) - 1)
-            .cast("long")
-            .alias("bits_r"),
-            (
-                F.length(
-                    F.bin(
-                        F.expr(
-                            "(total_t + vocab) div (coalesce(cnt_t, 0) + 1)"
-                        )
-                    )
-                )
-                - 1
-            )
-            .cast("long")
-            .alias("bits_t"),
+            ilog2(F.expr("total_r div cnt_r")).alias("bits_r"),
+            ilog2(
+                F.expr("(total_t + vocab) div (coalesce(cnt_t, 0) + 1)")
+            ).alias("bits_t"),
         )
     )
     per_doc = persist_tracked(

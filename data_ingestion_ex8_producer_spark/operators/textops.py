@@ -9,12 +9,25 @@ whole-stage codegen, and each operator has an exact DuckDB oracle twin.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import hash48, sql_hash48, sql_shingle_list, sql_tokens, tokens
-from ..plans.registry import register
-from ._util import persist_tracked, spread, t
+from ..functions.text import (
+    hash48,
+    mix48,
+    ngrams,
+    sql_hash48,
+    sql_mix48,
+    sql_ngrams,
+    sql_shingle_list,
+    sql_tokens,
+    tokens,
+    with_shingles,
+)
+from ..plans.registry import _REGISTRY, register
+from ._util import ilog2, persist_tracked, spread, sql_ilog2, t
 
 # --------------------------------------------------------------------------
 # Token statistics
@@ -231,8 +244,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style document fingerprint: minimum 48-bit hash over word
     5-gram shingles (content-defined, robust to reordering of far-apart
     sections; NULL for documents shorter than 5 tokens)."""
-    from ..functions.text import with_shingles
-
     docs = with_shingles(t(spark, sf_dir, "documents"), 5)
     hashes = F.transform(F.col("shingle_set"), lambda s: hash48(s))
     return docs.select(
@@ -391,8 +402,6 @@ def text_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = positions.select(
         "doc_id", "p", hash48(F.substring(F.col("text"), F.col("p"), _WINNOW_K)).alias("hv")
     )
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("doc_id")
         .orderBy("p")
@@ -469,6 +478,27 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _doc_gram_counts(grams: DataFrame, gram: str, *aggs: Column) -> DataFrame:
+    """Per-document gram counts: ``grams`` holds one (doc_id, ``gram``) row
+    per occurrence; each (doc_id, gram) pair is counted into ``cnt``, and
+    ``aggs`` over ``cnt`` roll the counts up to one row per doc_id."""
+    return (
+        grams.groupBy("doc_id", gram)
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .groupBy("doc_id")
+        .agg(*aggs)
+    )
+
+
+def _sql_doc_gram_counts(grams: str, gram: str, aggs: str) -> str:
+    """DuckDB twin of ``_doc_gram_counts``: a SELECT over the relation
+    ``grams``, with ``aggs`` the comma-separated aggregates over ``cnt``."""
+    return f"""SELECT doc_id,{aggs}
+    FROM (SELECT doc_id, {gram}, CAST(COUNT(*) AS BIGINT) AS cnt
+          FROM {grams} GROUP BY doc_id, {gram})
+    GROUP BY doc_id"""
+
+
 @register(
     "text_repetition",
     oracle=f"""
@@ -476,22 +506,13 @@ def text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, {sql_tokens()} AS ts FROM documents
     ),
     bg AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(ts)),
-                                     i -> ts[i] || ' ' || ts[i+1])) AS bigram
-        FROM toks
-    ),
-    counts AS (
-        SELECT doc_id, bigram, count(*) AS c
-        FROM bg GROUP BY doc_id, bigram
+        SELECT doc_id, unnest({sql_ngrams("ts", 2)}) AS bigram FROM toks
     )
-    SELECT doc_id,
-           CAST(sum(c) AS BIGINT) AS n_bigrams,
-           CAST(max(c) AS DOUBLE) / sum(c) AS top_bigram_frac,
-           CAST(sum(CASE WHEN c > 1 THEN c ELSE 0 END) AS DOUBLE) / sum(c)
-             AS dup_bigram_frac
-    FROM counts
-    GROUP BY doc_id
+    {_sql_doc_gram_counts("bg", "bigram", '''
+           CAST(sum(cnt) AS BIGINT) AS n_bigrams,
+           CAST(max(cnt) AS DOUBLE) / sum(cnt) AS top_bigram_frac,
+           CAST(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS DOUBLE)
+             / sum(cnt) AS dup_bigram_frac''')}
     """,
 )
 def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,31 +522,23 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     High values flag boilerplate / keyword-stuffing documents that survive
     naive length filters.
 
-    Plan shape: bigrams are built row-side (sequence over token positions —
-    no self-join), then ONE shuffle on (doc_id, bigram) for the count and a
-    map-side-combinable rollup to doc level.  Keys are (doc, bigram) so
-    cardinality grows with corpus size, not corpus size squared; no key is
-    hotter than the longest single document — safe at 100 TB."""
-    ts = tokens()
-    docs = t(spark, sf_dir, "documents").select("doc_id", ts.alias("ts"))
-    bigrams = F.transform(
-        F.sequence(F.lit(1), F.size("ts") - 1),
-        lambda i: F.concat_ws(
-            " ", F.element_at(F.col("ts"), i), F.element_at(F.col("ts"), i + 1)
-        ),
-    )
-    counts = (
-        docs.filter(F.size("ts") >= 2)
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
-        .groupBy("doc_id", "bigram")
-        .count()
-    )
-    return counts.groupBy("doc_id").agg(
-        F.sum("count").cast("long").alias("n_bigrams"),
-        (F.max("count").cast("double") / F.sum("count")).alias("top_bigram_frac"),
+    Plan shape: bigrams are built row-side (``ngrams``: one slice of the
+    token array per row — no self-join), then the per-document gram count
+    (``_doc_gram_counts``): ONE shuffle on (doc_id, bigram) for the count
+    and a map-side-combinable rollup to doc level.  Keys are (doc, bigram)
+    so cardinality grows with corpus size, not corpus size squared; no key
+    is hotter than the longest single document — safe at 100 TB.  Docs
+    with fewer than two tokens have no bigram and no output row."""
+    docs = t(spark, sf_dir, "documents").select("doc_id", tokens().alias("ts"))
+    bg = docs.select("doc_id", F.explode(ngrams("ts", 2)).alias("bigram"))
+    return _doc_gram_counts(
+        bg,
+        "bigram",
+        F.sum("cnt").cast("long").alias("n_bigrams"),
+        (F.max("cnt").cast("double") / F.sum("cnt")).alias("top_bigram_frac"),
         (
-            F.sum(F.when(F.col("count") > 1, F.col("count")).otherwise(0)).cast("double")
-            / F.sum("count")
+            F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0)).cast("double")
+            / F.sum("cnt")
         ).alias("dup_bigram_frac"),
     )
 
@@ -559,8 +572,6 @@ def q_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heap + 25-row driver merge), never
     a full sort.  Deterministic tie-break on the bigram string keeps the
     cut exact on both engines."""
-    from ..functions.text import with_shingles
-
     sh = with_shingles(
         t(spark, sf_dir, "documents").select("doc_id", "text"), 2
     ).select("doc_id", F.explode("shingle_set").alias("bigram"))
@@ -610,8 +621,6 @@ def q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     only for the real shape (a true fixed eval table swapped in for the
     modulo slice).  This is the decontamination pass every pretraining
     pipeline runs before a data release."""
-    from ..functions.text import with_shingles
-
     sh = with_shingles(
         t(spark, sf_dir, "documents").select("doc_id", "text"), _CONTAM_K
     ).select("doc_id", F.explode("shingle_set").alias("sh"))
@@ -773,16 +782,12 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc rollups are two more combinable aggregates and a join on
     doc_id.  Everything is linear in corpus size with no skew term, which
     is why novelty scoring scales where all-pairs similarity cannot."""
-    from ..functions.text import with_shingles
-
-    from ._util import persist_tracked
-
-    # r11-opt: the shingle pipeline (regex tokenize + k slices + distinct)
-    # fed two unpersisted subtrees, so the scan+shingle work ran twice; and
-    # the per-doc total is simply size(shingle_set) — a narrow projection —
-    # not a second corpus-wide groupBy.  One persisted doc-level relation,
-    # one shuffle total (the first-occurrence MIN).  Docs with zero shingles
-    # are filtered exactly as the oracle's explode drops them.
+    # The shingle pipeline (regex tokenize + k slices + distinct) feeds two
+    # subtrees, so it is persisted once; the per-doc total is
+    # size(shingle_set), a narrow projection rather than a corpus-wide
+    # groupBy, which leaves one shuffle (the first-occurrence MIN).  Docs
+    # with zero shingles are filtered exactly as the oracle's explode drops
+    # them.
     docs_sh = persist_tracked(
         with_shingles(
             t(spark, sf_dir, "documents").select("doc_id", "text"), _NOVELTY_K
@@ -822,7 +827,7 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM documents
     ),
     b AS (
-        SELECT lang, CAST(length(bin(n_tokens)) - 1 AS BIGINT) AS bucket
+        SELECT lang, {sql_ilog2("n_tokens")} AS bucket
         FROM n WHERE n_tokens >= 1
     )
     SELECT lang, bucket,
@@ -838,15 +843,15 @@ def q_doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind min/max-length filter thresholds and packing efficiency
     estimates for fixed-context training.
 
-    The bucket index is length(bin(n)) - 1 == floor(log2(n)) computed in
-    INTEGER arithmetic on both engines — no floating log whose rounding at
-    exact powers of two could disagree between engines.
+    The bucket index is ``ilog2`` (length(bin(n)) - 1 == floor(log2(n)))
+    computed in INTEGER arithmetic on both engines — no floating log whose
+    rounding at exact powers of two could disagree between engines.
 
     Scale shape: one narrow pass (tokenize is fused into the scan), then a
     map-side-combinable groupBy over |langs| x ~12 buckets — metadata-sized
     shuffle at any corpus size, same family as q_corpus_token_budget."""
     nt = F.size(tokens()).cast("long")
-    bucket = (F.length(F.bin(F.col("n_tokens"))) - 1).cast("long")
+    bucket = ilog2(F.col("n_tokens"))
     return (
         t(spark, sf_dir, "documents")
         .select("lang", nt.alias("n_tokens"))
@@ -907,8 +912,6 @@ def q_cross_lingual_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     is — the cap that dedup needs a DF filter for comes free here.  The
     pair aggregate and the totals join are metadata-sized (|langs|^2
     rows)."""
-    from ..functions.text import with_shingles
-
     sh = (
         with_shingles(
             t(spark, sf_dir, "documents").select("lang", "text"), _XLING_K
@@ -1076,9 +1079,6 @@ def q_doc_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
     row).  The residual ~6.9x-per-10x slope is the df annotate-join
     shuffle growing with the corpus, the same sub-linear
     shuffle-dominated shape as q_doc_ngram_novelty."""
-    from ..functions.text import with_shingles
-    from ._util import persist_tracked
-
     sh = persist_tracked(
         with_shingles(
             t(spark, sf_dir, "documents").select("doc_id", "text"), _NOVELTY_K
@@ -1230,10 +1230,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a TakeOrderedAndProject (per-partition heap of N, no global sort,
     no single-partition window over the vocab — the q_curriculum_order
     lesson applied); the result is 4 rows of metadata."""
-    from functools import reduce
-
-    from ._util import persist_tracked
-
     ts = tokens()
     wf = persist_tracked(
         t(spark, sf_dir, "documents")
@@ -1596,8 +1592,6 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable.  Linear in corpus size, uniform 48-bit shuffle keys.  The
     span relation feeds both the df aggregate and the annotate join, so
     it is persisted through the persist_tracked seam."""
-    from ._util import persist_tracked
-
     docs = (
         t(spark, sf_dir, "documents")
         .select("doc_id", tokens().alias("ts"))
@@ -1643,6 +1637,56 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SURPRISAL_LOW_BITS = 7  # mean bits/token below this flags low-info docs
 
 
+def _doc_bits(
+    grams: DataFrame, bits: DataFrame, key: str, n: str, low_bits: int, flag: str
+) -> DataFrame:
+    """Per-document rollup of a gram-surprisal model: each (doc_id, ``key``)
+    occurrence in ``grams`` joins its (``key``, bits) row in ``bits``; per
+    doc_id, ``n`` counts the occurrences, sum_bits/max_bits/mean_bits
+    summarize their bits, and ``flag`` is 1 when the mean is below
+    ``low_bits`` (the integer comparison sum_bits < low_bits * n)."""
+    return (
+        grams.join(bits, key)
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias(n),
+            F.sum("bits").cast("long").alias("sum_bits"),
+            F.max("bits").cast("long").alias("max_bits"),
+        )
+        .select(
+            "doc_id",
+            n,
+            "sum_bits",
+            "max_bits",
+            (F.col("sum_bits").cast("double") / F.col(n)).alias("mean_bits"),
+            F.when(F.col("sum_bits") < low_bits * F.col(n), 1)
+            .otherwise(0)
+            .cast("long")
+            .alias(flag),
+        )
+    )
+
+
+def _sql_doc_bits(
+    grams: str, bits: str, key: str, n: str, low_bits: int, flag: str
+) -> str:
+    """DuckDB twin of ``_doc_bits``: a ``per_doc`` CTE and the final SELECT,
+    to close a WITH list that defines ``grams`` and ``bits``."""
+    return f"""per_doc AS (
+        SELECT g.doc_id,
+               CAST(COUNT(*) AS BIGINT) AS {n},
+               CAST(SUM(b.bits) AS BIGINT) AS sum_bits,
+               CAST(MAX(b.bits) AS BIGINT) AS max_bits
+        FROM {grams} g JOIN {bits} b ON b.{key} = g.{key}
+        GROUP BY g.doc_id
+    )
+    SELECT doc_id, {n}, sum_bits, max_bits,
+           CAST(sum_bits AS DOUBLE) / {n} AS mean_bits,
+           CAST(CASE WHEN sum_bits < {low_bits} * {n}
+                     THEN 1 ELSE 0 END AS BIGINT) AS {flag}
+    FROM per_doc"""
+
+
 @register(
     "q_doc_surprisal",
     oracle=f"""
@@ -1656,23 +1700,11 @@ _SURPRISAL_LOW_BITS = 7  # mean bits/token below this flags low-info docs
         SELECT CAST(COUNT(*) AS BIGINT) AS total FROM toks
     ),
     tsurp AS (
-        SELECT term,
-               CAST(length(bin(total // cnt)) - 1 AS BIGINT) AS bits
+        SELECT term, {sql_ilog2("total // cnt")} AS bits
         FROM cnts CROSS JOIN tot
     ),
-    per_doc AS (
-        SELECT t.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(s.bits) AS BIGINT) AS sum_bits,
-               CAST(MAX(s.bits) AS BIGINT) AS max_bits
-        FROM toks t JOIN tsurp s ON s.term = t.term
-        GROUP BY t.doc_id
-    )
-    SELECT doc_id, n_tokens, sum_bits, max_bits,
-           CAST(sum_bits AS DOUBLE) / n_tokens AS mean_bits,
-           CAST(CASE WHEN sum_bits < {_SURPRISAL_LOW_BITS} * n_tokens
-                     THEN 1 ELSE 0 END AS BIGINT) AS flag_low_info
-    FROM per_doc
+    {_sql_doc_bits("toks", "tsurp", "term", "n_tokens",
+                   _SURPRISAL_LOW_BITS, "flag_low_info")}
     """,
 )
 def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1681,8 +1713,8 @@ def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     of corpus-common tokens (boilerplate, templates, navigation chrome)
     scores low; one with rare vocabulary scores high.  Each token's
     surprisal is floor(log2(total_tokens / its corpus count)) — the
-    repo's INTEGER log2 (length(bin(n)) - 1 over the integer quotient,
-    the q_doc_length_histogram trick), so the whole spec is exact BIGINT
+    repo's INTEGER log2 (``ilog2``: length(bin(n)) - 1 over the integer
+    quotient), so the whole spec is exact BIGINT
     arithmetic end-to-end: no floating ln/log whose last-ulp rounding
     could differ cross-engine (the log-free doctrine q_bm25_mlt_topk
     documents), and the low-info flag is the integer comparison
@@ -1700,52 +1732,28 @@ def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the token-count relation is a map-side-combinable
     groupBy over the exploded tokens; per-term surprisal is computed ONCE
     on that metadata-sized relation (distinct vocabulary, not corpus
-    volume) with the 1-row total broadcast; the per-doc rollup is one
-    annotate join shuffled on the term key.  The vocabulary relation is
-    Zipf-bounded, so the join's build side stays small at any corpus
-    size."""
-    from ._util import persist_tracked
-
+    volume) with the 1-row total broadcast; the per-doc rollup
+    (``_doc_bits``, shared with q_doc_bigram_lm) is one annotate join
+    shuffled on the term key.  The vocabulary relation is Zipf-bounded, so
+    the join's build side stays small at any corpus size."""
     docs = t(spark, sf_dir, "documents").select(
         "doc_id", F.explode(tokens()).alias("term")
     )
     docs = spread(docs, spark, "doc_id")
-    # r11-opt: the vocabulary relation feeds the total AND the per-term
-    # surprisal, and the total is just SUM(cnt) over it — the previous
-    # corpus-wide count re-ran the token explode a third time.
+    # The vocabulary relation feeds the total AND the per-term surprisal,
+    # and the total is SUM(cnt) over it, so the token explode runs once
+    # for both.
     cnts = persist_tracked(
         docs.groupBy("term").agg(
             F.count(F.lit(1)).cast("long").alias("cnt")
         )
     )
     tot = cnts.agg(F.sum("cnt").cast("long").alias("total"))
-    bits = (
-        F.length(F.bin(F.expr("total div cnt"))) - 1
-    ).cast("long")
-    tsurp = cnts.crossJoin(F.broadcast(tot)).select("term", bits.alias("bits"))
-    return (
-        docs.join(tsurp, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("bits").cast("long").alias("sum_bits"),
-            F.max("bits").cast("long").alias("max_bits"),
-        )
-        .select(
-            "doc_id",
-            "n_tokens",
-            "sum_bits",
-            "max_bits",
-            (F.col("sum_bits").cast("double") / F.col("n_tokens")).alias(
-                "mean_bits"
-            ),
-            F.when(
-                F.col("sum_bits") < _SURPRISAL_LOW_BITS * F.col("n_tokens"), 1
-            )
-            .otherwise(0)
-            .cast("long")
-            .alias("flag_low_info"),
-        )
+    tsurp = cnts.crossJoin(F.broadcast(tot)).select(
+        "term", ilog2(F.expr("total div cnt")).alias("bits")
+    )
+    return _doc_bits(
+        docs, tsurp, "term", "n_tokens", _SURPRISAL_LOW_BITS, "flag_low_info"
     )
 
 
@@ -1756,42 +1764,49 @@ def q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BIGRAM_LOW_BITS = 3  # mean conditional bits/bigram below this = templated
 
 
-@register(
-    "q_doc_bigram_lm",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, {sql_tokens()} AS ts FROM documents),
+def _bigram_counts(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The corpus bigram relation ``bg`` (doc_id, bigram), one row per
+    occurrence and spread on doc_id, and the persisted bigram-count relation
+    ``c12`` (bigram, cnt12) over it.  Each user reads c12 more than once (a
+    marginal rollup and a join), so it is persisted once here; unpersisted,
+    every read would re-run the bigram explode."""
+    docs = t(spark, sf_dir, "documents").select("doc_id", tokens().alias("ts"))
+    bg = spread(
+        docs.select("doc_id", F.explode(ngrams("ts", 2)).alias("bigram")),
+        spark,
+        "doc_id",
+    )
+    c12 = persist_tracked(
+        bg.groupBy("bigram").agg(F.count(F.lit(1)).cast("long").alias("cnt12"))
+    )
+    return bg, c12
+
+
+# DuckDB twin of ``_bigram_counts``: the toks/bg/c12 head of a WITH list.
+_BIGRAM_COUNTS_SQL = f"""toks AS (SELECT doc_id, {sql_tokens()} AS ts FROM documents),
     bg AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(ts)),
-                                     i -> ts[i] || ' ' || ts[i+1])) AS bigram
-        FROM toks
+        SELECT doc_id, unnest({sql_ngrams("ts", 2)}) AS bigram FROM toks
     ),
     c12 AS (
         SELECT bigram, CAST(COUNT(*) AS BIGINT) AS cnt12 FROM bg GROUP BY bigram
-    ),
+    )"""
+
+
+@register(
+    "q_doc_bigram_lm",
+    oracle=f"""
+    WITH {_BIGRAM_COUNTS_SQL},
     ctx AS (
         SELECT split_part(bigram, ' ', 1) AS w1,
                CAST(SUM(cnt12) AS BIGINT) AS cnt_ctx
         FROM c12 GROUP BY 1
     ),
     tb AS (
-        SELECT c.bigram,
-               CAST(length(bin(x.cnt_ctx // c.cnt12)) - 1 AS BIGINT) AS bits
+        SELECT c.bigram, {sql_ilog2("x.cnt_ctx // c.cnt12")} AS bits
         FROM c12 c JOIN ctx x ON x.w1 = split_part(c.bigram, ' ', 1)
     ),
-    per_doc AS (
-        SELECT b.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-               CAST(SUM(t.bits) AS BIGINT) AS sum_bits,
-               CAST(MAX(t.bits) AS BIGINT) AS max_bits
-        FROM bg b JOIN tb t ON t.bigram = b.bigram
-        GROUP BY b.doc_id
-    )
-    SELECT doc_id, n_bigrams, sum_bits, max_bits,
-           CAST(sum_bits AS DOUBLE) / n_bigrams AS mean_bits,
-           CAST(CASE WHEN sum_bits < {_BIGRAM_LOW_BITS} * n_bigrams
-                     THEN 1 ELSE 0 END AS BIGINT) AS flag_templated
-    FROM per_doc
+    {_sql_doc_bits("bg", "tb", "bigram", "n_bigrams",
+                   _BIGRAM_LOW_BITS, "flag_templated")}
     """,
 )
 def q_doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1804,7 +1819,7 @@ def q_doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each bigram's surprisal is floor(log2(cnt(w1 as context) /
     cnt(w1 w2))) — an MLE conditional -log2 P(w2|w1) computed with the
-    repo's INTEGER log2 (length(bin(n)) - 1 over the integer quotient), so
+    repo's INTEGER log2 (``ilog2`` over the integer quotient), so
     the whole spec is exact BIGINT arithmetic end-to-end; the context count
     is the bigram relation grouped by its first token, so numerator and
     denominator come from ONE relation and the quotient is always >= 1.
@@ -1812,71 +1827,24 @@ def q_doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     with fewer than two tokens have no bigram and no output row (same
     contract on both engines).
 
-    Scale shape: the bigram-count relation is a map-side-combinable
-    groupBy over exploded bigrams (Zipf-bounded: distinct observed bigrams
-    grow sub-linearly in corpus size); the context relation is a second
-    metadata-sized groupBy OF THAT relation (vocabulary-sized, not corpus-
-    sized); per-bigram bits are computed once on the joined metadata; the
-    per-doc rollup is one annotate join shuffled on the bigram key.  No
+    Scale shape: the bigram-count relation (``_bigram_counts``, shared with
+    q_collocations) is a map-side-combinable groupBy over exploded bigrams
+    (Zipf-bounded: distinct observed bigrams grow sub-linearly in corpus
+    size); the context relation is a second metadata-sized groupBy OF THAT
+    relation (vocabulary-sized, not corpus-sized); per-bigram bits are
+    computed once on the joined metadata; the per-doc rollup
+    (``_doc_bits``) is one annotate join shuffled on the bigram key.  No
     pairwise fan-out anywhere — the same annotate-join discipline as
     q_doc_surprisal, one model order up."""
-    docs = t(spark, sf_dir, "documents").select("doc_id", tokens().alias("ts"))
-    bg = spread(
-        docs.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(slice(ts, 1, size(ts) - 1),"
-                    " (x, i) -> concat(x, ' ', element_at(ts, i + 2)))"
-                )
-            ).alias("bigram"),
-        ),
-        spark,
-        "doc_id",
-    )
-    from ._util import persist_tracked
-
-    # r11-opt: the bigram-count relation feeds the context rollup and the
-    # per-bigram bits join; unpersisted it re-ran the bigram explode twice.
-    c12 = persist_tracked(
-        bg.groupBy("bigram").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt12")
-        )
-    )
+    bg, c12 = _bigram_counts(spark, sf_dir)
     ctx = c12.groupBy(
         F.substring_index("bigram", " ", 1).alias("w1")
     ).agg(F.sum("cnt12").cast("long").alias("cnt_ctx"))
     tb = c12.join(
         ctx, F.substring_index(c12.bigram, " ", 1) == ctx.w1
-    ).select(
-        "bigram",
-        (F.length(F.bin(F.expr("cnt_ctx div cnt12"))) - 1)
-        .cast("long")
-        .alias("bits"),
-    )
-    return (
-        bg.join(tb, "bigram")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-            F.sum("bits").cast("long").alias("sum_bits"),
-            F.max("bits").cast("long").alias("max_bits"),
-        )
-        .select(
-            "doc_id",
-            "n_bigrams",
-            "sum_bits",
-            "max_bits",
-            (F.col("sum_bits").cast("double") / F.col("n_bigrams")).alias(
-                "mean_bits"
-            ),
-            F.when(
-                F.col("sum_bits") < _BIGRAM_LOW_BITS * F.col("n_bigrams"), 1
-            )
-            .otherwise(0)
-            .cast("long")
-            .alias("flag_templated"),
-        )
+    ).select("bigram", ilog2(F.expr("cnt_ctx div cnt12")).alias("bits"))
+    return _doc_bits(
+        bg, tb, "bigram", "n_bigrams", _BIGRAM_LOW_BITS, "flag_templated"
     )
 
 
@@ -1946,16 +1914,7 @@ _COLLOC_MIN_COUNT = 5  # PMI is unstable on rare pairs; the standard floor
 @register(
     "q_collocations",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, {sql_tokens()} AS ts FROM documents),
-    bg AS (
-        SELECT unnest(list_transform(range(1, len(ts)),
-                                     i -> ts[i] || ' ' || ts[i+1])) AS bigram
-        FROM toks
-    ),
-    c12 AS (
-        SELECT bigram, CAST(COUNT(*) AS BIGINT) AS cnt12
-        FROM bg GROUP BY bigram
-    ),
+    WITH {_BIGRAM_COUNTS_SQL},
     uni1 AS (
         SELECT split_part(bigram, ' ', 1) AS w, CAST(SUM(cnt12) AS BIGINT) AS cnt
         FROM c12 GROUP BY 1
@@ -1967,8 +1926,7 @@ _COLLOC_MIN_COUNT = 5  # PMI is unstable on rare pairs; the standard floor
     tot AS (SELECT CAST(SUM(cnt12) AS BIGINT) AS n FROM c12),
     pmi AS (
         SELECT c.bigram, c.cnt12,
-               CAST(length(bin((c.cnt12 * t.n) // (u1.cnt * u2.cnt))) - 1
-                    AS BIGINT) AS pmi_bits
+               {sql_ilog2("(c.cnt12 * t.n) // (u1.cnt * u2.cnt)")} AS pmi_bits
         FROM c12 c
         JOIN uni1 u1 ON u1.w = split_part(c.bigram, ' ', 1)
         JOIN uni2 u2 ON u2.w = split_part(c.bigram, ' ', 2)
@@ -2006,32 +1964,12 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt12 * N >= cnt1 * cnt2, so nothing floats anywhere (Class A).
 
     Scale shape: one combinable groupBy over exploded bigrams (the
-    Zipf-bounded distinct-bigram relation), two vocabulary-sized groupBys
+    Zipf-bounded distinct-bigram relation of ``_bigram_counts``, shared
+    with q_doc_bigram_lm), two vocabulary-sized groupBys
     OF that relation, the 1-row total broadcast, and two metadata joins on
     the unigram key.  Output is the filtered collocation lexicon —
     vocabulary-scale, never corpus-scale."""
-    docs = t(spark, sf_dir, "documents").select("doc_id", tokens().alias("ts"))
-    bg = spread(
-        docs.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(ts, 1, size(ts) - 1),"
-                    " (x, i) -> concat(x, ' ', element_at(ts, i + 2)))"
-                )
-            ).alias("bigram")
-        ),
-        spark,
-    )
-    from ._util import persist_tracked
-
-    # r11-opt: the bigram-count relation feeds the context rollup and the
-    # per-bigram bits join; unpersisted it re-ran the bigram explode twice.
-    c12 = persist_tracked(
-        bg.groupBy("bigram").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt12")
-        )
-    )
-    c12 = persist_tracked(c12)
+    _, c12 = _bigram_counts(spark, sf_dir)
     uni = c12.groupBy(
         F.substring_index("bigram", " ", 1).alias("w")
     ).agg(F.sum("cnt12").cast("long").alias("cnt"))
@@ -2045,7 +1983,7 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = c12.agg(F.sum("cnt12").cast("long").alias("n"))
     u1 = uni.select(F.col("w").alias("w1"), F.col("cnt").alias("cnt1"))
     u2 = uni2.select(F.col("w").alias("w2"), F.col("cnt").alias("cnt2"))
-    joined = (
+    return (
         c12.filter(F.col("cnt12") >= _COLLOC_MIN_COUNT)
         .withColumn("w1", F.substring_index("bigram", " ", 1))
         .withColumn("w2", F.substring_index("bigram", " ", -1))
@@ -2056,17 +1994,9 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "bigram",
             "cnt12",
-            (
-                F.length(
-                    F.bin(F.expr("(cnt12 * n) div (cnt1 * cnt2)"))
-                )
-                - 1
-            )
-            .cast("long")
-            .alias("pmi_bits"),
+            ilog2(F.expr("(cnt12 * n) div (cnt1 * cnt2)")).alias("pmi_bits"),
         )
     )
-    return joined
 
 
 # --------------------------------------------------------------------------
@@ -2083,13 +2013,12 @@ _GATE_UNI_C, _GATE_UNI_D = 403, 100  # sum_bits * 100 >= 403 * n_tokens
 _GATE_BI_C, _GATE_BI_D = 43, 10     # bg_sum_bits * 10 >= 43 * n_bigrams
 
 
-def _quality_gate_oracle() -> str:
-    from ..plans import registry as _reg
-
-    return f"""
-    WITH tstats AS ({_reg._REGISTRY["text_token_stats"].oracle}),
-    surp AS ({_reg._REGISTRY["q_doc_surprisal"].oracle}),
-    bglm AS ({_reg._REGISTRY["q_doc_bigram_lm"].oracle}),
+@register(
+    "q_quality_gate",
+    oracle=f"""
+    WITH tstats AS ({_REGISTRY["text_token_stats"].oracle}),
+    surp AS ({_REGISTRY["q_doc_surprisal"].oracle}),
+    bglm AS ({_REGISTRY["q_doc_bigram_lm"].oracle}),
     gated AS (
         SELECT t.doc_id, t.n_tokens,
                CASE WHEN t.n_tokens < {_GATE_MIN_TOKENS} THEN 1 ELSE 0 END
@@ -2113,12 +2042,7 @@ def _quality_gate_oracle() -> str:
            CAST(f_short + 2 * f_ttr + 4 * f_lowinfo + 8 * f_templated
                 AS BIGINT) AS reason_mask
     FROM gated
-    """
-
-
-@register(
-    "q_quality_gate",
-    oracle=_quality_gate_oracle(),
+    """,
 )
 def q_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed keep/drop RELEASE GATE — the verdict table a corpus
@@ -2215,50 +2139,19 @@ _REP_DUP3_NUM, _REP_DUP3_DEN = 3, 10
     "q_doc_repetition",
     oracle=f"""
     WITH toks AS (SELECT doc_id, {sql_tokens()} AS ts FROM documents),
-    t1 AS (
-        SELECT doc_id, unnest(ts) AS term FROM toks
-    ),
-    c1 AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t1 GROUP BY 1, 2
-    ),
-    d1 AS (
-        SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_tokens,
-               CAST(MAX(cnt) AS BIGINT) AS top_token_cnt
-        FROM c1 GROUP BY 1
-    ),
-    t2 AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(ts)),
-                                     i -> ts[i] || ' ' || ts[i+1])) AS bigram
-        FROM toks
-    ),
-    c2 AS (
-        SELECT doc_id, bigram, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t2 GROUP BY 1, 2
-    ),
-    d2 AS (
-        SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
-               CAST(MAX(cnt) AS BIGINT) AS top_bigram_cnt
-        FROM c2 GROUP BY 1
-    ),
-    t3 AS (
-        SELECT doc_id,
-               unnest(list_transform(range(1, len(ts) - 1),
-                                     i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]))
-                 AS trigram
-        FROM toks
-    ),
-    c3 AS (
-        SELECT doc_id, trigram, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM t3 GROUP BY 1, 2
-    ),
-    d3 AS (
-        SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_trigrams,
-               CAST(SUM(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) AS BIGINT)
-                 AS dup_trigram_cnt
-        FROM c3 GROUP BY 1
-    ),
+    t1 AS (SELECT doc_id, unnest(ts) AS term FROM toks),
+    d1 AS ({_sql_doc_gram_counts("t1", "term", '''
+           CAST(SUM(cnt) AS BIGINT) AS n_tokens,
+           CAST(MAX(cnt) AS BIGINT) AS top_token_cnt''')}),
+    t2 AS (SELECT doc_id, unnest({sql_ngrams("ts", 2)}) AS bigram FROM toks),
+    d2 AS ({_sql_doc_gram_counts("t2", "bigram", '''
+           CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
+           CAST(MAX(cnt) AS BIGINT) AS top_bigram_cnt''')}),
+    t3 AS (SELECT doc_id, unnest({sql_ngrams("ts", 3)}) AS trigram FROM toks),
+    d3 AS ({_sql_doc_gram_counts("t3", "trigram", '''
+           CAST(SUM(cnt) AS BIGINT) AS n_trigrams,
+           CAST(SUM(CASE WHEN cnt >= 2 THEN cnt ELSE 0 END) AS BIGINT)
+             AS dup_trigram_cnt''')}),
     j AS (
         SELECT d1.doc_id, d1.n_tokens, d1.top_token_cnt,
                COALESCE(d2.n_bigrams, 0) AS n_bigrams,
@@ -2296,7 +2189,8 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     18%, 4 = dup trigrams > 30%, the q_quality_gate reason-mask idiom);
     reported shares are single divisions of those integers (Class B).
 
-    Scale shape: three per-(doc, gram) map-side-combinable groupBys — the
+    Scale shape: three per-(doc, gram) map-side-combinable groupBys
+    (``_doc_gram_counts`` over ``ngrams``, shared with text_repetition) — the
     key domain is each DOCUMENT's OWN grams, so partial aggregation does
     nearly all the work scan-side and the shuffled relation is bounded by
     distinct-grams-per-doc, not corpus volume; the rollups then reduce on
@@ -2308,53 +2202,27 @@ def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     t1 = spread(
         docs.select("doc_id", F.explode("ts").alias("term")), spark, "doc_id"
     )
-    d1 = (
-        t1.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_tokens"),
-            F.max("cnt").cast("long").alias("top_token_cnt"),
-        )
+    d1 = _doc_gram_counts(
+        t1,
+        "term",
+        F.sum("cnt").cast("long").alias("n_tokens"),
+        F.max("cnt").cast("long").alias("top_token_cnt"),
     )
-    bg = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(ts, 1, greatest(size(ts) - 1, 0)),"
-                " (x, i) -> concat(x, ' ', element_at(ts, i + 2)))"
-            )
-        ).alias("bigram"),
+    bg = docs.select("doc_id", F.explode(ngrams("ts", 2)).alias("bigram"))
+    d2 = _doc_gram_counts(
+        bg,
+        "bigram",
+        F.sum("cnt").cast("long").alias("n_bigrams"),
+        F.max("cnt").cast("long").alias("top_bigram_cnt"),
     )
-    d2 = (
-        bg.groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_bigrams"),
-            F.max("cnt").cast("long").alias("top_bigram_cnt"),
-        )
-    )
-    tg = docs.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(slice(ts, 1, greatest(size(ts) - 2, 0)),"
-                " (x, i) -> concat(x, ' ', element_at(ts, i + 2),"
-                "                  ' ', element_at(ts, i + 3)))"
-            )
-        ).alias("trigram"),
-    )
-    d3 = (
-        tg.groupBy("doc_id", "trigram")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").cast("long").alias("n_trigrams"),
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(0))
-            .cast("long")
-            .alias("dup_trigram_cnt"),
-        )
+    tg = docs.select("doc_id", F.explode(ngrams("ts", 3)).alias("trigram"))
+    d3 = _doc_gram_counts(
+        tg,
+        "trigram",
+        F.sum("cnt").cast("long").alias("n_trigrams"),
+        F.sum(F.when(F.col("cnt") >= 2, F.col("cnt")).otherwise(0))
+        .cast("long")
+        .alias("dup_trigram_cnt"),
     )
     j = (
         d1.join(d2, "doc_id", "left")
@@ -2489,7 +2357,7 @@ def q_doc_prefix_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM cnts
     ),
     dec AS (
-        SELECT CAST(length(bin(cnt)) - 1 AS BIGINT) AS freq_decade,
+        SELECT {sql_ilog2("cnt")} AS freq_decade,
                CAST(COUNT(*) AS BIGINT) AS n_terms,
                CAST(SUM(cnt) AS BIGINT) AS n_instances
         FROM cnts GROUP BY 1
@@ -2533,12 +2401,7 @@ def q_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cnt").cast("long").alias("total_tokens"),
     )
     dec = (
-        cnts.select(
-            (F.length(F.bin(F.col("cnt"))) - 1)
-            .cast("long")
-            .alias("freq_decade"),
-            "cnt",
-        )
+        cnts.select(ilog2(F.col("cnt")).alias("freq_decade"), "cnt")
         .groupBy("freq_decade")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_terms"),
@@ -2627,28 +2490,11 @@ _PPL_QKEY_SCALE = 1_000_000  # integer mean-surprisal key: (1e6*sum_bits) div n
 @register(
     "q_perplexity_buckets",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest({sql_tokens()}) AS term FROM documents
-    ),
-    cnts AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt FROM toks GROUP BY term
-    ),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS total FROM toks),
-    tsurp AS (
-        SELECT term, CAST(length(bin(total // cnt)) - 1 AS BIGINT) AS bits
-        FROM cnts CROSS JOIN tot
-    ),
-    per_doc AS (
-        SELECT t.doc_id,
-               CAST(COUNT(*) AS BIGINT) AS n_tokens,
-               CAST(SUM(s.bits) AS BIGINT) AS sum_bits
-        FROM toks t JOIN tsurp s ON s.term = t.term
-        GROUP BY t.doc_id
-    ),
+    WITH surp AS ({_REGISTRY["q_doc_surprisal"].oracle}),
     keyed AS (
         SELECT d.lang, p.doc_id, p.n_tokens, p.sum_bits,
                ({_PPL_QKEY_SCALE} * p.sum_bits) // p.n_tokens AS surp_q
-        FROM documents d JOIN per_doc p ON p.doc_id = d.doc_id
+        FROM documents d JOIN surp p ON p.doc_id = d.doc_id
     ),
     bucketed AS (
         SELECT *, NTILE({_PPL_BUCKETS}) OVER (
@@ -2678,8 +2524,10 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     curator signs off on: doc/token/bit mass plus the exact integer
     surprisal cutoffs each bucket spans.
 
-    The per-doc score reuses q_doc_surprisal's exact-BIGINT unigram model
-    (integer log2 via length(bin(total // cnt)) - 1); the ranking key is
+    The per-doc score composes q_doc_surprisal: the Spark side calls the
+    registered builder and the oracle splices its oracle SQL in as a CTE
+    (the q_quality_gate idiom), so the exact-BIGINT unigram model (integer
+    log2 of total // cnt) exists once per engine.  The ranking key is
     the cleared-denominator integer ({_PPL_QKEY_SCALE} * sum_bits) div
     n_tokens — mean surprisal at 1e-6 resolution with NO double division
     anywhere near the order (the FLOAT_QUALS Class-A pattern), ties broken
@@ -2687,7 +2535,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the unigram model is the Zipf-bounded vocabulary relation
     (metadata-sized), the per-doc rollup one term-keyed annotate join —
-    both inherited from q_doc_surprisal.  The NTILE is ONE ranking per
+    both q_doc_surprisal's own.  The NTILE is ONE ranking per
     language over an integer key: at 100 TB that is the distributed
     two-phase rank q_customer_rfm already carries (partition-wise
     pre-rank + boundary merge on the bounded lang key); in production the
@@ -2695,31 +2543,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateless comparisons — this spec IS the exact-census anchor such a
     sampled path is validated against.  Output is |langs| x {_PPL_BUCKETS}
     rows at any corpus size."""
-    from ._util import persist_tracked
-
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(tokens()).alias("term")
-    )
-    docs = spread(docs, spark, "doc_id")
-    # r11-opt: the vocabulary relation feeds the total AND the per-term
-    # surprisal, and the total is just SUM(cnt) over it — the previous
-    # corpus-wide count re-ran the token explode a third time.
-    cnts = persist_tracked(
-        docs.groupBy("term").agg(
-            F.count(F.lit(1)).cast("long").alias("cnt")
-        )
-    )
-    tot = cnts.agg(F.sum("cnt").cast("long").alias("total"))
-    bits = (F.length(F.bin(F.expr("total div cnt"))) - 1).cast("long")
-    tsurp = cnts.crossJoin(F.broadcast(tot)).select("term", bits.alias("bits"))
-    per_doc = (
-        docs.join(tsurp, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.sum("bits").cast("long").alias("sum_bits"),
-        )
-    )
+    per_doc = q_doc_surprisal(spark, sf_dir).select("doc_id", "n_tokens", "sum_bits")
     keyed = (
         t(spark, sf_dir, "documents")
         .select("doc_id", "lang")
@@ -2974,8 +2798,6 @@ def qc_token_weights(docs: DataFrame) -> DataFrame:
     so the streaming twin can run it ahead of applyInPandasWithState and
     fold per-doc scores inside the stateful kernel instead (a streaming
     groupBy before arbitrary state is unsupported by Spark)."""
-    from ..functions.text import mix48
-
     spark = docs.sparkSession
     weights = F.broadcast(
         spark.range(_QC_FEATURES)
@@ -3018,8 +2840,6 @@ def qc_scored(docs: DataFrame) -> DataFrame:
 
 
 def _qc_oracle() -> str:
-    from ..functions.text import sql_mix48
-
     w = f"(({sql_mix48(f'(f + {_QC_SALT})')}) % 2001) - 1000"
     tok_f = f"({sql_hash48('token')} % {_QC_FEATURES})"
     return f"""

@@ -26,6 +26,7 @@ PERSISTING_BUILDERS = (
     "q_incremental_dedup",
     "dedup_clusters",
     "q_t_closeness",  # r11: persists the (class x band) count relation
+    "q_collocations",  # persists the bigram-count relation once
 )
 
 
@@ -46,6 +47,10 @@ def test_builders_register_their_persists(spark):
                 f"{name} persisted nothing through persist_tracked — "
                 "either the persist was removed (update this list) or it "
                 "bypassed the seam"
+            )
+            ids = [id(x) for x in _LIVE_PERSISTED]
+            assert len(set(ids)) == len(ids), (
+                f"{name} registered the same relation more than once"
             )
             df.count()  # consume INSIDE the scope: the cache backs this plan
         assert len(_LIVE_PERSISTED) == 0
